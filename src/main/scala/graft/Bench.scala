@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.core.GraftSession
 
 /** Benchmark main: one JSON line with per-query and total seconds.
   *
@@ -12,13 +13,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warmDir = "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     def run(dir: String, name: String): Unit =

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Dump formatted physical plans for the headline queries into
   * PLANS.md — the ".explain and iterate" evidence trail. Run:
@@ -214,13 +214,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb ++= "# PLANS — headline physical plans (generated by `graft.Explain`)\n\n"

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.dedup.Dedup
+import graft.core.GraftSession
 
 /** Dev-only stage profiler for the dedup/LSH family: times each stage
   * of the q42/q91 pipeline in isolation so regressions are
@@ -12,13 +12,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     def time[T](name: String)(f: => T): T = {

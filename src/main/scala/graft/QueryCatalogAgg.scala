@@ -220,15 +220,15 @@ object QueryCatalogAgg {
       |ORDER BY total_spend DESC, o_custkey LIMIT 10""".stripMargin
 
   // ---------------------------------------------------------------- T1 per-key via rewrite rule
-  /** The SAME query as q56 written as plain window SQL — with
-    * plans.RewriteWindowTopK installed, the optimizer rewrites
+  /** The SAME query as q56 written as plain window SQL — on a session
+    * built through GraftSession (plans.RewriteWindowTopK registered by
+    * GraftExtensions), the optimizer rewrites
     * Project(Filter(rn <= k, Window(row_number))) into the custom
-    * TopKPerKeyNode automatically. Verified against the identical
-    * window oracle: the rewrite's correctness is hash-gated, not just
-    * spec-asserted. (install is an intentional additive session
-    * registration, idempotent per session like Tables.events' conf.) */
+    * TopKPerKeyNode automatically; on a session without the
+    * extensions it plans as the plain window. Either way it is
+    * verified against the identical window oracle: the rewrite's
+    * correctness is hash-gated, not just spec-asserted. */
   val q85TopkRewrite: Q = (s, d) => {
-    graft.plans.TopKPerKey.install(s)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)

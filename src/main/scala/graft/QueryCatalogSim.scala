@@ -1168,7 +1168,6 @@ object QueryCatalogSim {
     * cap is deliberately off and the min-tf weighting carries the
     * discrimination. */
   private def lexicalTopK(s: SparkSession, d: String, nq: Int, k: Int): DataFrame = {
-    graft.plans.TopKPerKey.install(s)
     val tf = Tables.documents(s, d)
       .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("t"))
       .groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))

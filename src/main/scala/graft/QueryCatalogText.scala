@@ -1762,7 +1762,6 @@ object QueryCatalogText {
     * BIGINT cross-products approach 2^63 — swap the contrib column to
     * DECIMAL(38,0) there; everything else is unchanged. */
   val q166CorpusDrift: Q = (s, d) => {
-    graft.plans.TopKPerKey.install(s)
     val toks = Tables.documents(s, d).select(col("lang"),
       (col("doc_id") % 2 === 0).as("in_a"),
       explode(split(col("text"), "\\s+")).as("t"))

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.core.GraftSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Queries run on
   * a small thread pool — Spark's scheduler interleaves the jobs, cutting
@@ -11,13 +11,7 @@ object Verify {
     // optional trailing args: restrict to the named queries (dev loop)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)

@@ -2,13 +2,16 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** The library's session front door: one place for the settings every
-  * graft deployment needs, so Verify/Bench/tests/user code cannot
-  * drift apart.
+/** The only session builder in the library: Bench, Verify, Explain,
+  * Profile, the devtools and every spec build their session here, so
+  * the settings every graft deployment needs cannot drift apart.
+  * Callers chain `.config(...)` only for a setting that really differs
+  * (a warehouse dir, a pinned broadcast threshold, AQE off).
   *
   *  - `spark.sql.extensions=graft.plans.GraftExtensions` registers
-  *    the custom strategy + the window-top-k rewrite at session build
-  *    (the only route that covers SQL-only users too);
+  *    the TopK strategy and the window-top-k rewrite at session build,
+  *    so every query plans the same way from the session's first query
+  *    onward (and SQL-only users get the rewrite too);
   *  - nanos-parquet read flag for the events table;
   *  - UTC session timezone (the cross-engine determinism contract);
   *  - shuffle partitions default from the core count (cluster

@@ -35,9 +35,12 @@ object Tables {
     * The flag is an INTENTIONAL session-global toggle: the driver's
     * harness calls `SparkEntry.queries` on a session it builds itself,
     * so the flag cannot be assumed preset. Setting it here is
-    * idempotent (every caller wants `true`, and our own mains/specs
-    * also set it at session build), but it does flip read behavior of
-    * nanos-parquet for anything else sharing the session. */
+    * idempotent (every caller wants `true`, and every main and spec
+    * builds through GraftSession, which sets it at build), but it does
+    * flip read behavior of nanos-parquet for anything else sharing the
+    * session. Besides this flag, main code's only on-use session write
+    * is TopKPerKey.topK's strategy-only registration; the window
+    * rewrite is registered at session build only. */
   def events(s: SparkSession, d: String): DataFrame = {
     if (s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").forall(_ != "true"))
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -1,7 +1,7 @@
 package graft.devtools
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.ops.dedup.{BandStore, Dedup}
 
 /** Dev harness: streaming-store compaction at DECADE-STORE scale —
@@ -23,11 +23,7 @@ object CompactScale {
     val nBatches = if (args.length > 1) args(1).toInt else 48
     val reps = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.sql.warehouse.dir", "/tmp/graft_compact_scale_wh")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -1,8 +1,7 @@
 package graft.devtools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.ops.dedup.{ConnectedComponents, Dedup}
 
 /** Cross-algorithm validation of q101's duplicate clusters at scales
@@ -20,14 +19,7 @@ import graft.ops.dedup.{ConnectedComponents, Dedup}
 object CrossCheckCC {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/tmp/sf1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     // q101's exact edge pipeline (QueryCatalogCuration.q101DupClusters)

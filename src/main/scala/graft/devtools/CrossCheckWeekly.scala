@@ -1,8 +1,7 @@
 package graft.devtools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.pipeline.WeeklyReportJob
 
 /** The farm-report DAG's core chain (q201's store-backed
@@ -27,14 +26,7 @@ import graft.pipeline.WeeklyReportJob
 object CrossCheckWeekly {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/tmp/sf1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     var failed = false
     def check(name: String)(ok: => Boolean): Unit = {

@@ -1,8 +1,7 @@
 package graft.devtools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.ops.dedup.Dedup
 
 /** Dev harness: diagnose WHERE q129's candidate pairs come from on a
@@ -32,12 +31,7 @@ object DecadeDiag {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/repo/tmp/sf1", "/root/repo/tmp/sf10")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     val shift = 1000000000L

@@ -1,7 +1,7 @@
 package graft.devtools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Dev probe: write `.explain("formatted")` for named catalog queries
   * into per-query files — the before/after plan evidence trail of an
@@ -20,13 +20,7 @@ object ExplainDump {
     names.foreach(n => require(graft.SparkEntry.queries.contains(n),
       s"unknown catalog query: $n"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>

@@ -1,7 +1,7 @@
 package graft.devtools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** Dev harness: synthesize a CONTIGUOUS-id documents table for the
   * multimodal clip-scale sweep. NOT part of the library surface — a
@@ -26,10 +26,7 @@ object GenClips {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "/root/repo/tmp/clips20k"
     val n = if (args.length > 2) args(2).toInt else 20000
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]", 32)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,6 +2,7 @@ package graft.devtools
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** Dev harness: generate the DOMAIN fact tables (sow master, work
   * log, farrowing, weaning, piglet transfers, slaughter, farm config)
@@ -29,10 +30,7 @@ object GenFarms {
   def main(args: Array[String]): Unit = {
     val nFarms = if (args.length > 0) args(0).toInt else 50000
     val out = if (args.length > 1) args(1) else "/root/repo/tmp/farms50k"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 32)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

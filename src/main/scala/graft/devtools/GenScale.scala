@@ -2,6 +2,7 @@ package graft.devtools
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** Dev harness: scale the driver-generated testdata one more decade
   * for the SCALE.md curve (sf0.1 x 10 -> "sf1"). NOT part of the
@@ -41,10 +42,7 @@ object GenScale {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/root/repo/tmp/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]", 32)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

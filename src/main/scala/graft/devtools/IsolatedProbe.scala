@@ -1,6 +1,6 @@
 package graft.devtools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Dev probe: isolated min-of-N clocks for named catalog queries —
   * the adjudication device the verdicts ask for when an in-suite
@@ -19,13 +19,7 @@ object IsolatedProbe {
     names.foreach(n => require(graft.SparkEntry.queries.contains(n),
       s"unknown catalog query: $n"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       // warm pass (JIT/codegen/scan caches) outside timing; a query

@@ -1,9 +1,10 @@
 package graft.devtools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.dedup.Dedup
+import graft.core.GraftSession
 
 /** Dev probe: plan evidence for the dedup-family INNER pipelines.
   *
@@ -34,13 +35,7 @@ object PipelinePlans {
     require(args.length == 2, "usage: PipelinePlans <sfDir> <outDir>")
     val (sfDir, outDir) = (args(0), args(1))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
 

@@ -1,20 +1,14 @@
 package graft.devtools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.ops.dedup.Dedup
 
 /** Dev probe: where does q129's time go as the corpus scales?
   * Prints candidate-pair mass and verified-pair mass per SF dir. */
 object ProbeQ129 {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { d =>
       val docs = Tables.documents(spark, d)

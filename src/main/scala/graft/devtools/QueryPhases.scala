@@ -2,7 +2,7 @@ package graft.devtools
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Dev probe: where does a catalog query's wall-clock actually go?
   *
@@ -31,13 +31,7 @@ object QueryPhases {
     names.foreach(n => require(graft.SparkEntry.queries.contains(n),
       s"unknown catalog query: $n"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     val jobs = new AtomicInteger

@@ -3,6 +3,7 @@ package graft.devtools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.similarity.VectorOps
+import graft.core.GraftSession
 
 /** ANN serving QUALITY certification: the recall-vs-knob sweep the
   * round-14 verdict asked for. The serving stack's wire cost is
@@ -182,11 +183,7 @@ object RecallSweep {
       if (autoMode) Seq(graft.ops.similarity.VectorOps.Auto)
       else Seq(200, 500, 1000))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       // the ScaleDecade regime pin: measured numbers must not depend
       // on optimizer size estimates flipping between fixture scales

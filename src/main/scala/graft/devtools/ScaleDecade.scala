@@ -1,9 +1,9 @@
 package graft.devtools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkEntry
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.ops.dedup.{BandStore, Dedup}
 import graft.ops.similarity.{Bitext, VectorOps}
 
@@ -118,11 +118,7 @@ object ScaleDecade {
         "sf1" -> "/root/repo/tmp/sf1",
         "sf10" -> "/root/repo/tmp/sf10")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.sql.warehouse.dir", "/tmp/graft_decade_warehouse")
       .config("spark.ui.enabled", "false")
       // AUTO-broadcast off (explicit engine broadcast() hints still

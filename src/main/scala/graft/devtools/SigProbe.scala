@@ -1,8 +1,7 @@
 package graft.devtools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.ops.dedup.Dedup
 
 /** Dev-only A/B: LSH band+candidate generation from the aggregate
@@ -14,13 +13,7 @@ object SigProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
 

@@ -1,7 +1,7 @@
 package graft.devtools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Dev probe: per-STAGE shuffle-write attribution for catalog queries.
   *
@@ -24,13 +24,7 @@ object StageShuffleProbe {
     names.foreach(n => require(graft.SparkEntry.queries.contains(n),
       s"unknown catalog query: $n"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     def f2(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))

@@ -1,8 +1,7 @@
 package graft.devtools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.ops.dedup.{BandStore, Dedup}
 
 /** The bucketed-store A/B at sf1: with the STANDING corpus's band
@@ -42,12 +41,8 @@ object StoreProbeAB {
       .getOrElse(3)
     val amplify = args.lift(2).flatMap(s => scala.util.Try(s.toLong).toOption)
       .getOrElse(0L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.sql.warehouse.dir", "/tmp/graft_ab_warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -2,7 +2,7 @@ package graft.devtools
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.streaming.StreamingJobs
 
 /** Dev harness: the incremental-dedup STREAM end-to-end at the decade
@@ -49,11 +49,7 @@ object StreamDecade {
     val compactEvery = if (args.length > 2) args(2).toInt else 12
     val clusterMode = args.length > 3 && args(3) == "cluster"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.sql.warehouse.dir", "/tmp/graft_stream_decade_wh")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -1,9 +1,10 @@
 package graft.devtools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.WeeklyReportJob
 import graft.pipeline.WeeklyReportJob.DomainSources
+import graft.core.GraftSession
 
 /** Dev harness: the weekly product's SHUFFLE-LINEARITY certification
   * across farm-count decades — the ScaleDecade discipline applied to
@@ -66,10 +67,7 @@ object WeeklyDecade {
         "farms50k" -> "/root/repo/tmp/farms50k",
         "farms500k" -> "/root/repo/tmp/farms500k")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(s"local[$cpus]", 64)
       .config("spark.ui.enabled", "false")
       // pinned shuffle regime (the ScaleDecade rationale): exponents
       // must measure the plan, not mid-curve broadcast flips

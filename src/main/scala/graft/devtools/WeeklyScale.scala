@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.{QueryCatalogDomain, QueryCatalogDomain2, QueryCatalogDomain3}
 import graft.pipeline.WeeklyReportJob
 import graft.pipeline.WeeklyReportJob.DomainSources
+import graft.core.GraftSession
 
 /** The FULL weekly product at fleet scale: run all ten SUB sections,
   * the SUB union, and the 10-section summary join over a GenFarms
@@ -84,10 +85,7 @@ object WeeklyScale {
     val factsDir = if (args.length > 0) args(0) else "/root/repo/tmp/farms50k"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_weekly_scale"
     val only = args.drop(2).toSet
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 64)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

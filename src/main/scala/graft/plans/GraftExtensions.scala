@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSessionExtensions
 
 /** Library extension entry point:
   * `spark.sql.extensions=graft.plans.GraftExtensions` registers the
-  * custom planner strategies at session build (the deployment-grade
-  * route; `TopKPerKey.install` is the programmatic equivalent for an
-  * already-built session). */
+  * TopK planner strategy and the window-top-k rewrite at session build
+  * (graft.core.GraftSession sets it), so the optimizer is fixed before
+  * the session's first query and never changes afterwards. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => TopKPerKey.TopKStrategy)

@@ -17,8 +17,10 @@ import org.apache.spark.sql.types.IntegerType
   * materialize-and-sort becomes bounded heaps with at most K rows per
   * (key, partition) crossing the shuffle (see TopKPerKey). Users keep
   * writing window SQL; the plan quietly stops sorting. Registered
-  * next to the strategy in GraftExtensions / TopKPerKey.install —
-  * a strategy alone changes what CAN plan, a rule changes what DOES.
+  * next to the strategy in GraftExtensions, at session build only —
+  * a strategy alone changes what CAN plan, a rule changes what DOES,
+  * so adding the rule to a live session would make a query's plan
+  * depend on what ran before it.
   *
   * Guards: single row_number window expression whose spec matches the
   * Window's partition/order; a bare `rn <= lit` / `rn < lit` /

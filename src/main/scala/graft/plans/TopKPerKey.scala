@@ -119,17 +119,15 @@ object TopKPerKey {
       copy(child = newChild)
   }
 
-  /** Register the strategy + the window-rewrite optimizer rule on a
-    * session (idempotent) — the experimental-methods route;
-    * GraftExtensions is the spark.sql.extensions route. */
-  def install(spark: SparkSession): Unit = {
+  /** Make `TopKPerKeyNode` plannable on a session not built through
+    * GraftSession (a SparkEntry caller may run the queries on a
+    * session it builds itself). Idempotent, and the strategy
+    * matches only TopKPerKeyNode, so no other query's plan changes;
+    * the window rewrite rule is never added here. */
+  private def ensureStrategy(spark: SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(TopKStrategy))
       spark.experimental.extraStrategies =
         TopKStrategy +: spark.experimental.extraStrategies
-    if (!spark.experimental.extraOptimizations.contains(RewriteWindowTopK))
-      spark.experimental.extraOptimizations =
-        RewriteWindowTopK +: spark.experimental.extraOptimizations
-  }
 
   /** DataFrame API: top `k` rows per `keys` group in `order` (give a
     * total order — break ties on a unique column — for deterministic
@@ -137,7 +135,7 @@ object TopKPerKey {
   def topK(df: DataFrame, keys: Seq[Column], order: Seq[Column], k: Int): DataFrame = {
     import org.apache.spark.sql.GraftExpressionBridge._
     val spark = df.sparkSession
-    install(spark)
+    ensureStrategy(spark)
     val sortOrder = order.map(toCatalyst(_) match {
       case s: SortOrder => s
       case e => SortOrder(e, Ascending)

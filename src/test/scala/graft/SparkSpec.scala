@@ -2,15 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.GraftSession
 
 /** Shared local session for specs (one per suite, guide-recommended). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val s = GraftSession.builder("local[4]", 4)
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -61,7 +61,6 @@ class TopKPerKeySpec extends SparkSpec {
   }
 
   test("optimizer rule rewrites window/row_number/filter into the custom plan") {
-    graft.plans.TopKPerKey.install(spark)
     val big = (1 to 2000).map(i => (s"k${i % 11}", i.toLong, (i * 2654435761L % 997).toDouble))
       .toDF("k", "id", "v")
     val w = org.apache.spark.sql.expressions.Window
@@ -82,7 +81,6 @@ class TopKPerKeySpec extends SparkSpec {
   }
 
   test("rule does NOT fire when the rank column is still referenced") {
-    graft.plans.TopKPerKey.install(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("k").orderBy(col("v").desc, col("id").asc)
     val q = df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
@@ -93,7 +91,6 @@ class TopKPerKeySpec extends SparkSpec {
   }
 
   test("global top-k (no PARTITION BY) stays on Spark's native path") {
-    graft.plans.TopKPerKey.install(spark)
     // row_number() OVER (ORDER BY ...) with empty partition keys: the
     // rewrite must NOT fire (TopKPerKeyFinal would demand
     // ClusteredDistribution(Nil) and crash planning) — valid SQL that
@@ -108,11 +105,62 @@ class TopKPerKeySpec extends SparkSpec {
     assert(got == Seq(("a", 2L), ("a", 3L), ("a", 4L))) // v=30,30,20 top-3
   }
 
-  test("extensions class registers the strategy") {
-    // the spark.sql.extensions route: constructing and applying must
-    // succeed (strategy list itself is private[sql]; the functional
-    // path is exercised through install() in the tests above)
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.plans.GraftExtensions()(ext)
+  // a rewritable frame: row_number() <= k with the rank projected away
+  private def windowTop2(in: org.apache.spark.sql.DataFrame) = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("k").orderBy(col("v").desc, col("id").asc)
+    in.withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
+      .select("k", "id", "v")
+  }
+
+  // exchange ids are global counters, not plan shape
+  private def planOf(q: org.apache.spark.sql.DataFrame): String =
+    q.queryExecution.executedPlan.toString.replaceAll("plan_id=\\d+", "plan_id=_")
+
+  // a fresh Dataset over the same analyzed plan: optimized and planned
+  // again (a Dataset caches its QueryExecution), same expression ids
+  private def replan(q: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.GraftExpressionBridge._
+    ofRows(q.sparkSession, logicalPlan(q))
+  }
+
+  test("a GraftSession session rewrites the window frame with no install call") {
+    val fresh = spark.newSession() // no topK has run on it
+    val plan = planOf(windowTop2(fresh.createDataFrame(df.rdd, df.schema)))
+    assert(plan.contains("TopKPerKeyFinal") && plan.contains("TopKPerKeyPartial"), plan)
+    assert(!plan.contains("Window"), plan)
+  }
+
+  test("executedPlan is the same planned first and planned after a topK call") {
+    val fresh = spark.newSession() // same extensions, no queries run yet
+    val q = windowTop2(fresh.createDataFrame(df.rdd, df.schema))
+    val first = planOf(q)
+    TopKPerKey.topK(fresh.createDataFrame(df.rdd, df.schema),
+      Seq(col("k")), Seq(col("v").desc, col("id").asc), 1).collect()
+    val after = planOf(replan(q))
+    assert(first == after)
+    assert(first.contains("TopKPerKeyFinal"), first)
+  }
+
+  test("session without extensions: topK plans and returns the same rows") {
+    val plain = org.apache.spark.sql.PlainSession.on(spark)
+    val order = Seq(col("v").desc, col("id").asc)
+    def rows(in: org.apache.spark.sql.DataFrame) =
+      TopKPerKey.topK(in, Seq(col("k")), order, 2).orderBy("k", "id")
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val onPlain = TopKPerKey.topK(plain.createDataFrame(df.rdd, df.schema),
+      Seq(col("k")), order, 2)
+    assert(planOf(onPlain).contains("TopKPerKeyFinal"), planOf(onPlain))
+    assert(rows(plain.createDataFrame(df.rdd, df.schema)) == rows(df))
+  }
+
+  test("session without extensions: a window frame stays a Window before and after topK") {
+    val plain = org.apache.spark.sql.PlainSession.on(spark)
+    val q = windowTop2(plain.createDataFrame(df.rdd, df.schema))
+    val before = planOf(q)
+    assert(before.contains("Window") && !before.contains("TopKPerKey"), before)
+    TopKPerKey.topK(plain.createDataFrame(df.rdd, df.schema),
+      Seq(col("k")), Seq(col("v").desc, col("id").asc), 1).collect()
+    assert(planOf(replan(q)) == before)
   }
 }
