@@ -186,10 +186,57 @@ object VectorOps {
     * class as the r16 ADC-fold unroll, on the index-build side).
     * Identical output: same element order, and a null embedding still
     * yields m rows of null sv (slice/cast propagate the null exactly
-    * like the inner transform did). */
-  private def subvectors(embCol: Column, m: Int, dsub: Int): Column =
+    * like the inner transform did). A literal `dsub` folds to the same
+    * constant slice bounds; the probe side passes each row's own
+    * width ([[probeSubvectors]]). */
+  private def subvectors(embCol: Column, m: Int, dsub: Column): Column =
     array((0 until m).map(mi =>
-      slice(embCol, mi * dsub + 1, dsub).cast("array<double>")): _*)
+      slice(embCol, dsub * mi + 1, dsub).cast("array<double>")): _*)
+
+  /** The probe side of every PQ lookup: (q_id, mi, qv) rows, each
+    * probe cut into m subvectors of ITS OWN length div m. A per-row
+    * width needs no driver-side dims job before the plan exists, and a
+    * probe as long as the indexed vectors splits exactly where the
+    * codebooks were cut. */
+  private def probeSubvectors(probes: DataFrame, idCol: String, m: Int): DataFrame =
+    probes.select(col(idCol).as("q_id"),
+      posexplode(subvectors(col("embedding"), m,
+        (size(col("embedding")) / m).cast("int"))).as(Seq("mi", "qv")))
+
+  /** One ADC lookup row per probe: map (mi·ksub + code) -> int64 inner
+    * product — a map, not a dense array, so a codebook cell that lost
+    * every member is an absent key (null-summed rank-last), never a
+    * silent positional shift. */
+  private def probeLuts(probes: DataFrame, codebooks: DataFrame, idCol: String,
+                        m: Int, ksub: Int): DataFrame =
+    probeSubvectors(probes, idCol, m).join(broadcast(codebooks), Seq("mi"))
+      .select(col("q_id"), (col("mi") * ksub + col("cell")).as("idx"),
+        round(dotD(col("qv"), col("cv")) * 1e6).cast("long").as("si"))
+      .groupBy("q_id")
+      .agg(map_from_entries(collect_list(struct(col("idx"), col("si")))).as("lut"))
+
+  /** The m-way ADC table sum of a packed `codes` row against `lut`,
+    * UNROLLED into a static sum of element_at terms, not an
+    * aggregate(transform(...)) fold: higher-order functions are
+    * CodegenFallback (interpreted per row), and this expression runs
+    * once per (probe, candidate) — the hottest scalar of the packed
+    * and IVF-PQ paths. The static sum stays inside WholeStageCodegen.
+    * A missing LUT key (a codebook cell that lost every member) nulls
+    * one term and a null term nulls the whole sum — rank-last. */
+  private def adcSum(m: Int, ksub: Int): Column =
+    (0 until m).map(mi =>
+      element_at(col("lut"), lit(mi * ksub) + element_at(col("codes"), lit(mi + 1))))
+      .reduce(_ + _)
+
+  /** The probe broadcast gate every serve path shares: may the probe
+    * batch be broadcast (at most `probeBroadcastMax` rows)? When the
+    * optimized probe plan already bounds its rows under the budget — a
+    * batch of driver-side rows, a LIMIT — that bound decides with no
+    * job; otherwise the frame is counted, one eager action. The
+    * verdict is the counted one either way (the bound caps the count). */
+  private def probeGate(probes: DataFrame, probeBroadcastMax: Long): Boolean =
+    probes.queryExecution.optimizedPlan.maxRows.exists(_ <= probeBroadcastMax) ||
+      probes.count() <= probeBroadcastMax
 
   /** The IVF index's centroid table — the BUILD half ivfAnn used to
     * re-derive inline on every call: per-cell integer-quantized
@@ -223,11 +270,11 @@ object VectorOps {
     * — per-call compute that is corpus-LINEAR and therefore wrong at
     * serving scale; every repeated-batch deployment stores the index.
     *
-    * SERVING SHAPE: when the probe set is bounded (a count proves it
-    * is under `probeBroadcastMax`), the probe×cell frame carries an
-    * explicit broadcast hint so the corpus-sized candidate relation
-    * is restricted MAP-SIDE — the corpus never crosses the wire for a
-    * small query batch. Without the hint the optimizer's
+    * SERVING SHAPE: when the probe set is bounded ([[probeGate]]
+    * proves it is under `probeBroadcastMax`), the probe×cell frame
+    * carries an explicit broadcast hint so the corpus-sized candidate
+    * relation is restricted MAP-SIDE — the corpus never crosses the
+    * wire for a small query batch. Without the hint the optimizer's
     * auto-broadcast saves the plan only while the corpus's estimated
     * size is under its threshold, i.e. exactly NOT at scale (measured:
     * the sf1→sf10 decade flipped the cell join to sort-merge and
@@ -263,11 +310,11 @@ object VectorOps {
       .select(col("q_id"), col("cell"))
     val c = candidates.select(col(cellCol).as("cell"), col("vec_id").as("c_id"),
       col("embedding").as("cv2"), norm(col("embedding")).as("cn"))
-    // probe side = probes x nprobe rows; broadcast under the counted
+    // probe side = probes x nprobe rows; broadcast under the probe
     // gate so the corpus side streams map-side (see scaladoc)
     val probeSide0 = p.join(probeCells, "q_id")
     val probeSide =
-      if (probes.count() <= probeBroadcastMax) broadcast(probeSide0)
+      if (probeGate(probes, probeBroadcastMax)) broadcast(probeSide0)
       else probeSide0
     val pairs = probeSide.join(c, "cell")
       .filter(col("q_id") =!= col("c_id"))
@@ -771,7 +818,7 @@ object VectorOps {
     require(dims % m == 0, s"dims $dims not divisible by m=$m")
     val dsub = dims / m
     val sub = df.select(col(idCol),
-      posexplode(subvectors(col("embedding"), m, dsub)).as(Seq("mi", "sv")))
+      posexplode(subvectors(col("embedding"), m, lit(dsub))).as(Seq("mi", "sv")))
     val seedRank = conv(substring(md5(col(idCol).cast("string")), 1, 15), 16, 10)
       .cast("long")
     val seeds = df.select(col(idCol), seedRank.as("__h"))
@@ -821,16 +868,10 @@ object VectorOps {
     * Table entries are quantized to int64 (round(ip * 1e6)) so the
     * m-way sum is exact integer arithmetic — order-independent under
     * any shuffle, bit-replayable by the oracle. Rank by (adc desc,
-    * candidate id). `knownDims` skips the per-call dims probe when the
-    * caller already ran it (the [[lshBucket]] convention — the serve
-    * entry points probe the frame ONCE via [[probeStats]]). */
+    * candidate id). */
   def pqAdcTopK(probes: DataFrame, codes: DataFrame, codebooks: DataFrame,
-                idCol: String, m: Int, k: Int, knownDims: Int = -1): DataFrame = {
-    val dims = if (knownDims >= 0) knownDims else embeddingDims(probes)
-    val dsub = dims / m
-    val qsub = probes.select(col(idCol).as("q_id"),
-      posexplode(subvectors(col("embedding"), m, dsub)).as(Seq("mi", "qv")))
-    val dtab = qsub.join(broadcast(codebooks), Seq("mi"))
+                idCol: String, m: Int, k: Int): DataFrame = {
+    val dtab = probeSubvectors(probes, idCol, m).join(broadcast(codebooks), Seq("mi"))
       .select(col("q_id"), col("mi"), col("cell").as("code"),
         round(dotD(col("qv"), col("cv")) * 1e6).cast("long").as("si"))
     val adc = codes.select(col(idCol).as("c_id"), col("mi"), col("code"))
@@ -851,66 +892,40 @@ object VectorOps {
     * "refine" step every production ANN service runs). ADC alone is
     * deliberately lossy — the refine join touches `shortlist` vectors
     * per probe instead of N, which is the entire economy at
-    * billion-vector scale.
-    *
-    * SERVING SHAPE (the lshAnnMulti note): the refine join's left
-    * side is bounded by probes × shortlist, so under the counted
-    * gate it broadcasts and semi-restricts the corpus embedding
-    * relation MAP-SIDE — without the hint, the "touch shortlist
-    * vectors instead of N" promise silently becomes "shuffle all N
-    * on the id" the moment the optimizer stops auto-broadcasting. */
+    * billion-vector scale. One lazy query: under the probe gate the
+    * refine streams the corpus map-side through the broadcast
+    * shortlist ([[refineShortlist]]) — without the hint, the "touch
+    * shortlist vectors instead of N" promise silently becomes
+    * "shuffle all N on the id" the moment the optimizer stops
+    * auto-broadcasting. */
   def pqRefinedTopK(probes: DataFrame, candidates: DataFrame, codes: DataFrame,
                     codebooks: DataFrame, idCol: String, m: Int, k: Int,
                     shortlist: Int = 50,
-                    probeBroadcastMax: Long = 10000L): DataFrame = {
-    val (smallProbes, dims) = probeStats(probes, probeBroadcastMax)
+                    probeBroadcastMax: Long = 10000L): DataFrame =
     refineShortlist(probes,
-      pqAdcTopK(probes, codes, codebooks, idCol, m, shortlist, knownDims = dims)
-        .select("q_id", "c_id"),
-      candidates, idCol, k, smallProbes)
-  }
+      pqAdcTopK(probes, codes, codebooks, idCol, m, shortlist).select("q_id", "c_id"),
+      candidates, idCol, k, probeGate(probes, probeBroadcastMax))
 
-  /** ONE eager driver job over a probe frame returning both verdicts
-    * every serve entry point needs — the counted broadcast gate AND
-    * the embedding dimensionality — so an entry point never fires a
-    * second aggregation over the same probes (the redundant
-    * probes.count() + embeddingDims() pair the round-15 verdict
-    * flagged). */
-  private def probeStats(probes: DataFrame,
-                         probeBroadcastMax: Long): (Boolean, Int) = {
-    val row = probes.agg(count(lit(1)), max(size(col("embedding")))).head()
-    val dims = row.get(1) match { case n: Int => n; case _ => 0 }
-    (row.getLong(0) <= probeBroadcastMax, dims)
-  }
-
-  /** The exact-cosine REFINE stage shared by [[pqRefinedTopK]] and
-    * [[pqServeTopK]]: re-rank the (q_id, c_id) `short0` pairs by true
-    * cosine and keep the top `k` per probe. Under the counted gate the
-    * shortlist is localized (bounded by probes × shortlist — it feeds
-    * BOTH the semi-restriction and the refine join, and as a lazy
-    * plan each reference would re-run the whole ADC scoring pass) and
-    * broadcast, semi-restricting the corpus embedding relation
-    * MAP-SIDE — only shortlist vectors are ever touched. The caller
-    * passes the counted gate verdict (`smallProbes`) — every entry
-    * point already counts the probe frame exactly once, so this stage
-    * never fires a second eager driver job over the same probes. */
-  private def refineShortlist(probes: DataFrame, short0: DataFrame,
+  /** The exact-cosine REFINE stage shared by [[pqRefinedTopK]],
+    * [[pqServeTopK]] and [[ivfPqTopK]]: re-rank the (q_id, c_id)
+    * `short` pairs by true cosine and keep the top `k` per probe.
+    * Under the probe gate (`smallProbes`) the corpus embedding
+    * relation STREAMS through two broadcast hash joins — the shortlist
+    * on c_id, then the probe vectors on q_id — so only shortlist
+    * vectors survive the scan, the corpus never crosses the wire, and
+    * the shortlist is referenced once: its ADC pass runs once, inside
+    * the same query, with no driver round trip. Over the budget the
+    * hints drop and the planner picks the joins. Candidate norms are
+    * taken after the joins, over shortlist pairs only. */
+  private def refineShortlist(probes: DataFrame, short: DataFrame,
                               candidates: DataFrame, idCol: String, k: Int,
                               smallProbes: Boolean): DataFrame = {
-    val short =
-      if (smallProbes) graft.ops.Materialize.localize(short0) else short0
-    val p0 = probes.select(col(idCol).as("q_id"), col("embedding").as("qv"),
+    def hint(df: DataFrame) = if (smallProbes) broadcast(df) else df
+    val p = probes.select(col(idCol).as("q_id"), col("embedding").as("qv"),
       norm(col("embedding")).as("qn"))
-    val p = if (smallProbes) broadcast(p0) else p0
-    val c0 = candidates.select(col(idCol).as("c_id"), col("embedding").as("cv"),
-      norm(col("embedding")).as("cn"))
-    val c =
-      if (smallProbes)
-        c0.join(broadcast(short.select(col("c_id")).distinct()), "c_id")
-      else c0
-    val shortPairs = if (smallProbes) broadcast(short) else short
-    val scored = shortPairs.join(p, "q_id").join(c, "c_id")
-      .withColumn("cos", cosine(col("qv"), col("cv"), col("qn"), col("cn")))
+    val c = candidates.select(col(idCol).as("c_id"), col("embedding").as("cv"))
+    val scored = c.join(hint(short), "c_id").join(hint(p), "q_id")
+      .withColumn("cos", cosine(col("qv"), col("cv"), col("qn"), norm(col("cv"))))
     // rankTopK: the refine set is probes × shortlist — bounded, but
     // under Auto the shortlist is nprobe-cell-sized, and the heaps
     // trim it to k per partition before any exchange
@@ -933,46 +948,21 @@ object VectorOps {
   /** Asymmetric-distance top-k over PACKED codes — the serving form
     * of [[pqAdcTopK]] (bit-identical results; PqServeSpec pins the
     * parity). Each probe's per-subspace lookup table is flattened to
-    * a map keyed mi·ksub+code and broadcast as one row per probe;
-    * scoring is then a per-candidate-row integer fold over m map
-    * lookups — a pure MAP over the code scan. The per-probe top-k
-    * runs through [[graft.plans.TopKPerKey]] (bounded heaps per input
-    * partition), so the only shuffle carries AT MOST k rows per
-    * (probe, partition) — bytes on the wire are bounded by the
-    * SHORTLIST, not the corpus, which is the measurable difference
-    * from the unpacked form's nq × N grouped-row exchange. */
+    * a map keyed mi·ksub+code and broadcast as one row per probe
+    * ([[probeLuts]]); scoring is then a per-candidate-row integer sum
+    * of m map lookups ([[adcSum]]) — a pure MAP over the code scan.
+    * The per-probe top-k runs through [[graft.plans.TopKPerKey]]
+    * (bounded heaps per input partition), so the only shuffle carries
+    * AT MOST k rows per (probe, partition) — bytes on the wire are
+    * bounded by the SHORTLIST, not the corpus, which is the measurable
+    * difference from the unpacked form's nq × N grouped-row exchange. */
   def pqAdcTopKPacked(probes: DataFrame, packedCodes: DataFrame,
                       codebooks: DataFrame, idCol: String, m: Int, ksub: Int,
-                      k: Int, knownDims: Int = -1): DataFrame = {
-    val dims = if (knownDims >= 0) knownDims else embeddingDims(probes)
-    val dsub = dims / m
-    val qsub = probes.select(col(idCol).as("q_id"),
-      posexplode(subvectors(col("embedding"), m, dsub)).as(Seq("mi", "qv")))
-    // one LUT row per probe: map (mi*ksub + code) -> int64 lookup —
-    // a map, not a dense array, so a codebook cell that lost every
-    // member is an absent key (null-summed rank-last), never a silent
-    // positional shift
-    val luts = qsub.join(broadcast(codebooks), Seq("mi"))
-      .select(col("q_id"), (col("mi") * ksub + col("cell")).as("idx"),
-        round(dotD(col("qv"), col("cv")) * 1e6).cast("long").as("si"))
-      .groupBy("q_id")
-      .agg(map_from_entries(collect_list(struct(col("idx"), col("si")))).as("lut"))
-    // the m-way table sum is UNROLLED into a static sum of element_at
-    // terms, not an aggregate(transform(...)) fold: higher-order
-    // functions are CodegenFallback (interpreted per row), and this
-    // expression runs once per (probe, candidate) — nq × N times, the
-    // hottest scalar in the flat-ADC path. The static sum stays inside
-    // WholeStageCodegen. Null semantics unchanged: a missing LUT key
-    // (a codebook cell that lost every member) nulls one term and a
-    // null term nulls the whole sum — rank-last, exactly the fold's
-    // null-summed behavior.
+                      k: Int): DataFrame = {
     val scored = packedCodes.select(col(idCol).as("c_id"), col("codes"))
-      .crossJoin(broadcast(luts))
+      .crossJoin(broadcast(probeLuts(probes, codebooks, idCol, m, ksub)))
       .filter(col("q_id") =!= col("c_id"))
-      .withColumn("adci", (0 until m).map(mi =>
-        element_at(col("lut"),
-          lit(mi * ksub) + element_at(col("codes"), lit(mi + 1))))
-        .reduce(_ + _))
+      .withColumn("adci", adcSum(m, ksub))
     val top = graft.plans.TopKPerKey.topK(scored, Seq(col("q_id")),
       Seq(col("adci").desc, col("c_id")), k)
     // rank over the already-reduced nq × k rows (bounded window)
@@ -985,8 +975,8 @@ object VectorOps {
   /** The full PQ SERVING entry point over a STORED index: packed-code
     * ADC shortlist ([[pqAdcTopKPacked]] — map-only scoring, shuffle
     * bounded by shortlist × partitions) + exact cosine refine of just
-    * the shortlist vectors ([[refineShortlist]]'s counted broadcast
-    * gate). Same results as [[pqRefinedTopK]] over the unpacked
+    * the shortlist vectors ([[refineShortlist]], in the same lazy
+    * query). Same results as [[pqRefinedTopK]] over the unpacked
     * codes; the difference is the wire: this shape's bytes stay flat
     * as the corpus grows (the ScaleDecade q128_pq_serve row measures
     * it), which is the serving posture for a standing corpus.
@@ -1001,22 +991,20 @@ object VectorOps {
                   packedCodes: DataFrame, codebooks: DataFrame, idCol: String,
                   m: Int, ksub: Int, k: Int, shortlist: Int = 50,
                   probeBroadcastMax: Long = 10000L): DataFrame = {
-    val (smallProbes, dims) = probeStats(probes, probeBroadcastMax)
     val sl =
       if (shortlist == Auto)
         math.max(k.toLong, math.ceil(0.2 * packedCodes.count()).toLong).toInt
       else shortlist
     refineShortlist(probes,
-      pqAdcTopKPacked(probes, packedCodes, codebooks, idCol, m, ksub, sl,
-          knownDims = dims)
+      pqAdcTopKPacked(probes, packedCodes, codebooks, idCol, m, ksub, sl)
         .select("q_id", "c_id"),
-      candidates, idCol, k, smallProbes)
+      candidates, idCol, k, probeGate(probes, probeBroadcastMax))
   }
 
   /** The FULL IVF-PQ serving stack (Jégou et al. 2011 — the index
     * layout billion-vector ANN actually ships): the coarse quantizer
     * restricts each probe to its `nprobe` nearest cells, PQ-ADC
-    * scores only THOSE cells' packed codes (a per-row integer fold —
+    * scores only THOSE cells' packed codes (a per-row integer sum —
     * the codes of unprobed cells are filtered map-side by the
     * broadcast probe→cell frame, never scanned into a shuffle), and
     * the exact-cosine refine re-ranks the shortlist. This composes
@@ -1028,8 +1016,15 @@ object VectorOps {
     * — the cell column rides WITH the codes precisely so serving
     * never joins codes back to the corpus on the id; `centroids` is
     * the stored [[ivfCentroids]] table. All exchanges are bounded:
-    * probe routing and both top-k's run through TopKPerKey heaps, the
-    * LUTs/probe-cells/shortlist broadcast under the counted gate.
+    * probe routing and all three top-k's run through TopKPerKey heaps,
+    * the probe cells, LUTs, shortlist and probe vectors broadcast
+    * under the probe gate.
+    *
+    * ONE LAZY QUERY: with explicit knobs nothing runs at construction
+    * when the probe plan's row bound decides the gate (a batch of
+    * driver-side rows — the serving shape); otherwise the gate counts
+    * the probes once. The batch's single action then runs routing,
+    * ADC, shortlist and refine in one SQL execution.
     *
     * `nprobe = Auto` / `shortlist = Auto` derive the serve knobs from
     * the STORED index via [[servingKnobs]] — nprobe ≈ 10% of nlist,
@@ -1044,7 +1039,8 @@ object VectorOps {
                 codebooks: DataFrame, idCol: String, m: Int, ksub: Int,
                 k: Int, nprobe: Int = 2, shortlist: Int = 50,
                 probeBroadcastMax: Long = 10000L): DataFrame = {
-    val (smallProbes, dims) = probeStats(probes, probeBroadcastMax)
+    val smallProbes = probeGate(probes, probeBroadcastMax)
+    def hint(df: DataFrame) = if (smallProbes) broadcast(df) else df
     val (np, sl) =
       if (nprobe == Auto || shortlist == Auto) {
         val nlist = math.max(1L, centroids.count())
@@ -1053,7 +1049,6 @@ object VectorOps {
         (if (nprobe == Auto) autoNp else nprobe,
           if (shortlist == Auto) autoSl else shortlist)
       } else (nprobe, shortlist)
-    val dsub = dims / m
     val p = probes.select(col(idCol).as("q_id"), col("embedding").as("qv"),
       norm(col("embedding")).as("qn"))
     // probe -> nprobe cells over the STORED centroid index (the
@@ -1061,39 +1056,21 @@ object VectorOps {
     val pc = p.crossJoin(broadcast(centroids))
       .withColumn("__ccos", dotD(col("qv"), col("cv")) /
         (col("qn") * sqrt(dotD(col("cv"), col("cv")))))
-    val probeCells0 = graft.plans.TopKPerKey.topK(pc,
+    val probeCells = graft.plans.TopKPerKey.topK(pc,
         Seq(col("q_id")), Seq(col("__ccos").desc, col("cell")), np)
       .select(col("q_id"), col("cell"))
-    val probeCells = if (smallProbes) broadcast(probeCells0) else probeCells0
-    // per-probe lookup map (the pqAdcTopKPacked LUT)
-    val qsub = probes.select(col(idCol).as("q_id"),
-      posexplode(subvectors(col("embedding"), m, dsub)).as(Seq("mi", "qv")))
-    val luts0 = qsub.join(broadcast(codebooks), Seq("mi"))
-      .select(col("q_id"), (col("mi") * ksub + col("cell")).as("idx"),
-        round(dotD(col("qv"), col("cv")) * 1e6).cast("long").as("si"))
-      .groupBy("q_id")
-      .agg(map_from_entries(collect_list(struct(col("idx"), col("si")))).as("lut"))
-    val luts = if (smallProbes) broadcast(luts0) else luts0
     // ADC over ONLY the probed cells' codes — both restrictions are
     // map-side joins against broadcast probe-derived frames
     val scored = packedIndex
       .select(col(idCol).as("c_id"), col("cell"), col("codes"))
-      .join(probeCells, "cell")
-      .join(luts, "q_id")
+      .join(hint(probeCells), "cell")
+      .join(hint(probeLuts(probes, codebooks, idCol, m, ksub)), "q_id")
       .filter(col("q_id") =!= col("c_id"))
-      // static element_at unroll (the pqAdcTopKPacked note): the HOF
-      // fold was CodegenFallback, interpreted once per (probe,
-      // probed-cell candidate) row — the hottest scalar of the IVF-PQ
-      // serve path. Null semantics unchanged: a missing LUT key nulls
-      // one term and a null term nulls the sum (rank-last).
-      .withColumn("adci", (0 until m).map(mi =>
-        element_at(col("lut"),
-          lit(mi * ksub) + element_at(col("codes"), lit(mi + 1))))
-        .reduce(_ + _))
-    val short0 = graft.plans.TopKPerKey.topK(scored,
+      .withColumn("adci", adcSum(m, ksub))
+    val short = graft.plans.TopKPerKey.topK(scored,
         Seq(col("q_id")), Seq(col("adci").desc, col("c_id")), sl)
       .select("q_id", "c_id")
-    refineShortlist(probes, short0, candidates, idCol, k, smallProbes)
+    refineShortlist(probes, short, candidates, idCol, k, smallProbes)
   }
 
   /** Symmetric int8 quantization of an embedding column: per-vector
@@ -1140,10 +1117,10 @@ object VectorOps {
         graft.functions.LshBucketExpr.bucket(col("embedding"), signs).as("bucket"))
     }
     val p0 = bucketed(probes, "q_id", "qv", "qn")
-    // counted broadcast gate (the ivfAnn serving-shape note): a
+    // probe broadcast gate (the ivfAnn serving-shape note): a
     // bounded probe side restricts the corpus MAP-SIDE; the corpus
     // never crosses the wire for a small query batch
-    val p = if (probes.count() <= probeBroadcastMax) broadcast(p0) else p0
+    val p = if (probeGate(probes, probeBroadcastMax)) broadcast(p0) else p0
     val c = bucketed(candidates, "c_id", "cv", "cn")
     val pairs = p.join(c, Seq("bucket")).filter(col("q_id") =!= col("c_id"))
       .withColumn("cos", cosine(col("qv"), col("cv"), col("qn"), col("cn")))
@@ -1171,14 +1148,15 @@ object VectorOps {
     * the single-table bucket-size story.
     *
     * SERVING SHAPE (the ivfAnn note): with a bounded probe set
-    * (count <= `probeBroadcastMax`) every probe-derived side carries
+    * ([[probeGate]] under `probeBroadcastMax`) every probe-derived side carries
     * an explicit broadcast hint, and the candidate-id set — counted
     * like [[graft.ops.dedup.Dedup.jaccardReleasable]]'s, under
     * `candBroadcastMax` — restricts the corpus embedding relation
     * map-side, so the CORPUS NEVER CROSSES THE WIRE: its scan feeds
     * only map-side band lookups and the broadcast semi-restriction.
-    * The two counts are eager driver jobs (the jaccardReleasable
-    * precedent); over budget the hints drop and the planner decides.
+    * The candidate count is an eager driver job (the jaccardReleasable
+    * precedent), and so is the probe gate unless the probe plan's row
+    * bound decides it; over budget the hints drop and the planner decides.
     * Relying on auto-broadcast instead inverts at scale: the decade
     * measurement saw the sf10 rung flip this join to sort-merge and
     * shuffle the whole corpus for 20 probes. */
@@ -1191,7 +1169,7 @@ object VectorOps {
     // (the round-6 advice: a 4-table index fired 8 redundant jobs)
     val pDims = embeddingDims(probes)
     val cDims = embeddingDims(candidates)
-    val smallProbes = probes.count() <= probeBroadcastMax
+    val smallProbes = probeGate(probes, probeBroadcastMax)
     val candPairs0 = (0 until nTables).map { t =>
       val pb0 = lshBucket(probes, "vec_id", nPlanes, t, pDims)
         .withColumnRenamed("vec_id", "q_id")
@@ -1206,10 +1184,10 @@ object VectorOps {
     // bucket joins + a distinct over the corpus) is the expensive
     // pass, and as a lazy plan it would run THREE times — once for
     // the candIds gate count, once inside the broadcast(candIds)
-    // subtree, once as the left side of the scoring join. Localize it
-    // (the pqRefinedTopK shortlist discipline): probe-restricted, so
-    // bounded by probes × nTables × bucket occupancy; the staging-dir
-    // path keeps it off the driver at cluster scale.
+    // subtree, once as the left side of the scoring join. Localize it:
+    // probe-restricted, so bounded by probes × nTables × bucket
+    // occupancy; the staging-dir path keeps it off the driver at
+    // cluster scale.
     val candPairs =
       if (smallProbes) graft.ops.Materialize.localize(candPairs0) else candPairs0
     val p0 = probes.select(col("vec_id").as("q_id"), col("embedding").as("qv"),

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ops.similarity.VectorOps
@@ -145,5 +146,65 @@ class PqServeSpec extends SparkSpec {
         probeBroadcastMax = 0L)
       .orderBy("q_id", "rank").collect().toSeq
     assert(small == overBudget, "both regimes must agree exactly")
+  }
+
+  /** An IVF-PQ index stored as parquet (the serving shape), the
+    * corpus, and a serve call over it returning sorted row tuples. */
+  private def storedIvfPq(): (DataFrame, (DataFrame, Long) => Seq[(Long, Long, Int, Any)]) = {
+    val e = emb
+    val (codes, books) = VectorOps.pqCodes(e, "vec_id", m = 4, ksub = 4)
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_gate_idx").toString
+    VectorOps.ivfCentroids(e, "label").write.mode("overwrite").parquet(s"$dir/cents")
+    VectorOps.pqCodesPacked(codes, "vec_id")
+      .join(e.select(col("vec_id"), col("label").as("cell")), "vec_id")
+      .write.mode("overwrite").parquet(s"$dir/packed")
+    books.write.mode("overwrite").parquet(s"$dir/books")
+    val serve = (probes: DataFrame, probeBroadcastMax: Long) =>
+      VectorOps.ivfPqTopK(probes, e, spark.read.parquet(s"$dir/cents"),
+          spark.read.parquet(s"$dir/packed"), spark.read.parquet(s"$dir/books"),
+          "vec_id", m = 4, ksub = 4, k = 3, nprobe = 2, shortlist = 10,
+          probeBroadcastMax = probeBroadcastMax)
+        .orderBy("q_id", "rank")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.get(3))).toSeq
+    (e.select("vec_id", "embedding"), serve)
+  }
+
+  private def driverBatch(rows: Seq[Row], like: DataFrame): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), like.schema)
+
+  test("ivfPqTopK: same rows whether the probe gate is a static bound, a count or over budget") {
+    val (e, serve) = storedIvfPq()
+    val scanned = e.filter(col("vec_id") < 10)
+    val batch = driverBatch(scanned.collect().toSeq, e)
+    // the two gate routes: a driver-side batch carries a static row
+    // bound, a filtered parquet frame has none and must be counted
+    assert(batch.queryExecution.optimizedPlan.maxRows.contains(10L))
+    assert(scanned.queryExecution.optimizedPlan.maxRows.isEmpty)
+    val counted = serve(scanned, 10000L)
+    assert(counted.size == 30)
+    assert(serve(batch, 10000L) == counted, "static-bound gate")
+    assert(serve(scanned, 0L) == counted, "shuffle regime (counted)")
+    assert(serve(batch, 0L) == counted, "shuffle regime (static bound over budget)")
+  }
+
+  test("an empty driver-side probe batch serves zero rows on every PQ path") {
+    val (e, serve) = storedIvfPq()
+    val empty = driverBatch(Seq.empty, e)
+    assert(serve(empty, 10000L).isEmpty)
+    assert(serve(empty, 0L).isEmpty)
+    val (codes, books) = VectorOps.pqCodes(emb, "vec_id", m = 4, ksub = 4)
+    assert(VectorOps.pqServeTopK(empty, e, VectorOps.pqCodesPacked(codes, "vec_id"),
+      books, "vec_id", m = 4, ksub = 4, k = 3, shortlist = 10).collect().isEmpty)
+    assert(VectorOps.pqRefinedTopK(empty, e, codes, books, "vec_id",
+      m = 4, k = 3, shortlist = 10).collect().isEmpty)
+  }
+
+  test("a probe with a null embedding leaves the other probes' rows unchanged") {
+    val (e, serve) = storedIvfPq()
+    val rows = e.filter(col("vec_id") < 10).collect().toSeq
+    val base = serve(driverBatch(rows, e), 10000L)
+    val withNull = serve(driverBatch(rows :+ Row(999999L, null), e), 10000L)
+    assert(base.size == 30)
+    assert(withNull.filter(_._1 != 999999L) == base)
   }
 }

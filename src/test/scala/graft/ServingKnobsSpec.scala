@@ -76,11 +76,14 @@ class ServingKnobsSpec extends SparkSpec {
   test("serve entry points fire ONE probe-frame job at construction (count + dims merged)") {
     // the r15 verdict's redundant-eager-job item, pinned by counting
     // REAL Spark jobs during plan CONSTRUCTION (no action taken):
-    //  - ivfAnn: exactly 1 (the probeStats job; routing stays lazy)
-    //  - pqRefinedTopK / pqServeTopK / ivfPqTopK: exactly 2 — the one
-    //    probeStats job plus the shortlist localize (a deliberate
-    //    eager collect: as a lazy plan the ADC pass would re-run per
-    //    consumer). Before the fix each fired 3 (count + dims + ...).
+    //  - probes as a filtered parquet frame (no static row bound):
+    //    exactly 1 for every entry point — the probe-gate count; the
+    //    subvector split is per row (no dims job) and the shortlist
+    //    stays lazy inside the one serve query (no localize collect).
+    //    Before the merge each PQ entry point fired 3 (count + dims +
+    //    localize), then 2 (count/dims + localize).
+    //  - probes as a batch of driver-side rows (the serving shape):
+    //    exactly 0 — the plan's row bound decides the gate.
     val e = emb
     val (codes, books0) = VectorOps.pqCodes(e, "vec_id", m = 4, ksub = 4)
     // materialize inputs to leaves FIRST so their build jobs don't
@@ -94,6 +97,9 @@ class ServingKnobsSpec extends SparkSpec {
     val cents = graft.ops.Materialize.localize(VectorOps.ivfCentroids(e, "label"))
     val codesLeaf = graft.ops.Materialize.localize(codes)
     val probes = e.filter(col("vec_id") < 5)
+    val probeRows = probes.select("vec_id", "embedding")
+    val batch = spark.createDataFrame(
+      java.util.Arrays.asList(probeRows.collect(): _*), probeRows.schema)
     // count eager ACTIONS (SQL execution roots), not raw jobs — AQE
     // runs one action's stages as several jobs, which is not what the
     // one-eager-count-per-entry-point property is about
@@ -119,21 +125,24 @@ class ServingKnobsSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      constructionJobs("ivfAnn", 1) {
-        VectorOps.ivfAnn(probes, e, "label", k = 3, nprobe = 2,
-          centroids = Some(cents))
-      }
-      constructionJobs("pqRefinedTopK", 2) {
-        VectorOps.pqRefinedTopK(probes, e, codesLeaf, books, "vec_id",
-          m = 4, k = 3, shortlist = 10)
-      }
-      constructionJobs("pqServeTopK", 2) {
-        VectorOps.pqServeTopK(probes, e, packedFlat, books, "vec_id",
-          m = 4, ksub = 4, k = 3, shortlist = 10)
-      }
-      constructionJobs("ivfPqTopK", 2) {
-        VectorOps.ivfPqTopK(probes, e, cents, packedIvf, books, "vec_id",
-          m = 4, ksub = 4, k = 3, nprobe = 2, shortlist = 10)
+      Seq(("", probes, 1), (" (driver-side batch)", batch, 0)).foreach {
+        case (how, p, expected) =>
+          constructionJobs("ivfAnn" + how, expected) {
+            VectorOps.ivfAnn(p, e, "label", k = 3, nprobe = 2,
+              centroids = Some(cents))
+          }
+          constructionJobs("pqRefinedTopK" + how, expected) {
+            VectorOps.pqRefinedTopK(p, e, codesLeaf, books, "vec_id",
+              m = 4, k = 3, shortlist = 10)
+          }
+          constructionJobs("pqServeTopK" + how, expected) {
+            VectorOps.pqServeTopK(p, e, packedFlat, books, "vec_id",
+              m = 4, ksub = 4, k = 3, shortlist = 10)
+          }
+          constructionJobs("ivfPqTopK" + how, expected) {
+            VectorOps.ivfPqTopK(p, e, cents, packedIvf, books, "vec_id",
+              m = 4, ksub = 4, k = 3, nprobe = 2, shortlist = 10)
+          }
       }
     } finally spark.sparkContext.removeSparkListener(listener)
   }
