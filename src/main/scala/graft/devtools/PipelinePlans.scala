@@ -3,7 +3,6 @@ package graft.devtools
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.dedup.Dedup
 import graft.core.GraftSession
 
 /** Dev probe: plan evidence for the dedup-family INNER pipelines.
@@ -13,20 +12,16 @@ import graft.core.GraftSession
   * design), so `ExplainDump` on the declared query shows only the
   * presentation sort over a LocalTableScan: the exchanges the r17
   * posting/verifier optimizations changed are invisible there. This
-  * dumps the inner pipelines' `.explain("formatted")` directly —
-  * CURRENT form next to the LEGACY form it replaced (the legacy
-  * expressions are kept in the tree as semantic references:
-  * [[Dedup.shingleSetDistinct]], and the pre-r17 posting shapes
-  * reconstructed inline here, clearly labeled) — so a reviewer can
-  * check the claimed exchange-key/width changes without running Spark:
-  *
-  *  - posting build (q44/q163): the exchange key is one xxhash64 long
-  *    (`bgh`), the rows below it are raw fixed-width (no map-side
-  *    partial collect_set buffers / ObjectHashAggregate below the
-  *    exchange); legacy shows the string-key partial_collect_set form.
-  *  - jaccard verifier (q42/q91/q101/q129/q177/q178/q197/q206 + both
-  *    streaming jobs): every (id, w)-keyed exchange carries w as an
-  *    8-byte long; legacy carries the raw 3-gram string.
+  * dumps the inner pipeline's `.explain("formatted")` directly —
+  * CURRENT form next to the LEGACY form it replaced (the pre-r17
+  * posting shape reconstructed inline here, clearly labeled) — so a
+  * reviewer can check the claimed exchange-key/width change without
+  * running Spark: in the posting build (q44/q163) the exchange key is
+  * one xxhash64 long (`bgh`), the rows below it are raw fixed-width
+  * (no map-side partial collect_set buffers / ObjectHashAggregate
+  * below the exchange); legacy shows the string-key
+  * partial_collect_set form. (The text verifier's plan has no
+  * shingle-keyed exchange at all; PlanQualitySpec pins that.)
   *
   * Usage: PipelinePlans <sfDir> <outDir>  (NOT part of the library)
   */
@@ -72,19 +67,6 @@ object PipelinePlans {
     dump("posting_build_legacy",
       bgLegacy.groupBy(col("lang"), col("source"), col("bg"))
         .agg(collect_set(col("doc_id")).as("ids")))
-
-    // ---- jaccard verifier core (pair-anchored membership probes +
-    // per-doc sizes). The pairs frame's provenance is irrelevant to
-    // the plan shape — a synthetic (id_a, id_b) pair list exercises
-    // the same three (id, w)-keyed exchanges the real candidates do.
-    val pairs = docs.select(col("doc_id").as("id_a"),
-      (col("doc_id") + lit(1)).as("id_b"))
-    dump("verifier_core_current",
-      Dedup.jaccardCore(pairs,
-        Dedup.shingleHashSetDistinct(docs, "doc_id", "text"), "doc_id"))
-    dump("verifier_core_legacy",
-      Dedup.jaccardCore(pairs,
-        Dedup.shingleSetDistinct(docs, "doc_id", "text"), "doc_id"))
 
     spark.stop()
   }

@@ -99,34 +99,6 @@ object Dedup {
           s"transform(sequence(0, size(toks) - $k), i -> concat_ws(' ', slice(toks, i + 1, $k)))")))
           .as("w"))
 
-  /** [[shingleSetDistinct]] with the shingle IDENTITY carried as an
-    * 8-byte xxhash64 of the k-token tuple instead of the joined
-    * string (guide §2.3 "shuffle keys and metadata instead of
-    * payloads"). The verifier never reads shingle CONTENT — every
-    * downstream step (per-doc set sizes, the pair-anchored membership
-    * probes) needs only equality — so the exchanges that carry (id, w)
-    * shrink from ~20-30 byte strings to fixed 8-byte longs, and the
-    * join/aggregation keys become long compares instead of string
-    * compares. The token-tuple hash is identity-equivalent to the
-    * joined string (tokens are whitespace-free, so ' '-joining is
-    * injective) up to 64-bit hash collisions: a collision within one
-    * doc undercounts its set size by 1, across a verified pair
-    * overcounts n_inter by 1 — probability ~s²/2⁶⁴ per doc/pair
-    * (~1e-12 at 10⁶-shingle docs), and the DuckDB oracle replays
-    * string equality, so any collision at a gated SF fails the hash
-    * gate loudly rather than silently. */
-  def shingleHashSetDistinct(df: DataFrame, idCol: String, textCol: String,
-                             k: Int = 3): DataFrame = {
-    val hashArgs = (0 until k).map(j => s"element_at(toks, i + ${j + 1})")
-      .mkString(", ")
-    df.select(col(idCol), split(col(textCol), "\\s+").as("toks"))
-      .filter(size(col("toks")) >= k)
-      .select(col(idCol),
-        explode(array_distinct(expr(
-          s"transform(sequence(0, size(toks) - $k), i -> xxhash64($hashArgs))")))
-          .as("w"))
-  }
-
   /** MinHash signatures, wide form: ALL `n` hash functions as n
     * min-aggregate columns over the shingle rows — no n-times row
     * explosion, one partial-agg (map-side combined) shuffle. Output
@@ -164,9 +136,9 @@ object Dedup {
     * This is the formulation the LSH chain should start from at
     * 100 TB: the signature branch becomes map-only and the first
     * exchange of the whole dedup pipeline is the band-bucket
-    * shuffle (n/r rows of 16-byte keys per doc). Shingle rows then
-    * exist only inside the verifier, derived from candidate docs
-    * AFTER the restriction ([[jaccardTextReleasable]]) — nothing
+    * shuffle (n/r rows of 16-byte keys per doc). Shingles then
+    * exist only inside the verifier, as one in-row set per candidate
+    * doc AFTER the restriction ([[jaccardTextReleasable]]) — nothing
     * ever explodes the corpus's n-grams. */
   def minHashText(df: DataFrame, idCol: String, textCol: String,
                   k: Int = 3, n: Int = 16): DataFrame = {
@@ -371,16 +343,38 @@ object Dedup {
   }
 
   /** [[jaccardReleasable]] fed DOCUMENTS instead of a pre-exploded
-    * shingle relation: the candidate semi-join restricts the DOC
-    * frame first, and the shingle explode runs over the survivors
-    * only. Since the signature branch went map-only
-    * ([[minHashText]]), jaccard is the ONLY consumer of shingle rows
-    * in the LSH chain — so nothing should ever explode the full
-    * corpus's n-grams again: at 100 TB this is the difference
-    * between shingling the corpus and shingling the ~% of docs that
-    * collided in a bucket. Identical output to
-    * `jaccardReleasable(pairs, shingleSet(docs, ...), ...)` —
-    * restriction and explode commute on an id-keyed relation. */
+    * shingle relation, with the set algebra done IN-ROW. The candidate
+    * semi-join restricts the DOC frame first; each surviving doc then
+    * becomes ONE row carrying its distinct shingle identities as an
+    * array (`array_distinct` of the `xxhash64` of each k-token tuple),
+    * joined onto the pairs by id_a and by id_b. n_inter is
+    * `size(array_intersect(a, b))`, n_a / n_b the array sizes, and
+    * jaccard follows as in [[jaccard]].
+    *
+    * Since the signature branch went map-only ([[minHashText]]), this
+    * is the ONLY consumer of shingles in the LSH chain, and nothing
+    * explodes n-grams at all: no (id, w) row, no exchange keyed on a
+    * shingle. The verifier's exchanges are the candidate-doc distinct
+    * (doc text) and, past the broadcast budget, the two id-keyed joins
+    * of one array row per candidate doc. Those set rows are cached:
+    * both join sides read them, and uncached each side re-ran the
+    * candidate-doc distinct (AQE did not reuse its exchange). Cost is O(|pairs| x shingles-per-doc), linear
+    * in the candidate-pair count like the pair-anchored form; the
+    * df^2 posting-list term never appears.
+    *
+    * The shingle identity is the k-token tuple's 8-byte `xxhash64`.
+    * Tokens are whitespace-free, so the tuple is injective up to
+    * 64-bit collisions: one inside a doc undercounts its set size by
+    * 1, one across a verified pair overcounts n_inter by 1 — about
+    * s^2/2^64 per doc or pair. The DuckDB oracle replays string
+    * equality, so a collision at a gated SF fails the hash gate.
+    *
+    * Same rows as `jaccardReleasable(pairs, shingleSet(docs, ...),
+    * ...)` up to those collisions; docs with fewer than k tokens drop
+    * their pairs (inner joins), as there. Output columns: id_b, id_a,
+    * <any other pair columns>, n_inter, n_a, n_b, jaccard. Same eager
+    * candidate count as [[jaccard]]; release() frees the pair and
+    * set caches. */
   def jaccardTextReleasable(pairs: DataFrame, docs: DataFrame, idCol: String,
                             textCol: String, k: Int = 3,
                             broadcastCandMax: Long = 4000000L,
@@ -388,41 +382,42 @@ object Dedup {
     val p = pairs.cache()
     val candSide = candidateSide(p, idCol, broadcastCandMax, candCount)
     // row-level distinct FIRST: a replayed/duplicated document (same
-    // (id, text) row twice — the streaming replay case) must collapse
-    // before shingling, or the duplicate (id, w) rows inflate n_inter
-    // past n_a + n_b (a zero denominator at jaccard time). This
-    // exchange carries candidate-doc TEXT — an order of magnitude
-    // smaller than the exploded shingle relation the old
-    // shingleSet(...).distinct() form shuffled.
+    // (id, text) row twice — the streaming replay case) must collapse,
+    // or its pairs would join twice. Contract note: an id carried by
+    // two DIFFERENT texts violates the same-id = same-doc contract
+    // every caller documents; see [[assertSameIdSameDoc]] for the
+    // opt-in debug guard.
     val candDocs = docs.select(col(idCol), col(textCol))
       .join(candSide, Seq(idCol), "left_semi")
       .distinct()
-    // set semantics IN-ROW from there (array_distinct before the
-    // explode) with the shingle identity as an 8-byte hash
-    // ([[shingleHashSetDistinct]], r17): zero further exchange (guide
-    // §2.4) — the old form paid a full hash exchange of the
-    // candidate-doc shingle multiset to dedup pairs that are per-doc
-    // by construction — and the verifier's three (id, w)-keyed
-    // exchanges (the two membership probes + the size counts) now
-    // carry fixed-width longs instead of raw n-gram text (guide
-    // §2.3). Output identical up to 64-bit collisions (oracle-gated;
-    // see the scaladoc). Contract note: an id carried by two
-    // DIFFERENT texts violates the same-id = same-doc contract every
-    // caller documents; the pre-r16 global distinct silently unioned
-    // such shingle sets, the in-row form does not defend it — see
-    // [[assertSameIdSameDoc]] for the opt-in debug guard.
     assertSameIdSameDoc(candDocs, idCol)
-    val cw = shingleHashSetDistinct(candDocs, idCol, textCol, k).cache()
-    Releasable(jaccardCore(p, cw, idCol),
-      () => { p.unpersist(false); cw.unpersist(false) })
+    val hashArgs = (0 until k).map(j => s"element_at(toks, i + ${j + 1})")
+      .mkString(", ")
+    val sets = candDocs.select(col(idCol), split(col(textCol), "\\s+").as("toks"))
+      .filter(size(col("toks")) >= k)
+      .select(col(idCol), array_distinct(expr(
+        s"transform(sequence(0, size(toks) - $k), i -> xxhash64($hashArgs))")).as("__w"))
+      .cache()
+    def side(s: String) = sets.select(col(idCol).as(s"id_$s"), col("__w").as(s"__w$s"))
+    val df = p
+      .join(side("a"), "id_a")
+      .join(side("b"), "id_b")
+      .withColumn("n_inter", size(array_intersect(col("__wa"), col("__wb"))).cast("long"))
+      .withColumn("n_a", size(col("__wa")).cast("long"))
+      .withColumn("n_b", size(col("__wb")).cast("long"))
+      .drop("__wa", "__wb")
+      .withColumn("jaccard",
+        col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
+    Releasable(df, () => { p.unpersist(false); sets.unpersist(false) })
   }
 
   /** Opt-in debug guard (`-Dgraft.dedup.assertContract=1`) for the
-    * same-id = same-doc contract the in-row shingle distinct relies
-    * on: after the row-level distinct, any id still carried by more
-    * than one row means two DIFFERENT texts share an id — the case
-    * whose shingle sets the pre-r16 global distinct silently unioned
-    * and the in-row form silently double-counts. OFF by default (it
+    * same-id = same-doc contract the in-row shingle sets rely on:
+    * after the row-level distinct, any id still carried by more than
+    * one row means two DIFFERENT texts share an id — the case whose
+    * shingle sets the pre-r16 global distinct silently unioned and
+    * the in-row form scores once per text (duplicate pair rows with
+    * different counts). OFF by default (it
     * is one extra eager aggregation over the candidate docs per
     * verify call); turn it on when validating a new ingestion path. */
   private def assertSameIdSameDoc(candDocs: DataFrame, idCol: String): Unit =
@@ -464,12 +459,9 @@ object Dedup {
   }
 
   /** The pair-anchored verifier over a cached candidate-restricted
-    * DISTINCT (id, w) relation — shared by the words- and docs-fed
-    * entry points. */
-  // private[graft]: devtools.PipelinePlans dumps this pipeline's plan
-  // as the round's before/after exchange evidence
-  private[graft] def jaccardCore(p: DataFrame, cw: DataFrame,
-                                 idCol: String): DataFrame = {
+    * DISTINCT (id, w) relation — the words-fed entry points. */
+  private def jaccardCore(p: DataFrame, cw: DataFrame,
+                          idCol: String): DataFrame = {
     val counts = cw.groupBy(idCol).agg(count(lit(1)).as("n"))
     // pair-anchored intersection: fan each pair by doc a's shingles,
     // probe doc b's membership — |pairs| x shingles-per-doc rows,

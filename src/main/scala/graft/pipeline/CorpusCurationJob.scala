@@ -16,132 +16,117 @@ import graft.ops.text.TextOps
   * — emitting the curated corpus plus a per-language funnel of counts
   * at every stage (the numbers a pipeline owner actually watches).
   * Every stage is the already-verified operator; the composition is
-  * itself hash-gated by q91. At 100 TB each arrow is one shuffle-
-  * bounded stage over the same partitioning; nothing here is
-  * driver-side.
+  * itself hash-gated by q91. The stages are not separate frames: one
+  * scored frame (survivors of the exact gate, flagged by the other
+  * two) feeds both the curated rows and the funnel. At 100 TB each
+  * arrow is one shuffle-bounded stage over the same partitioning;
+  * nothing here is driver-side.
   */
 object CorpusCurationJob {
 
   val Stopwords: Seq[String] = Seq("the", "a")
 
-  /** The pipeline's intermediate stage frames. When `cache` is set the
-    * multi-consumer frames (uniq, deduped) are cached — callers that
-    * materialize more than one consumer MUST unpersist them (see
-    * funnel/run) or cached partitions accumulate across calls.
-    * Shingles are NOT cached: shingleSet is a pure map-side
-    * projection off the cached uniq rows, so each consumer re-derives
-    * it for free inside its own stage instead of materializing the
-    * ~50x-exploded shingle rows. */
-  private case class Stages(uniq: DataFrame,
-                            deduped: DataFrame, curated: DataFrame,
-                            releaseJaccard: () => Unit) {
-    def unpersist(): Unit = {
-      uniq.unpersist(); deduped.unpersist(); releaseJaccard()
-    }
-  }
-
-  private def stages(docs: DataFrame, jaccardTau: Double,
-                     minQuality: Double, cacheUniq: Boolean,
-                     cacheDeduped: Boolean): Stages = {
-    def maybeCache(df: DataFrame, on: Boolean) = if (on) df.cache() else df
+  /** The whole funnel as ONE frame: every exact-dedup survivor (the
+    * `uniq` rows, doc_id first as the USING join puts it) left-joined
+    * to the verified near-dup ids, plus two booleans — `__keep` (not
+    * the larger id of a >= tau pair) and `__q` (quality score >=
+    * minQuality). `curated` is a filter of it (the quality conjunct
+    * pushes below the join when nothing caches the frame) and the
+    * three post-input funnel counts are one per-language aggregate
+    * over it.
+    *
+    * With `cache`, the survivors are cached: they feed three
+    * consumers in two SQL executions (the signature branch, run by the
+    * verifier's eager candidate count; the verifier's doc side and the
+    * join, inside the frame's execution). release() frees them and the
+    * verifier's caches. */
+  private def scored(docs: DataFrame, jaccardTau: Double,
+                     minQuality: Double, cache: Boolean): Dedup.Releasable = {
     // exact dedup survivors in ONE shuffle (min_by(struct), no
     // agg+join-back — the keep-set is corpus-sized at scale, that
     // join could never broadcast)
-    val uniq = maybeCache(Dedup.exactKeep(docs, "doc_id", "text"), cacheUniq)
-    // near-dup: drop the larger id of every >= tau candidate pair.
-    // signature branch is map-only (MinHashSig); the verifier derives
-    // shingles AFTER the candidate restriction (jaccardText) — no
+    val uniq0 = Dedup.exactKeep(docs, "doc_id", "text")
+    val uniq = if (cache) uniq0.cache() else uniq0
+    // near-dup: the larger id of every >= tau candidate pair.
+    // signature branch is map-only (MinHashSig); the verifier builds
+    // shingle sets AFTER the candidate restriction (jaccardText) — no
     // stage of the funnel explodes a corpus-wide n-gram relation
     val sig = Dedup.minHashText(uniq, "doc_id", "text", 3, 16)
     val cand = Dedup.candidatePairs(
       Dedup.lshBands(sig, "doc_id", n = 16, rowsPerBand = 4), "doc_id")
-    // releasable handle: jaccard's internal pair/candidate-shingle caches are
-    // freed by Stages.unpersist together with the stage frames — no
-    // cached partitions outlive a funnel()/run() call
     val jh = Dedup.jaccardTextReleasable(cand, uniq, "doc_id", "text", 3)
     val dupIds = jh.df
       .filter(col("jaccard") >= jaccardTau)
-      .select(col("id_b").as("doc_id")).distinct()
-    val deduped = maybeCache(uniq.join(dupIds, Seq("doc_id"), "left_anti"),
-      cacheDeduped)
-    // quality gate
-    val curated = deduped.filter(
-      TextOps.qualityScore(col("text"), Stopwords) >= minQuality)
-    Stages(uniq, deduped, curated, jh.release)
+      .select(col("id_b").as("doc_id"), lit(true).as("__dup")).distinct()
+    val frame = uniq.join(dupIds, Seq("doc_id"), "left")
+      .withColumn("__keep", col("__dup").isNull)
+      .withColumn("__q", TextOps.qualityScore(col("text"), Stopwords) >= minQuality)
+      .drop("__dup")
+    Dedup.Releasable(frame, () => { uniq.unpersist(); jh.release() })
   }
+
+  private def curated(frame: DataFrame): DataFrame =
+    frame.filter(col("__keep") && col("__q")).drop("__keep", "__q")
 
   /** Curated documents after the three gates (single-consumer lineage:
     * no caching needed — one pass end to end). */
   def curate(docs: DataFrame, jaccardTau: Double = 0.7,
              minQuality: Double = 0.5): DataFrame =
-    stages(docs, jaccardTau, minQuality,
-      cacheUniq = false, cacheDeduped = false).curated
+    curated(scored(docs, jaccardTau, minQuality, cache = false).df)
 
-  /** [[curate]] with the exact-dedup survivor frame CACHED and a
-    * release handle (r17): the "single-consumer lineage" note on
-    * curate is true of the STAGE SEQUENCE but not of `uniq` inside
-    * the near-dup stage — the signature branch, the verifier's doc
-    * side, and the left_anti join each re-evaluate the exactKeep
-    * shuffle's map side (three identical corpus scans + exchanges;
-    * exchange reuse cannot fire because the three consumers prune
-    * different columns below it). Callers that materialize curated
-    * ONCE (q177's leafCache) pay the recompute with no cache to
-    * show for it; this form caches `uniq` alone (`deduped` really is
-    * single-consumer) and hands back release() to call the moment the
-    * caller's materialization is done. Results identical to curate()
-    * — only storage/evaluation strategy differs. */
+  /** [[curate]] with the survivors cached (the count gate and the
+    * frame's execution then share one exactKeep shuffle) and a release
+    * handle: call release() the moment the caller's materialization of
+    * the curated frame is done (q177's leafCache), so no cached
+    * partitions outlive it. Results identical to curate(). */
   def curateReleasable(docs: DataFrame, jaccardTau: Double = 0.7,
                        minQuality: Double = 0.5): Dedup.Releasable = {
-    val st = stages(docs, jaccardTau, minQuality,
-      cacheUniq = true, cacheDeduped = false)
-    Dedup.Releasable(st.curated, () => st.unpersist())
+    val s = scored(docs, jaccardTau, minQuality, cache = true)
+    Dedup.Releasable(curated(s.df), s.release)
   }
 
-  private def funnelFrame(docs: DataFrame, st: Stages): DataFrame = {
-    def stage(df: DataFrame, name: String) =
-      df.groupBy("lang").agg(count(lit(1)).as(name))
-    stage(docs, "n_input")
-      .join(stage(st.uniq, "n_exact"), Seq("lang"), "left")
-      .join(stage(st.deduped, "n_neardup"), Seq("lang"), "left")
-      .join(stage(st.curated, "n_quality"), Seq("lang"), "left")
+  /** Per-language funnel over the scored frame: the input count per
+    * language joined to ONE aggregate (survivors, kept, kept and
+    * quality-passed). */
+  private def funnelFrame(docs: DataFrame, frame: DataFrame): DataFrame =
+    docs.groupBy("lang").agg(count(lit(1)).as("n_input"))
+      .join(frame.groupBy("lang").agg(
+        count(lit(1)).as("n_exact"),
+        count_if(col("__keep")).as("n_neardup"),
+        count_if(col("__keep") && col("__q")).as("n_quality")), Seq("lang"), "left")
       .select(col("lang"),
         col("n_input"),
         coalesce(col("n_exact"), lit(0L)).as("n_exact"),
         coalesce(col("n_neardup"), lit(0L)).as("n_neardup"),
         coalesce(col("n_quality"), lit(0L)).as("n_quality"))
       .orderBy("lang")
-  }
 
   /** Per-language funnel: input / after-exact / after-neardup /
-    * after-quality counts (the verified composition surface). Stage
-    * frames are cached during computation: every stage count re-reads
-    * its predecessor — without the caches each count re-runs the
-    * whole upstream dedup (measured ~4x the wall time). The counts
-    * are materialized HERE
+    * after-quality counts (the verified composition surface), one
+    * aggregate over the scored frame. The counts are materialized HERE
     * (bounded: one row per language) so the caches can be released
-    * before returning — no cached partitions outlive the call. At
-    * cluster scale these become checkpoints/tables between stages. */
+    * before returning — no cached partitions outlive the call. */
   def funnel(docs: DataFrame, jaccardTau: Double = 0.7,
              minQuality: Double = 0.5): DataFrame = {
-    val st = stages(docs, jaccardTau, minQuality,
-      cacheUniq = true, cacheDeduped = true)
+    val s = scored(docs, jaccardTau, minQuality, cache = true)
     try {
-      val out = funnelFrame(docs, st)
+      val out = funnelFrame(docs, s.df)
       val rows = out.collect() // one row per language — driver-safe
       docs.sparkSession.createDataFrame(
         java.util.Arrays.asList(rows: _*), out.schema)
-    } finally st.unpersist()
+    } finally s.release()
   }
 
   /** Run end-to-end: write the curated corpus and the funnel stats —
-    * BOTH derived from one cached pipeline (a second stages() pass
-    * would recompute the entire dedup), released on exit. */
+    * BOTH derived from the one scored frame, cached here because it
+    * has two consumers (the curated write fills the cache, the funnel
+    * reads it); every cache is released on exit. */
   def run(spark: SparkSession, docs: DataFrame, outDir: String): Unit = {
-    val st = stages(docs, jaccardTau = 0.7, minQuality = 0.5,
-      cacheUniq = true, cacheDeduped = true)
+    val s = scored(docs, jaccardTau = 0.7, minQuality = 0.5, cache = true)
+    val frame = s.df.cache()
     try {
-      st.curated.write.mode("overwrite").parquet(s"$outDir/curated")
-      funnelFrame(docs, st).write.mode("overwrite").parquet(s"$outDir/funnel")
-    } finally st.unpersist()
+      curated(frame).write.mode("overwrite").parquet(s"$outDir/curated")
+      funnelFrame(docs, frame).write.mode("overwrite").parquet(s"$outDir/funnel")
+    } finally { frame.unpersist(); s.release() }
   }
 }

@@ -60,24 +60,65 @@ class DedupSpec extends SparkSpec {
 
   test("jaccardText (docs-fed, candidate-first shingles) == jaccard over corpus shingles") {
     // restriction and explode must commute: the docs-fed form shingles
-    // ONLY colliding docs, but the verified relation must be
-    // bit-identical to shingling the whole corpus first — on the real
-    // fixture corpus, not just the tiny inline frame
+    // ONLY colliding docs, in-row, but the verified relation must be
+    // identical to the exploded words-fed verifier over the whole
+    // corpus's shingles — on the real fixture corpus, not just the
+    // tiny inline frame. The pairs carry an extra column, as
+    // nearDupStream's `bid` does: Row equality is positional, so the
+    // column order (id_b, id_a, bid, n_inter, n_a, n_b, jaccard) is
+    // pinned too.
     val corpus = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
     val cand = Dedup.candidatePairs(
       Dedup.lshBands(Dedup.minHashText(corpus, "doc_id", "text", 3, 16),
         "doc_id", 16, 4), "doc_id")
+      .withColumn("bid", col("id_b") * 10 + 1)
     val want = Dedup.jaccardScoped(
       cand, Dedup.shingleSet(corpus, "doc_id", "text", 3), "doc_id") { j =>
       j.collect().toSet
     }
-    val got = Dedup.jaccardTextScoped(cand, corpus, "doc_id", "text", 3) { j =>
+    // the same identities the text verifier hashes, exploded
+    val hashed = Dedup.jaccardScoped(cand,
+      DedupReference.shingleHashSetDistinct(corpus, "doc_id", "text", 3), "doc_id") { j =>
       j.collect().toSet
     }
-    assert(got.nonEmpty && got == want)
+    val got = Dedup.jaccardTextScoped(cand, corpus, "doc_id", "text", 3) { j =>
+      assert(j.columns.toSeq ==
+        Seq("id_b", "id_a", "bid", "n_inter", "n_a", "n_b", "jaccard"))
+      j.collect().toSet
+    }
+    assert(got.nonEmpty && got == want && got == hashed)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "jaccardTextScoped must unpersist its internal caches on exit")
+  }
+
+  test("same-id contract guard: rejects one id with two texts, passes the fixture corpus") {
+    val key = "graft.dedup.assertContract"
+    val prev = sys.props.get(key)
+    sys.props(key) = "1"
+    try {
+      val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
+      val bad = Seq((1L, "aa bb cc dd ee"), (1L, "aa bb cc dd ff"),
+        (2L, "aa bb cc dd ee")).toDF("doc_id", "text")
+      val e = intercept[IllegalArgumentException] {
+        Dedup.jaccardTextScoped(pairs, bad, "doc_id", "text", 3)(_.collect())
+      }
+      assert(e.getMessage.contains("doc_id=1 carries 2 distinct texts"), e.getMessage)
+      // a replayed row (same id, same text) is not a violation
+      val replay = Seq((1L, "aa bb cc dd ee"), (1L, "aa bb cc dd ee"),
+        (2L, "aa bb cc dd ee")).toDF("doc_id", "text")
+      val j = Dedup.jaccardTextScoped(pairs, replay, "doc_id", "text", 3)(_.collect())
+      assert(j.length == 1 && j(0).getAs[Double]("jaccard") == 1.0)
+      val corpus = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+      val cand = Dedup.candidatePairs(
+        Dedup.lshBands(Dedup.minHashText(corpus, "doc_id", "text", 3, 16),
+          "doc_id", 16, 4), "doc_id")
+      val n = Dedup.jaccardTextScoped(cand, corpus, "doc_id", "text", 3)(_.count())
+      assert(n > 0)
+    } finally prev match {
+      case Some(v) => sys.props(key) = v
+      case None => sys.props -= key
+    }
   }
 
   test("candidatePairs: degenerate bucket is dropped by the size cap") {

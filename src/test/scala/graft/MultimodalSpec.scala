@@ -7,15 +7,86 @@ class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
   test("CorpusCurationJob.run writes curated corpus consistent with its funnel") {
+    import graft.ops.dedup.Dedup
+    import graft.pipeline.CorpusCurationJob
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
     val out = java.nio.file.Files.createTempDirectory("graft_corpus").toString
-    graft.pipeline.CorpusCurationJob.run(spark, docs, out)
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    def assertNoCache(after: String): Unit =
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+        s"cached partitions outlive $after")
+    // SQL executions (roots only) per run: the verifier's candidate
+    // count plus the two writes
+    val executions = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+          if s.rootExecutionId.forall(_ == s.executionId) =>
+          executions.incrementAndGet()
+        case _ => ()
+      }
+    }
+    org.apache.spark.GraftMetricsBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      CorpusCurationJob.run(spark, docs, out)
+      org.apache.spark.GraftMetricsBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(executions.get() <= 3,
+      s"CorpusCurationJob.run took ${executions.get()} SQL executions (at most 3)")
+    assertNoCache("run")
     val curated = spark.read.parquet(s"$out/curated")
     val funnel = spark.read.parquet(s"$out/funnel")
     val fromFunnel = funnel.agg(org.apache.spark.sql.functions.sum("n_quality"))
       .head.getLong(0)
     assert(curated.count() == fromFunnel, "funnel tail must equal curated count")
     assert(curated.count() > 0 && curated.count() <= docs.count())
+
+    // the explicit composition: exactKeep -> anti-join of the words-fed
+    // jaccard >= 0.7 id_bs -> quality filter
+    val uniq = Dedup.exactKeep(docs, "doc_id", "text")
+    val cand = Dedup.candidatePairs(Dedup.lshBands(
+      Dedup.minHashText(uniq, "doc_id", "text", 3, 16), "doc_id", 16, 4), "doc_id")
+    val dupIds = Dedup.jaccardScoped(
+      cand, Dedup.shingleSet(uniq, "doc_id", "text", 3), "doc_id") { j =>
+      j.filter(col("jaccard") >= 0.7).select("id_b").collect().map(_.getLong(0)).toSet
+    }
+    assert(dupIds.nonEmpty, "the re-crawl-free fixture still has near-dups")
+    val deduped = uniq.join(dupIds.toSeq.toDF("doc_id"), Seq("doc_id"), "left_anti")
+    val want = deduped.filter(graft.ops.text.TextOps.qualityScore(
+      col("text"), CorpusCurationJob.Stopwords) >= 0.5)
+    assert(curated.columns.toSeq == want.columns.toSeq)
+    val wantRows = want.collect().toSet
+    assert(curated.collect().toSet == wantRows)
+
+    // every funnel column per language against an independent count
+    def perLang(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      df.select("lang").collect().groupBy(_.getString(0)).map { case (l, rs) =>
+        l -> rs.length.toLong }
+    val input = perLang(docs)
+    val exact = docs.select("doc_id", "text", "lang").collect()
+      .groupBy(r => Option(r.getString(1))).values
+      .map(_.minBy(_.getLong(0))).toSeq
+      .groupBy(_.getString(2)).map { case (l, rs) => l -> rs.length.toLong }
+    val near = perLang(deduped)
+    val quality = wantRows.toSeq.groupBy(_.getAs[String]("lang"))
+      .map { case (l, rs) => l -> rs.length.toLong }
+    assert(funnel.columns.toSeq ==
+      Seq("lang", "n_input", "n_exact", "n_neardup", "n_quality"))
+    val got = funnel.collect().map(r => r.getString(0) ->
+      (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
+    assert(got == input.map { case (l, n) => l ->
+      (n, exact.getOrElse(l, 0L), near.getOrElse(l, 0L), quality.getOrElse(l, 0L)) })
+
+    assert(CorpusCurationJob.funnel(docs).collect().toSeq == funnel.orderBy("lang")
+      .collect().toSeq)
+    assertNoCache("funnel")
+    val h = CorpusCurationJob.curateReleasable(docs)
+    assert(h.df.collect().toSet == wantRows)
+    h.release()
+    assertNoCache("curateReleasable(...).release()")
   }
 
   private def payloads(texts: (Long, String)*) =

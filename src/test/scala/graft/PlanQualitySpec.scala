@@ -351,6 +351,59 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
+  test("text verification: broadcast at fixture scale, shuffle regime beyond the budget, no shingle-keyed exchange") {
+    import graft.ops.dedup.Dedup
+    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+    // rows and final plan of jaccardText in one regime (the handle is
+    // released before returning)
+    def verify(broadcastCandMax: Long = 4000000L): (Seq[org.apache.spark.sql.Row], String) = {
+      val cand = Dedup.candidatePairs(Dedup.lshBands(
+        Dedup.minHashText(docs, "doc_id", "text", 3, 16), "doc_id", 16, 4), "doc_id")
+      val h = Dedup.jaccardTextReleasable(cand, docs, "doc_id", "text", 3, broadcastCandMax)
+      try {
+        val df = h.df.select("id_a", "id_b", "n_inter", "n_a", "n_b", "jaccard")
+          .orderBy("id_a", "id_b")
+        (df.collect().toSeq, df.queryExecution.executedPlan.toString)
+      } finally h.release()
+    }
+    // every hash-partitioning key of the plan; none may be a shingle
+    // (the exploded verifier keyed its membership probe on (id_b, w))
+    def shingleKeyed(p: String): Seq[String] =
+      """hashpartitioning\((.*?), \d+\)""".r.findAllMatchIn(p).map(_.group(1))
+        .filter(keys => """(^|[ (,])(w|__w[ab]?)#""".r.findFirstIn(keys).isDefined).toSeq
+    val (rowsBroadcast, pBroadcast) = verify()
+    assert(rowsBroadcast.nonEmpty)
+    assert(pBroadcast.contains("BroadcastHashJoin"),
+      s"the candidate semi-join must broadcast at fixture scale:\n${pBroadcast.take(1200)}")
+    assert(shingleKeyed(pBroadcast).isEmpty,
+      s"shingle-keyed exchange: ${shingleKeyed(pBroadcast)}\n${pBroadcast.take(1200)}")
+    // over the budget: the count gate drops the candidate hint, the -1
+    // thresholds keep the planner/AQE from broadcasting anything
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val prevAqe =
+      scala.util.Try(spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold"))
+        .toOption.filter(_ != null)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    spark.catalog.clearCache()
+    try {
+      val (rowsShuffle, pShuffle) = verify(broadcastCandMax = 0L)
+      assert(pShuffle.contains("SortMergeJoin") || pShuffle.contains("ShuffledHashJoin"),
+        s"over-budget regime must shuffle-join:\n${pShuffle.take(1000)}")
+      assert(!pShuffle.contains("BroadcastHashJoin"),
+        s"candidate gate must drop the broadcast hint over budget:\n${pShuffle.take(1000)}")
+      assert(shingleKeyed(pShuffle).isEmpty,
+        s"shingle-keyed exchange: ${shingleKeyed(pShuffle)}\n${pShuffle.take(2000)}")
+      assert(rowsShuffle == rowsBroadcast, "both regimes must agree exactly")
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      prevAqe match {
+        case Some(v) => spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
+        case None => spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+      }
+    }
+  }
+
   test("decontamination probes a broadcast benchmark index (corpus never shuffles n-grams)") {
     val p = plan(QueryCatalogCuration.q104Decontaminate(spark, "/root/testdata/sf0.001"))
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"),
