@@ -304,24 +304,37 @@ object Dedup {
     * or [[jaccardReleasable]] (a caller-release handle mirroring
     * ConnectedComponents.release) instead of this plan-only form. */
   def jaccard(pairs: DataFrame, words: DataFrame, idCol: String,
-              broadcastCandMax: Long = 4000000L,
+              broadcastCandMax: Long = BroadcastCandMax,
               candCount: Option[Long] = None): DataFrame =
     jaccardReleasable(pairs, words, idCol, broadcastCandMax, candCount).df
+
+  /** Default broadcast budget of the verifiers' candidate-id gate
+    * ([[candidateSide]]): the most distinct ids hinted as a broadcast. */
+  val BroadcastCandMax: Long = 4000000L
 
   /** A frame paired with a release() that frees the internal caches
     * backing it (mirrors [[ConnectedComponents.release]]). Call
     * release only AFTER the frame's consumers have run their actions:
     * the caches are part of the frame's execution, not an optional
     * speedup — releasing early re-evaluates the whole upstream
-    * pipeline per consumer. */
-  final case class Releasable(df: DataFrame, release: () => Unit)
+    * pipeline per consumer.
+    *
+    * `candBroadcast`: the verifier's candidate-id gate
+    * ([[candidateSide]]) proved the distinct candidate ids within
+    * `broadcastCandMax` and hinted their broadcast. Every id column of
+    * the verified frame is a subset of those ids, so a consumer may
+    * broadcast any id set drawn from it on the same verdict, decided
+    * at plan time with no count of its own. False over the budget and
+    * on handles that carry no verifier. */
+  final case class Releasable(df: DataFrame, release: () => Unit,
+                              candBroadcast: Boolean = false)
 
   /** [[jaccard]] with deterministic cache release: the returned
     * handle's release() unpersists the pair and posting-list caches
     * NOW instead of at session end — the scoped-release discipline
     * long-lived sessions need between corpus passes. */
   def jaccardReleasable(pairs: DataFrame, words: DataFrame, idCol: String,
-                        broadcastCandMax: Long = 4000000L,
+                        broadcastCandMax: Long = BroadcastCandMax,
                         candCount: Option[Long] = None): Releasable = {
     // the pair list feeds THREE consumers (candidate ids, the n_inter
     // restriction, the final anchor) and is itself the output of the
@@ -330,7 +343,7 @@ object Dedup {
     // pipeline re-evaluated per consumer). At cluster scale this is a
     // checkpoint between the candidate and verification stages.
     val p = pairs.cache()
-    val candSide = candidateSide(p, idCol, broadcastCandMax, candCount)
+    val (candSide, hinted) = candidateSide(p, idCol, broadcastCandMax, candCount)
     // candidate-restricted DISTINCT (id, w): the set semantics
     // Jaccard needs (the corpus-wide relation may arrive as a
     // multiset — shingleSet is map-only, no corpus-wide distinct
@@ -339,7 +352,7 @@ object Dedup {
     // probes of the intersection join (released via the handle).
     val cw = words.join(candSide, idCol).distinct().cache()
     Releasable(jaccardCore(p, cw, idCol),
-      () => { p.unpersist(false); cw.unpersist(false) })
+      () => { p.unpersist(false); cw.unpersist(false) }, hinted)
   }
 
   /** [[jaccardReleasable]] fed DOCUMENTS instead of a pre-exploded
@@ -374,13 +387,14 @@ object Dedup {
     * their pairs (inner joins), as there. Output columns: id_b, id_a,
     * <any other pair columns>, n_inter, n_a, n_b, jaccard. Same eager
     * candidate count as [[jaccard]]; release() frees the pair and
-    * set caches. */
+    * set caches, and the handle's `candBroadcast` carries the count
+    * gate's verdict ([[Releasable]]). */
   def jaccardTextReleasable(pairs: DataFrame, docs: DataFrame, idCol: String,
                             textCol: String, k: Int = 3,
-                            broadcastCandMax: Long = 4000000L,
+                            broadcastCandMax: Long = BroadcastCandMax,
                             candCount: Option[Long] = None): Releasable = {
     val p = pairs.cache()
-    val candSide = candidateSide(p, idCol, broadcastCandMax, candCount)
+    val (candSide, hinted) = candidateSide(p, idCol, broadcastCandMax, candCount)
     // row-level distinct FIRST: a replayed/duplicated document (same
     // (id, text) row twice — the streaming replay case) must collapse,
     // or its pairs would join twice. Contract note: an id carried by
@@ -408,7 +422,7 @@ object Dedup {
       .drop("__wa", "__wb")
       .withColumn("jaccard",
         col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
-    Releasable(df, () => { p.unpersist(false); sets.unpersist(false) })
+    Releasable(df, () => { p.unpersist(false); sets.unpersist(false) }, hinted)
   }
 
   /** Opt-in debug guard (`-Dgraft.dedup.assertContract=1`) for the
@@ -433,7 +447,7 @@ object Dedup {
     * caches in a finally. */
   def jaccardTextScoped[A](pairs: DataFrame, docs: DataFrame, idCol: String,
                            textCol: String, k: Int = 3,
-                           broadcastCandMax: Long = 4000000L,
+                           broadcastCandMax: Long = BroadcastCandMax,
                            candCount: Option[Long] = None)
                           (use: DataFrame => A): A = {
     val h = jaccardTextReleasable(pairs, docs, idCol, textCol, k,
@@ -448,14 +462,18 @@ object Dedup {
     * broadcast of a corpus-order set is a driver OOM. The count is
     * one cheap job over the already-cached pair frame; over the
     * budget, the hint is dropped and the planner/AQE picks the join
-    * (shuffle at scale). */
+    * (shuffle at scale). Returns the id frame and the verdict (true =
+    * hinted); the verifiers surface the verdict as
+    * [[Releasable]]`.candBroadcast`, so a consumer of any subset of
+    * these ids (CorpusCurationJob's flag join) plans its own
+    * broadcast from it without another count. */
   private def candidateSide(p: DataFrame, idCol: String,
                             broadcastCandMax: Long,
-                            candCount: Option[Long]): DataFrame = {
+                            candCount: Option[Long]): (DataFrame, Boolean) = {
     val candIds = p
       .select(explode(array(col("id_a"), col("id_b"))).as(idCol)).distinct()
-    val nCand = candCount.getOrElse(candIds.count())
-    if (nCand <= broadcastCandMax) broadcast(candIds) else candIds
+    val small = candCount.getOrElse(candIds.count()) <= broadcastCandMax
+    (if (small) broadcast(candIds) else candIds, small)
   }
 
   /** The pair-anchored verifier over a cached candidate-restricted
@@ -486,7 +504,7 @@ object Dedup {
     * no cached partitions outlive the call, matching the
     * CorpusCurationJob.funnel discipline. */
   def jaccardScoped[A](pairs: DataFrame, words: DataFrame, idCol: String,
-                       broadcastCandMax: Long = 4000000L,
+                       broadcastCandMax: Long = BroadcastCandMax,
                        candCount: Option[Long] = None)(use: DataFrame => A): A = {
     val h = jaccardReleasable(pairs, words, idCol, broadcastCandMax, candCount)
     try use(h.df) finally h.release()

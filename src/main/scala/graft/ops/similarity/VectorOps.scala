@@ -53,15 +53,11 @@ object VectorOps {
 
   /** Sequential-fold dot product of two float-array columns in double.
     * Native codegen'd expression (graft.functions.DotProduct) — same
-    * fold order as the HOF form below, but stays in WholeStageCodegen. */
+    * fold order as the interpreted `aggregate(zip_with(...))` form it
+    * replaced (the spec-side reference `VectorReference.dotHof`), but
+    * stays in WholeStageCodegen. */
   def dot(a: Column, b: Column): Column =
     graft.functions.DotProduct.dot(a, b)
-
-  /** Composable higher-order-function formulation (interpreted; kept
-    * as the semantic reference the native expression must match). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -166,15 +162,10 @@ object VectorOps {
     * codegen'd expression as [[dot]] (r17): the HOF fold form ran
     * interpreted per element N × m × ksub times per Lloyd round in
     * [[pqCodes]]/[[kmeansCells]], the hottest scalar of every k-means
-    * build. Identical left-to-right fold, bit-identical doubles. */
+    * build. Identical left-to-right fold, bit-identical doubles (the
+    * spec-side reference `VectorReference.dotHof` spells that fold). */
   def dotD(a: Column, b: Column): Column =
     graft.functions.DotProduct.dot(a, b)
-
-  /** The interpreted HOF fold [[dotD]] replaced (kept as the semantic
-    * reference the native expression must match — see dotHof). */
-  def dotDHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 
   /** The m contiguous double subvectors of `embCol`, as one array
     * column to posexplode into (mi, sv) rows — STATICALLY unrolled
@@ -486,10 +477,11 @@ object VectorOps {
     * vector — routed through the native codegen'd [[dotD]] expression
     * (r17, same move as the dotD/assignCells hot loops): identical
     * left-to-right fold and cast order as the interpreted
-    * `aggregate(zip_with(...))` spelling it replaced ([[dotDHof]] is
-    * the semantic reference), so scores are bit-identical doubles.
-    * Shared by the one-bundle-row and sharded assignment paths so
-    * their score expressions stay structurally identical. The outer
+    * `aggregate(zip_with(...))` spelling it replaced (the spec-side
+    * `VectorReference.dotHof` is the semantic reference), so scores
+    * are bit-identical doubles. Shared by the one-bundle-row and
+    * sharded assignment paths so their score expressions stay
+    * structurally identical. The outer
     * transform/argmax folds remain Catalyst HOFs (they iterate index
     * metadata — nSuper or a super's cells — per row); the O(dims)
     * inner product they evaluate per entry is what moved to a native

@@ -27,19 +27,18 @@ object CorpusCurationJob {
   val Stopwords: Seq[String] = Seq("the", "a")
 
   /** The whole funnel as ONE frame: every exact-dedup survivor (the
-    * `uniq` rows, doc_id first as the USING join puts it) left-joined
-    * to the verified near-dup ids, plus two booleans — `__keep` (not
-    * the larger id of a >= tau pair) and `__q` (quality score >=
-    * minQuality). `curated` is a filter of it (the quality conjunct
-    * pushes below the join when nothing caches the frame) and the
-    * three post-input funnel counts are one per-language aggregate
-    * over it.
+    * `uniq` rows, doc_id first as the USING join puts it) flagged by
+    * [[flagged]] — `__keep` (not the larger id of a >= tau pair) —
+    * plus `__q` (quality score >= minQuality). `curated` is a filter
+    * of it (the quality conjunct pushes below the join when nothing
+    * caches the frame) and the three post-input funnel counts are one
+    * per-language aggregate over it.
     *
     * With `cache`, the survivors are cached: they feed three
     * consumers in two SQL executions (the signature branch, run by the
     * verifier's eager candidate count; the verifier's doc side and the
-    * join, inside the frame's execution). release() frees them and the
-    * verifier's caches. */
+    * flag join, inside the frame's execution). release() frees them
+    * and the verifier's caches. */
   private def scored(docs: DataFrame, jaccardTau: Double,
                      minQuality: Double, cache: Boolean): Dedup.Releasable = {
     // exact dedup survivors in ONE shuffle (min_by(struct), no
@@ -55,14 +54,27 @@ object CorpusCurationJob {
     val cand = Dedup.candidatePairs(
       Dedup.lshBands(sig, "doc_id", n = 16, rowsPerBand = 4), "doc_id")
     val jh = Dedup.jaccardTextReleasable(cand, uniq, "doc_id", "text", 3)
+    val frame = flagged(uniq, jh, jaccardTau)
+      .withColumn("__q", TextOps.qualityScore(col("text"), Stopwords) >= minQuality)
+    Dedup.Releasable(frame, () => { uniq.unpersist(); jh.release() })
+  }
+
+  /** The survivors left-joined to the verified near-dup ids (the
+    * `id_b` of every pair of `jh` with jaccard >= tau), flagged
+    * `__keep` where the id is not one of them. The dup ids are a
+    * subset of the verifier's candidate ids, so when its count gate
+    * hinted those (`jh.candBroadcast`) the dup ids are hinted too: the
+    * survivors stream through a broadcast hash join and never cross a
+    * doc_id exchange. Over the budget nothing is hinted and the
+    * planner picks the join, as for the verifier itself. */
+  private[graft] def flagged(uniq: DataFrame, jh: Dedup.Releasable,
+                             jaccardTau: Double): DataFrame = {
     val dupIds = jh.df
       .filter(col("jaccard") >= jaccardTau)
       .select(col("id_b").as("doc_id"), lit(true).as("__dup")).distinct()
-    val frame = uniq.join(dupIds, Seq("doc_id"), "left")
+    uniq.join(if (jh.candBroadcast) broadcast(dupIds) else dupIds, Seq("doc_id"), "left")
       .withColumn("__keep", col("__dup").isNull)
-      .withColumn("__q", TextOps.qualityScore(col("text"), Stopwords) >= minQuality)
       .drop("__dup")
-    Dedup.Releasable(frame, () => { uniq.unpersist(); jh.release() })
   }
 
   private def curated(frame: DataFrame): DataFrame =
@@ -85,21 +97,26 @@ object CorpusCurationJob {
     Dedup.Releasable(curated(s.df), s.release)
   }
 
-  /** Per-language funnel over the scored frame: the input count per
-    * language joined to ONE aggregate (survivors, kept, kept and
-    * quality-passed). */
-  private def funnelFrame(docs: DataFrame, frame: DataFrame): DataFrame =
-    docs.groupBy("lang").agg(count(lit(1)).as("n_input"))
-      .join(frame.groupBy("lang").agg(
-        count(lit(1)).as("n_exact"),
-        count_if(col("__keep")).as("n_neardup"),
-        count_if(col("__keep") && col("__q")).as("n_quality")), Seq("lang"), "left")
-      .select(col("lang"),
-        col("n_input"),
-        coalesce(col("n_exact"), lit(0L)).as("n_exact"),
-        coalesce(col("n_neardup"), lit(0L)).as("n_neardup"),
-        coalesce(col("n_quality"), lit(0L)).as("n_quality"))
-      .orderBy("lang")
+  /** Per-language funnel over the scored frame as ONE aggregate: the
+    * input rows unioned with the survivors whose lang is not null,
+    * counted per language with `count_if` (input, survivors, kept,
+    * kept and quality-passed). A null lang counts its input rows only
+    * and reads 0 in the three later columns. One row per language, so
+    * the rows are ordered inside one partition (no range exchange and
+    * no sampling job). */
+  private def funnelFrame(docs: DataFrame, frame: DataFrame): DataFrame = {
+    val survivor = !col("__in")
+    docs.select(col("lang"), lit(true).as("__in"), lit(false).as("__keep"),
+        lit(false).as("__q"))
+      .unionByName(frame.filter(col("lang").isNotNull)
+        .select(col("lang"), lit(false).as("__in"), col("__keep"), col("__q")))
+      .groupBy("lang").agg(
+        count_if(col("__in")).as("n_input"),
+        count_if(survivor).as("n_exact"),
+        count_if(survivor && col("__keep")).as("n_neardup"),
+        count_if(survivor && col("__keep") && col("__q")).as("n_quality"))
+      .coalesce(1).sortWithinPartitions("lang")
+  }
 
   /** Per-language funnel: input / after-exact / after-neardup /
     * after-quality counts (the verified composition surface), one
@@ -120,7 +137,11 @@ object CorpusCurationJob {
   /** Run end-to-end: write the curated corpus and the funnel stats —
     * BOTH derived from the one scored frame, cached here because it
     * has two consumers (the curated write fills the cache, the funnel
-    * reads it); every cache is released on exit. */
+    * reads it); every cache is released on exit. Three SQL executions:
+    * the verifier's candidate count and the two writes. Within the
+    * candidate budget the curated write exchanges the survivors only
+    * by content hash (exactKeep) — the flag join is a broadcast — and
+    * the funnel write is one aggregate with no sort job. */
   def run(spark: SparkSession, docs: DataFrame, outDir: String): Unit = {
     val s = scored(docs, jaccardTau = 0.7, minQuality = 0.5, cache = true)
     val frame = s.df.cache()

@@ -404,9 +404,14 @@ object StreamingJobs {
           .select(col("id_b").as("doc_id")).distinct()
         // 4. novel docs -> curated corpus; their bands -> store.
         // batch_id-partitioned dynamic overwrite = replay idempotence
-        // (see the scaladoc retry note)
+        // (see the scaladoc retry note). Every dropped id is a batch
+        // doc_id, so the batch's row count bounds the drop set; within
+        // the verifiers' candidate budget it is broadcast and the batch
+        // streams through the anti-join without an exchange
+        val drop = dupIds.unionByName(intra).distinct()
+        val small = cachedRows(batch).exists(_ <= Dedup.BroadcastCandMax)
         val novel = batch
-          .join(dupIds.unionByName(intra).distinct(), Seq("doc_id"), "left_anti")
+          .join(if (small) broadcast(drop) else drop, Seq("doc_id"), "left_anti")
           .cache()
         val dyn = Map("partitionOverwriteMode" -> "dynamic")
         novel.withColumn("batch_id", lit(batchId))
@@ -427,6 +432,19 @@ object StreamingJobs {
         ()
       }
       .start()
+
+  /** Row count of a cached frame whose cache is filled, read from the
+    * cached relation's statistics (no job); None while the cache is
+    * unfilled or the frame is not cached. nearDupStream's batch is
+    * filled by the verifiers' eager candidate counts (their pipelines
+    * scan it) before its anti-join is planned. */
+  private def cachedRows(df: DataFrame): Option[Long] =
+    df.select(df.columns.map(col): _*).queryExecution.optimizedPlan match {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation
+          if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+        r.stats.rowCount.map(_.toLong)
+      case _ => None
+    }
 
   /** Streaming duplicate-CLUSTER maintenance — the label-table face
     * of [[nearDupStream]]: every doc is admitted and a standing

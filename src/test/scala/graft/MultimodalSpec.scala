@@ -6,8 +6,61 @@ import graft.ops.multimodal.MultimodalOps
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
-  test("CorpusCurationJob.run writes curated corpus consistent with its funnel") {
+  // the explicit composition CorpusCurationJob spells: exactKeep ->
+  // anti-join of the words-fed jaccard >= 0.7 id_bs -> quality filter.
+  // Returns (dup ids, near-dup survivors, curated rows).
+  private def composition(docs: org.apache.spark.sql.DataFrame)
+      : (Set[Long], org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import graft.ops.dedup.Dedup
+    val uniq = Dedup.exactKeep(docs, "doc_id", "text")
+    val cand = Dedup.candidatePairs(Dedup.lshBands(
+      Dedup.minHashText(uniq, "doc_id", "text", 3, 16), "doc_id", 16, 4), "doc_id")
+    val dupIds = Dedup.jaccardScoped(
+      cand, Dedup.shingleSet(uniq, "doc_id", "text", 3), "doc_id") { j =>
+      j.filter(col("jaccard") >= 0.7).select("id_b").collect().map(_.getLong(0)).toSet
+    }
+    val deduped = uniq.join(dupIds.toSeq.toDF("doc_id"), Seq("doc_id"), "left_anti")
+    val want = deduped.filter(graft.ops.text.TextOps.qualityScore(
+      col("text"), graft.pipeline.CorpusCurationJob.Stopwords) >= 0.5)
+    (dupIds, deduped, want)
+  }
+
+  // the funnel rows counted on the driver from the composition, in the
+  // funnel's order (lang ascending, null first); a null lang counts its
+  // input only, as the funnel's contract says
+  private def independentFunnel(docs: org.apache.spark.sql.DataFrame,
+                                deduped: org.apache.spark.sql.DataFrame,
+                                want: org.apache.spark.sql.DataFrame)
+      : Seq[(String, Long, Long, Long, Long)] = {
+    def perLang(rows: Seq[org.apache.spark.sql.Row]): Map[String, Long] =
+      rows.groupBy(_.getAs[String]("lang")).map { case (l, rs) => l -> rs.length.toLong }
+    val all = docs.select("doc_id", "text", "lang").collect().toSeq
+    val input = perLang(all)
+    val exact = perLang(all.groupBy(r => Option(r.getString(1))).values
+      .map(_.minBy(_.getLong(0))).toSeq)
+    val near = perLang(deduped.collect().toSeq)
+    val quality = perLang(want.collect().toSeq)
+    def later(m: Map[String, Long], l: String) = if (l == null) 0L else m.getOrElse(l, 0L)
+    input.keys.toSeq.sortBy(Option(_)).map(l =>
+      (l, input(l), later(exact, l), later(near, l), later(quality, l)))
+  }
+
+  private def funnelRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().toSeq.map(r =>
+      (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+
+  // the same-id = same-doc guard of the text verifier, on for `body`
+  private def withContractGuard[A](body: => A): A = {
+    val key = "graft.dedup.assertContract"
+    val prev = sys.props.get(key)
+    sys.props(key) = "1"
+    try body finally prev match {
+      case Some(v) => sys.props(key) = v
+      case None => sys.props -= key
+    }
+  }
+
+  test("CorpusCurationJob.run writes curated corpus consistent with its funnel") {
     import graft.pipeline.CorpusCurationJob
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
     val out = java.nio.file.Files.createTempDirectory("graft_corpus").toString
@@ -37,56 +90,74 @@ class MultimodalSpec extends SparkSpec {
     assert(executions.get() <= 3,
       s"CorpusCurationJob.run took ${executions.get()} SQL executions (at most 3)")
     assertNoCache("run")
-    val curated = spark.read.parquet(s"$out/curated")
-    val funnel = spark.read.parquet(s"$out/funnel")
-    val fromFunnel = funnel.agg(org.apache.spark.sql.functions.sum("n_quality"))
-      .head.getLong(0)
-    assert(curated.count() == fromFunnel, "funnel tail must equal curated count")
-    assert(curated.count() > 0 && curated.count() <= docs.count())
+    // the same pipeline again with the verifier's same-id contract
+    // guard on (one more eager aggregation per verify call, so it stays
+    // out of the execution count above): the fixture corpus passes it,
+    // and every check below reads this guarded run
+    withContractGuard {
+      CorpusCurationJob.run(spark, docs, out)
+      assertNoCache("run (contract guard on)")
+      val curated = spark.read.parquet(s"$out/curated")
+      val funnel = spark.read.parquet(s"$out/funnel")
+      val fromFunnel = funnel.agg(org.apache.spark.sql.functions.sum("n_quality"))
+        .head.getLong(0)
+      assert(curated.count() == fromFunnel, "funnel tail must equal curated count")
+      assert(curated.count() > 0 && curated.count() <= docs.count())
 
-    // the explicit composition: exactKeep -> anti-join of the words-fed
-    // jaccard >= 0.7 id_bs -> quality filter
-    val uniq = Dedup.exactKeep(docs, "doc_id", "text")
-    val cand = Dedup.candidatePairs(Dedup.lshBands(
-      Dedup.minHashText(uniq, "doc_id", "text", 3, 16), "doc_id", 16, 4), "doc_id")
-    val dupIds = Dedup.jaccardScoped(
-      cand, Dedup.shingleSet(uniq, "doc_id", "text", 3), "doc_id") { j =>
-      j.filter(col("jaccard") >= 0.7).select("id_b").collect().map(_.getLong(0)).toSet
+      val (dupIds, deduped, want) = composition(docs)
+      assert(dupIds.nonEmpty, "the re-crawl-free fixture still has near-dups")
+      assert(curated.columns.toSeq == want.columns.toSeq)
+      val wantRows = want.collect().toSet
+      assert(curated.collect().toSet == wantRows)
+
+      // every funnel column per language against an independent count
+      assert(funnel.columns.toSeq ==
+        Seq("lang", "n_input", "n_exact", "n_neardup", "n_quality"))
+      assert(funnelRows(funnel).toSet == independentFunnel(docs, deduped, want).toSet)
+
+      assert(CorpusCurationJob.funnel(docs).collect().toSeq == funnel.orderBy("lang")
+        .collect().toSeq)
+      assertNoCache("funnel")
+      val h = CorpusCurationJob.curateReleasable(docs)
+      assert(h.df.collect().toSet == wantRows)
+      h.release()
+      assertNoCache("curateReleasable(...).release()")
     }
-    assert(dupIds.nonEmpty, "the re-crawl-free fixture still has near-dups")
-    val deduped = uniq.join(dupIds.toSeq.toDF("doc_id"), Seq("doc_id"), "left_anti")
-    val want = deduped.filter(graft.ops.text.TextOps.qualityScore(
-      col("text"), CorpusCurationJob.Stopwords) >= 0.5)
-    assert(curated.columns.toSeq == want.columns.toSeq)
-    val wantRows = want.collect().toSet
-    assert(curated.collect().toSet == wantRows)
+  }
 
-    // every funnel column per language against an independent count
-    def perLang(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
-      df.select("lang").collect().groupBy(_.getString(0)).map { case (l, rs) =>
-        l -> rs.length.toLong }
-    val input = perLang(docs)
-    val exact = docs.select("doc_id", "text", "lang").collect()
-      .groupBy(r => Option(r.getString(1))).values
-      .map(_.minBy(_.getLong(0))).toSeq
-      .groupBy(_.getString(2)).map { case (l, rs) => l -> rs.length.toLong }
-    val near = perLang(deduped)
-    val quality = wantRows.toSeq.groupBy(_.getAs[String]("lang"))
-      .map { case (l, rs) => l -> rs.length.toLong }
-    assert(funnel.columns.toSeq ==
-      Seq("lang", "n_input", "n_exact", "n_neardup", "n_quality"))
-    val got = funnel.collect().map(r => r.getString(0) ->
-      (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    assert(got == input.map { case (l, n) => l ->
-      (n, exact.getOrElse(l, 0L), near.getOrElse(l, 0L), quality.getOrElse(l, 0L)) })
-
-    assert(CorpusCurationJob.funnel(docs).collect().toSeq == funnel.orderBy("lang")
-      .collect().toSeq)
-    assertNoCache("funnel")
-    val h = CorpusCurationJob.curateReleasable(docs)
-    assert(h.df.collect().toSet == wantRows)
-    h.release()
-    assertNoCache("curateReleasable(...).release()")
+  test("CorpusCurationJob funnel: a null-lang doc and a language whose every doc is dropped") {
+    import graft.pipeline.CorpusCurationJob
+    val base = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+    val texts = base.filter(col("doc_id") < 3).orderBy("doc_id")
+      .select("text").collect().map(_.getString(0))
+    val fresh = (0 until 60).map(i => s"w$i").mkString(" ")
+    def doc(id: Long, text: String, lang: String) =
+      (id, text, lang, "src0", text.length.toLong)
+    val extra = Seq(
+      // null lang: one unique survivor, one exact copy of doc 0
+      doc(10001L, fresh, null), doc(10002L, texts(0), null),
+      // "xx": both docs are exact copies of lower ids, dropped at exact
+      doc(10003L, texts(1), "xx"), doc(10004L, texts(2), "xx"),
+      // "yy": a near copy of doc 1 and a short stopword-free doc,
+      // dropped at near-dup and at quality
+      doc(10005L, texts(1) + " dup", "yy"), doc(10006L, "qz qy qx", "yy"))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val docs = base.unionByName(extra)
+    val (_, deduped, want) = composition(docs)
+    val expected = independentFunnel(docs, deduped, want)
+    assert(expected.head == ((null, 2L, 0L, 0L, 0L)), expected.head)
+    assert(expected.exists(_ == (("xx", 2L, 0L, 0L, 0L))), expected)
+    assert(expected.exists(_ == (("yy", 2L, 2L, 1L, 0L))), expected)
+    spark.catalog.clearCache()
+    val direct = CorpusCurationJob.funnel(docs)
+    assert(direct.schema.fields.map(f => (f.name, f.dataType.simpleString, f.nullable)).toSeq ==
+      Seq(("lang", "string", true), ("n_input", "bigint", false),
+        ("n_exact", "bigint", false), ("n_neardup", "bigint", false),
+        ("n_quality", "bigint", false)))
+    assert(funnelRows(direct) == expected)
+    val out = java.nio.file.Files.createTempDirectory("graft_funnel_edges").toString
+    CorpusCurationJob.run(spark, docs, out)
+    assert(funnelRows(spark.read.parquet(s"$out/funnel")) == expected)
   }
 
   private def payloads(texts: (Long, String)*) =

@@ -12,7 +12,7 @@ class VectorGeoSpec extends SparkSpec {
     val vecs = (0 until 50).map(_ => (Array.fill(64)(rng.nextFloat()), Array.fill(64)(rng.nextFloat())))
       .toDF("a", "b")
     val rows = vecs.select(VectorOps.dot(col("a"), col("b")).as("native"),
-      VectorOps.dotHof(col("a"), col("b")).as("hof")).collect()
+      VectorReference.dotHof(col("a"), col("b")).as("hof")).collect()
     rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1), "fold order must match exactly"))
   }
 
