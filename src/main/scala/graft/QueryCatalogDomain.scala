@@ -474,15 +474,11 @@ object QueryCatalogDomain {
   /** q65's body over caller-supplied source tables (see
     * [[q62FarrowingFrom]]). */
   private[graft] def q65ScheduleBmEuFrom(s: SparkSession, modonSrc: DataFrame,
-                                         modonWkSrc: DataFrame,
-                                         latestWk: Option[DataFrame] = None): DataFrame = {
+                                         modonWkSrc: DataFrame): DataFrame = {
     val preg = 115; val wean = 21
     val md = modonSrc.filter(col("use_yn") === "Y" && col("out_dt") === Codes.AliveOutDt)
-    // latestWk: the report runner's shared seq-latest frame
-    // (WeeklyReportJob.sharedLatestWk); None computes inline.
-    val latest = latestWk.getOrElse(
-      LatestRecord.viaAgg(modonWkSrc.filter(col("use_yn") === "Y"),
-        keys = Seq("farm_no", "pig_no"), ord = Seq("seq")))
+    val latest = LatestRecord.viaAgg(modonWkSrc.filter(col("use_yn") === "Y"),
+      keys = Seq("farm_no", "pig_no"), ord = Seq("seq"))
     // both reference branches in ONE pass over the latest-record
     // frame (the q64 fold rationale: the lazy bm/euB pair re-executed
     // the LatestRecord aggregation over the full modon_wk fact twice;

@@ -21,16 +21,12 @@ object QueryCatalogDomain2 {
   private def statusCohort(s: SparkSession): DataFrame =
     statusCohortFrom(Fixtures.modonDf(s), Fixtures.modonWkDf(s))
 
-  private def statusCohortFrom(modonSrc: DataFrame, modonWkSrc: DataFrame,
-                               lastWk: Option[DataFrame] = None): DataFrame = {
+  private def statusCohortFrom(modonSrc: DataFrame, modonWkSrc: DataFrame): DataFrame = {
     val twoYearsAgo = ymdD(BaseDate, 730)
     val wkf = modonWkSrc
       .filter(col("use_yn") === "Y" && col("wk_dt") <= BaseDate && col("wk_gubun") =!= "Z")
-    // lastWk: the report runner's shared latest-record frame
-    // (WeeklyReportJob.sharedLastWk — identical viaAgg over the
-    // identical filter); None computes inline.
-    val last = lastWk.getOrElse(LatestRecord.viaAgg(wkf,
-        keys = Seq("farm_no", "pig_no"), ord = Seq("wk_dt", "seq")))
+    val last = LatestRecord.viaAgg(wkf,
+        keys = Seq("farm_no", "pig_no"), ord = Seq("wk_dt", "seq"))
       .select(col("farm_no"), col("pig_no"), col("wk_gubun"), col("sago_gubun_cd"),
         col("daeri_yn"), col("sancha").as("wk_sancha"))
     modonSrc
@@ -70,10 +66,9 @@ object QueryCatalogDomain2 {
   /** q67's body over caller-supplied core tables (single-farm scoping
     * contract — see cullingChunkedFrom). */
   private[graft] def parityStatusFrom(s: SparkSession, modonSrc: DataFrame,
-                                      modonWkSrc: DataFrame,
-                                      lastWk: Option[DataFrame] = None): DataFrame = {
+                                      modonWkSrc: DataFrame): DataFrame = {
     val parities = (1, "HUBO") +: (2 to 10).map(n => (n, if (n == 10) "P8UP" else s"P${n - 2}"))
-    val cohort = statusCohortFrom(modonSrc, modonWkSrc, lastWk)
+    val cohort = statusCohortFrom(modonSrc, modonWkSrc)
       .withColumn("sancha_eff",
         when(col("wk_gubun").isNotNull,
           when(col("wk_sancha").isNotNull && col("wk_sancha") =!= 0, col("wk_sancha"))

@@ -52,19 +52,14 @@ object QueryCatalogDomain3 {
     * scale run feeds parquet-backed facts through the SAME
     * implementation the fixture hash gate verifies. */
   private[graft] def q75AlertsFrom(s: SparkSession, modonSrc: DataFrame,
-                                   modonWkSrc: DataFrame,
-                                   lastWk: Option[DataFrame] = None): DataFrame = {
+                                   modonWkSrc: DataFrame): DataFrame = {
     val base = DateOps.ymdToDate(lit(BaseDate))
     val alive = modonSrc
       .filter(col("use_yn") === "Y" && col("out_dt") === Codes.AliveOutDt)
-    // lastWk: the report runner's SHARED latest-record frame
-    // (WeeklyReportJob.sharedLastWk — the identical viaAgg over the
-    // identical filter), materialized once per report instead of once
-    // per section; None (every standalone caller) computes inline.
-    val last = lastWk.getOrElse(LatestRecord.viaAgg(
+    val last = LatestRecord.viaAgg(
       modonWkSrc
         .filter(col("use_yn") === "Y" && col("wk_dt") <= BaseDate && col("wk_gubun") =!= "Z"),
-      keys = Seq("farm_no", "pig_no"), ord = Seq("wk_dt", "seq")))
+      keys = Seq("farm_no", "pig_no"), ord = Seq("wk_dt", "seq"))
       .select(col("farm_no"), col("pig_no"), col("wk_dt"), col("wk_gubun"),
         col("sago_gubun_cd"), col("daeri_yn"))
     val j = alive.join(last, Seq("farm_no", "pig_no"), "left")
@@ -681,13 +676,10 @@ object QueryCatalogDomain3 {
     * [[q75AlertsFrom]]). */
   private[graft] def q83ConfigScheduleFrom(s: SparkSession, modonSrc: DataFrame,
                                            modonWkSrc: DataFrame,
-                                           farmConfigSrc: DataFrame,
-                                           latestWk: Option[DataFrame] = None): DataFrame = {
-    // latestWk: the report runner's shared seq-latest frame
-    // (WeeklyReportJob.sharedLatestWk); None computes inline.
-    val latest = latestWk.getOrElse(LatestRecord.viaAgg(
+                                           farmConfigSrc: DataFrame): DataFrame = {
+    val latest = LatestRecord.viaAgg(
       modonWkSrc.filter(col("use_yn") === "Y"),
-      keys = Seq("farm_no", "pig_no"), ord = Seq("seq")))
+      keys = Seq("farm_no", "pig_no"), ord = Seq("seq"))
       .filter(col("wk_gubun") === "G")
       .select(col("farm_no"), col("pig_no"), col("wk_dt").as("mate_dt"))
     val alive = modonSrc

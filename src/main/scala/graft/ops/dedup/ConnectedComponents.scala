@@ -2,6 +2,7 @@ package graft.ops.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize
 
 /** Connected components over an undirected edge list by min-label
   * propagation — the canonical FINAL stage of a MinHash/LSH dedup
@@ -49,19 +50,6 @@ object ConnectedComponents {
     * and their storage released as soon as the successor exists —
     * lineage stays one superstep deep, so no stack-overflow plans on
     * long chains. */
-  /** Materialize into a plan LEAF with releasable storage: an EAGER
-    * localCheckpoint — downstream plans see a leaf (no re-analysis of
-    * the whole upstream tree per superstep) backed by stored
-    * InternalRow copies. The earlier form rebuilt the frame from
-    * `df.rdd` + createDataFrame, which pays the external-Row codec
-    * BOTH ways (deserialize every row to Row, re-encode to unsafe)
-    * on every superstep; the checkpoint stores the unsafe rows as
-    * they are. Superseded supersteps are freed eagerly via
-    * `release` instead of pinning blocks until some future driver GC
-    * lets ContextCleaner run. */
-  private def leafCache(df: DataFrame): DataFrame =
-    graft.ops.Materialize.leafCache(df)
-
   /** Free a leafCache'd frame's stored blocks NOW (delegates to the
     * shared [[graft.ops.Materialize.release]]). The checkpointed RDD
     * sits behind the plan's LogicalRDD leaf; its lineage is
@@ -122,7 +110,7 @@ object ConnectedComponents {
     // detection) and its upstream is often a whole LSH/verification
     // pipeline: evaluate it ONCE into a leaf, release after both
     // eager consumers below have run (the q177 discipline)
-    val ne = graft.ops.Materialize.leafCache(
+    val ne = Materialize.leafCache(
       newEdges.select(col("id_a"), col("id_b")))
     val la = labels.select(col("id").as("id_a"), col("component").as("__ca"))
     val lb = labels.select(col("id").as("id_b"), col("component").as("__cb"))
@@ -189,13 +177,13 @@ object ConnectedComponents {
     // up driver planning and memory — the leaf keeps every
     // superstep's plan two nodes deep, and the superseded superstep
     // is released as soon as its successor is materialized.
-    var labels = leafCache(und.groupBy(col("u").as("id"))
+    var labels = Materialize.leafCache(und.groupBy(col("u").as("id"))
       .agg(min(col("v")).as("component")))
     var prevSum = sumOf(labels)
     var it = 0
     var converged = false
     while (!converged && it < maxIter) {
-      val next = leafCache(und
+      val next = Materialize.leafCache(und
         .join(labels.select(col("id").as("v"), col("component")), "v")
         .groupBy(col("u").as("id")).agg(min(col("component")).as("component")))
       val s = sumOf(next) // next is already materialized (eager checkpoint)
@@ -250,8 +238,8 @@ object ConnectedComponents {
     // vertices whose only edges are self-loops must still be labeled
     // (minLabel emits them; parity matters for callers switching
     // between the two) — captured BEFORE the self-loop filter
-    var e = leafCache(canon.filter(col("lo") =!= col("hi")).distinct())
-    val selfOnly = leafCache(canon.select(col("lo").as("id")).distinct()
+    var e = Materialize.leafCache(canon.filter(col("lo") =!= col("hi")).distinct())
+    val selfOnly = Materialize.leafCache(canon.select(col("lo").as("id")).distinct()
       .join(e.select(explode(array(col("lo"), col("hi"))).as("id")).distinct(),
         Seq("id"), "left_anti")
       .select(col("id"), col("id").as("component")))
@@ -279,7 +267,7 @@ object ConnectedComponents {
     var it = 0
     var converged = false
     while (!converged && it < maxIter) {
-      val next = leafCache(smallStar(largeStar(e)))
+      val next = Materialize.leafCache(smallStar(largeStar(e)))
       converged = next.count() == e.count() &&
         next.except(e).limit(1).count() == 0
       release(e)
@@ -297,7 +285,7 @@ object ConnectedComponents {
     // materialize the result as its own leaf so the final round's
     // star edges and the selfOnly side frame can be freed NOW — the
     // caller holds exactly one persisted RDD (released via release())
-    val result = leafCache(members.unionByName(centers).unionByName(selfOnly))
+    val result = Materialize.leafCache(members.unionByName(centers).unionByName(selfOnly))
     release(e)
     release(selfOnly)
     result

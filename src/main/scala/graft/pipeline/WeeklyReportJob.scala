@@ -13,7 +13,7 @@ import graft.sinks.Sinks
   * transforms keyed by farm_no, unioned into the TS_INS_WEEK_SUB wide
   * schema (docs/db/ins/02_TABLE.md:409-441), and the per-section
   * UPDATE dance (base.py:148-178) collapses into one summary row per
-  * farm assembled by joins before a single write.
+  * farm rolled up from the written SUB rows.
   */
 object WeeklyReportJob {
 
@@ -75,53 +75,22 @@ object WeeklyReportJob {
   def subRows(spark: SparkSession): DataFrame =
     subRowsFrom(spark, DomainSources.fixtures(spark))
 
-  /** The latest-modon_wk frame shared by the ALERT and MODON (parity
-    * crosstab) sections — the (wk_dt ≤ BaseDate, wk_gubun ≠ 'Z')
-    * latest record per (farm_no, pig_no) both compute with an
-    * IDENTICAL viaAgg over an identical filter. Built here so the
-    * report runner can materialize it ONCE per report
-    * ([[graft.ops.Materialize.leafCache]]) and hand it to both
-    * sections instead of aggregating the full modon_wk fact per
-    * section (the plans show zero exchange reuse between the union's
-    * branches — 45 Exchanges, 0 ReusedExchange at r16 HEAD). */
-  def sharedLastWk(src: DomainSources): DataFrame =
-    graft.ops.LatestRecord.viaAgg(
-      src.modonWk.filter(col("use_yn") === "Y" &&
-        col("wk_dt") <= graft.domain.Fixtures.BaseDate &&
-        col("wk_gubun") =!= "Z"),
-      keys = Seq("farm_no", "pig_no"), ord = Seq("wk_dt", "seq"))
-
-  /** The seq-latest modon_wk frame shared by the CONFIG section and
-    * the summary's plan leg (q83/q65 — same viaAgg, use_yn-only
-    * filter, seq order). */
-  def sharedLatestWk(src: DomainSources): DataFrame =
-    graft.ops.LatestRecord.viaAgg(
-      src.modonWk.filter(col("use_yn") === "Y"),
-      keys = Seq("farm_no", "pig_no"), ord = Seq("seq"))
-
   /** [[subRows]] over caller-supplied source tables — the identical
     * ten-section composition the fixture gate verifies, driven by the
-    * scale harness over parquet-backed facts at 50k farms.
-    *
-    * `lastWk` / `latestWk`: precomputed shared latest-record frames
-    * ([[sharedLastWk]]/[[sharedLatestWk]], normally leafCache'd by the
-    * caller — see [[runReport]]'s shareLatest); None (the default, and
-    * the declared q82/q120 form) keeps every section self-contained so
-    * a top-level farm predicate still pushes through the whole union
-    * to the scans. */
-  def subRowsFrom(spark: SparkSession, src: DomainSources,
-                  lastWk: Option[DataFrame] = None,
-                  latestWk: Option[DataFrame] = None): DataFrame = {
+    * scale harness over parquet-backed facts at 50k farms. Every
+    * section is self-contained, so a top-level farm predicate pushes
+    * through the whole union to the scans (q120). */
+  def subRowsFrom(spark: SparkSession, src: DomainSources): DataFrame = {
     def rnBy(ord: Column*): Column =
       row_number().over(Window.partitionBy(col("farm_no")).orderBy(ord: _*))
     val cfg = conform(QueryCatalogDomain3.q83ConfigScheduleFrom(spark,
-      src.modon, src.modonWk, src.farmConfig, latestWk), Map(
+      src.modon, src.modonWk, src.farmConfig), Map(
       "farm_no" -> col("farm_no"), "gubun" -> lit("CONFIG"), "sub_gubun" -> lit("SCHED"),
       "sort_no" -> rnBy(col("pig_no")), "code_1" -> col("pig_no"),
       "cnt_1" -> col("preg_used").cast("double"),
       "str_1" -> col("mate_dt"), "str_2" -> col("pass_dt")))
     val alert = conform(QueryCatalogDomain3.q75AlertsFrom(spark,
-      src.modon, src.modonWk, lastWk), Map(
+      src.modon, src.modonWk), Map(
       "farm_no" -> col("farm_no"), "gubun" -> lit("ALERT"), "sub_gubun" -> lit("MATRIX"),
       "sort_no" -> rnBy(col("alert_type")), "code_1" -> col("alert_type"),
       "cnt_1" -> col("d3").cast("double"), "cnt_2" -> col("d7").cast("double"),
@@ -160,7 +129,7 @@ object WeeklyReportJob {
       "sort_no" -> rnBy(col("pass_dt")), "code_1" -> DateOps.dateToYmd(col("pass_dt")),
       "cnt_1" -> col("n").cast("double")))
     val modon = modonConform(
-      QueryCatalogDomain2.parityStatusFrom(spark, src.modon, src.modonWk, lastWk))
+      QueryCatalogDomain2.parityStatusFrom(spark, src.modon, src.modonWk))
     val gbChart = gbConform(
       QueryCatalogDomain2.returnBucketsFrom(spark, src.modon, src.modonWk))
     val dopeList = dopeConform(QueryCatalogDomain2.cullingChunkedFrom(src.modon))
@@ -222,60 +191,56 @@ object WeeklyReportJob {
       .reduce(_ unionByName _)
   }
 
-  /** One summary row per farm: ALL TEN section aggregates joined,
-    * replacing the reference's ten UPDATE statements (S6,
+  /** One summary row per farm: the rollup of ALL TEN sections' SUB
+    * rows, replacing the reference's ten UPDATE statements (S6,
     * base.py:148-178; processor set async_processor.py:170-192).
     * Count columns coalesce to 0 for farms a section never saw;
     * averages stay NULL (the reference's NULL-vs-0 distinction). */
   def summary(spark: SparkSession): DataFrame =
     summaryFrom(spark, DomainSources.fixtures(spark))
 
-  /** [[summary]] over caller-supplied source tables (see
-    * [[subRowsFrom]], including the shared latest-frame params). */
-  def summaryFrom(spark: SparkSession, src: DomainSources,
-                  lastWk: Option[DataFrame] = None,
-                  latestWk: Option[DataFrame] = None): DataFrame = {
-    val bm = QueryCatalogDomain.q62FarrowingFrom(spark, src.bunman, src.trans)
-      .select(col("farm_no"), col("total_cnt").as("bm_cnt"),
-        col("sum_live").as("bm_live"), col("avg_live").as("bm_avg_live"),
-        col("sum_pogae").as("bm_pogae"))
-    val eu = QueryCatalogDomain.q63WeaningFrom(spark, src.modonWk, src.bunman,
-        src.eu, src.trans)
-      .select(col("farm_no"), col("total_cnt").as("eu_cnt"),
-        col("sum_eudusu").as("eu_dusu"), col("avg_pougigan").as("eu_avg_days"))
-    val sow = QueryCatalogDomain2.parityStatusFrom(spark, src.modon, src.modonWk, lastWk)
-      .groupBy("farm_no")
-      .agg(sum(col("hubo") + col("imsin") + col("poyu") + col("eumo") + col("sago"))
-        .cast("long").as("sow_total"))
-    val gbRet = QueryCatalogDomain2.returnBucketsFrom(spark, src.modon, src.modonWk)
-      .groupBy("farm_no").agg(sum(col("cnt")).cast("long").as("gb_return_cnt"))
-    val sched = QueryCatalogDomain.q64ScheduleMatingFrom(spark, src.modon, src.modonWk)
-      .groupBy("farm_no").agg(sum(col("n")).cast("long").as("gb_plan"))
-    val alert = QueryCatalogDomain3.q75AlertsFrom(spark, src.modon, src.modonWk, lastWk)
-      .groupBy("farm_no")
-      .agg(sum(col("d3") + col("d7") + col("d14") + col("d15up"))
-        .cast("long").as("alert_cnt"))
-    val cullCells = (1 to 15).map(i => col(s"cnt_$i")).reduce(_ + _)
-    val cullMonthCells = (1 to 15).map(i => col(s"val_$i")).reduce(_ + _)
-    val cull = QueryCatalogDomain2.cullingChunkedFrom(src.modon)
-      .groupBy("farm_no")
-      .agg(sum(cullCells).cast("long").as("cull_week"),
-        sum(cullMonthCells).cast("long").as("cull_month"))
-    val acc = QueryCatalogDomain3.q81AccidentAsOfFrom(spark, src.modonWk)
-      .groupBy("farm_no")
-      .agg(sum(col("cnt")).cast("long").as("acc_cnt"),
-        sum(col("sum_days")).cast("long").as("acc_days"))
-    val ship = QueryCatalogDomain2.shipmentDailyFrom(spark, src.lpd)
-      .groupBy("farm_no").agg(sum(col("cnt")).cast("long").as("ship_cnt"))
-    val cfg = QueryCatalogDomain3.q83ConfigScheduleFrom(spark, src.modon,
-        src.modonWk, src.farmConfig, latestWk)
-      .groupBy("farm_no").agg(count(lit(1)).as("cfg_sched_cnt"))
-    val plan = QueryCatalogDomain.q65ScheduleBmEuFrom(spark, src.modon,
-        src.modonWk, latestWk)
+  /** [[summary]] over caller-supplied source tables: [[summaryOf]] over
+    * the lazy [[subRowsFrom]] frame. */
+  def summaryFrom(spark: SparkSession, src: DomainSources): DataFrame =
+    summaryOf(subRowsFrom(spark, src), src)
+
+  /** The summary as one conditional aggregate over the SUB rows `sub`
+    * (the lazy [[subRowsFrom]] frame, or the written week_sub read
+    * back): each reference processor updates its TS_INS_WEEK columns
+    * from the numbers it just wrote to TS_INS_WEEK_SUB (base.py:90-146,
+    * :148-178), so every column but plan_cnt is a cell of some
+    * section's rows. The farms are those with MODON rows (every modon
+    * farm has ten); plan_cnt is q65's leg over `src`. BM and EU have
+    * one row per farm, so their averages are that row's cell, and a
+    * farm without one keeps NULL. */
+  def summaryOf(sub: DataFrame, src: DomainSources): DataFrame = {
+    def cells(gubun: String, cs: Seq[String]): Column =
+      when(col("gubun") === gubun, cs.map(col).reduce(_ + _))
+    def total(gubun: String, cs: String*): Column = sum(cells(gubun, cs)).cast("long")
+    def nums(kind: String, n: Int): Seq[String] = (1 to n).map(i => s"${kind}_$i")
+    def rows(gubun: String): Column = count(when(col("gubun") === gubun, 1))
+    val rolled = sub.groupBy("farm_no").agg(
+        rows("MODON").as("modon_rows"),
+        total("MODON", nums("cnt", 5): _*).as("sow_total"),
+        total("BM", "cnt_1").as("bm_cnt"), total("BM", "cnt_3").as("bm_live"),
+        max(cells("BM", Seq("val_2"))).as("bm_avg_live"),
+        total("BM", "cnt_8").as("bm_pogae"),
+        total("EU", "cnt_1").as("eu_cnt"), total("EU", "cnt_2").as("eu_dusu"),
+        max(cells("EU", Seq("val_3"))).as("eu_avg_days"),
+        total("GB", "cnt_1").as("gb_return_cnt"),
+        total("SCHED", "cnt_1").as("gb_plan"),
+        total("ALERT", nums("cnt", 4): _*).as("alert_cnt"),
+        total("DOPE", nums("cnt", 15): _*).as("cull_week"),
+        total("DOPE", nums("val", 15): _*).as("cull_month"),
+        total("SAGO", "cnt_1").as("acc_cnt"), total("SAGO", "cnt_2").as("acc_days"),
+        total("SHIP", "cnt_1").as("ship_cnt"),
+        rows("CONFIG").as("cfg_sched_cnt"))
+      .filter(col("modon_rows") > 0)
+    val plan = QueryCatalogDomain.q65ScheduleBmEuFrom(sub.sparkSession, src.modon,
+        src.modonWk)
       .groupBy("farm_no").agg(sum(col("n")).cast("long").as("plan_cnt"))
     def z(c: String): Column = coalesce(col(c), lit(0L)).as(c)
-    Seq(bm, eu, gbRet, sched, alert, cull, acc, ship, cfg, plan)
-      .foldLeft(sow)((acc0, df) => acc0.join(df, Seq("farm_no"), "left"))
+    rolled.join(plan, Seq("farm_no"), "left")
       .select(col("farm_no"), col("sow_total"),
         z("bm_cnt"), z("bm_live"), col("bm_avg_live"), z("bm_pogae"),
         z("eu_cnt"), z("eu_dusu"), col("eu_avg_days"),
@@ -354,58 +319,25 @@ object WeeklyReportJob {
         "error_cnt", "elapsed_sec")
   }
 
-  /** Run the whole report and write both outputs (SUB rows partition-
-    * overwritten by gubun — the reference's delete-section-then-insert
-    * becomes partition replacement). */
+  /** Run the whole report and write both outputs (see [[runReport]]). */
   def run(spark: SparkSession, outDir: String): Unit =
     runReport(spark, DomainSources.fixtures(spark), outDir)
 
   /** [[run]] over caller-supplied sources — the deployment entry for
-    * the full weekly product (both compositions over one source
-    * bundle).
-    *
-    * `cacheHotFacts = true` wraps the configuration the round-15
-    * leafCache A/B measured as the composed-product win: `modon` and
-    * `modon_wk` — the two fact frames nearly every section scans, ~10
-    * scans of modon_wk per report run — are materialized ONCE
-    * ([[graft.ops.Materialize.leafCache]]) and released when both
-    * writes finish. Measured at 50k farms: sub_sched −73% and
-    * week_sub −32% inside the composition, but SINGLE-scan sections
-    * pay the full-width read without amortizing (sub_plan ran +66%
-    * WORSE standalone) — which is why this is an opt-in on the
-    * composed report runner, not a default inside the sections.
-    * Results are digest-identical either way (the A/B gate +
-    * WeeklyReportJobSpec pin it). Cluster durability caveat: leafCache
-    * is localCheckpoint — see [[graft.ops.Materialize]]. */
-  /** `shareLatest = true` additionally materializes the two shared
-    * latest-modon_wk frames ONCE for the whole report
-    * ([[sharedLastWk]]/[[sharedLatestWk]] via leafCache) and hands
-    * them to the four sections that otherwise each re-aggregate the
-    * full modon_wk fact (ALERT + MODON in the SUB rows; those two
-    * plus CONFIG + plan in the summary) — released with the hot-fact
-    * caches when both writes finish. Digest-identical either way
-    * (WeeklyDecade sharedlatest= A/B gates it). */
-  def runReport(spark: SparkSession, src: DomainSources, outDir: String,
-                cacheHotFacts: Boolean = false,
-                shareLatest: Boolean = false): Unit = {
-    val (eff, cached0) =
-      if (cacheHotFacts) {
-        val m = graft.ops.Materialize.leafCache(src.modon)
-        val w = graft.ops.Materialize.leafCache(src.modonWk)
-        (src.copy(modon = m, modonWk = w), Seq(m, w))
-      } else (src, Seq.empty[DataFrame])
-    val (lastWk, latestWk, cached) =
-      if (shareLatest) {
-        val a = graft.ops.Materialize.leafCache(sharedLastWk(eff))
-        val b = graft.ops.Materialize.leafCache(sharedLatestWk(eff))
-        (Some(a), Some(b), cached0 ++ Seq(a, b))
-      } else (None, None, cached0)
-    try {
-      Sinks.overwritePartitions(subRowsFrom(spark, eff, lastWk, latestWk),
-        s"$outDir/week_sub", Seq("gubun"))
-      summaryFrom(spark, eff, lastWk, latestWk).write.mode("overwrite")
-        .parquet(s"$outDir/week_summary")
-    } finally cached.foreach(graft.ops.Materialize.release)
+    * the full weekly product. The ten sections run once: their SUB
+    * rows are written to `week_sub` (partitioned by gubun), and the
+    * summary is [[summaryOf]] those rows read back, so it sums exactly
+    * what was written. The SUB write is a static overwrite of the
+    * whole table: every section's partition is replaced, including
+    * one a rerun leaves empty — the reference deletes each section
+    * before inserting it (S5), and a stale partition would otherwise
+    * survive into the summary. */
+  def runReport(spark: SparkSession, src: DomainSources, outDir: String): Unit = {
+    subRowsFrom(spark, src).write.mode("overwrite")
+      .option("partitionOverwriteMode", "static")
+      .partitionBy("gubun").parquet(s"$outDir/week_sub")
+    summaryOf(spark.read.parquet(s"$outDir/week_sub"), src)
+      .write.mode("overwrite").parquet(s"$outDir/week_summary")
   }
 
   /** ONE chained week step: compute week `wn`'s per-farm farrowing

@@ -373,18 +373,18 @@ object StreamingJobs {
                 greatest(col("sid"), col("bid")).as("id_b"),
                 col("bid"))
               .distinct()
-            // verify candidates with exact shingle Jaccard: batch text
-            // + ONLY the collided store docs' text (semi-join
-            // readback); shingles derive AFTER the candidate
-            // restriction inside jaccardText
-            // schema pinned like the store read: the curated dir can
+            // verify candidates with exact shingle Jaccard over batch
+            // text + store text: the verifier's own candidate-id
+            // semi-join (broadcast within its gate) pushes through the
+            // union onto the curated scan, so only the candidate store
+            // docs are read on; shingles derive AFTER that restriction.
+            // Schema pinned like the store read: the curated dir can
             // be exists-but-empty after stacked crashes, and this
             // read is analyzed even when coll is empty
             val storeDocs = spark.read
               .schema(batch.schema.add("batch_id",
                 org.apache.spark.sql.types.LongType))
               .parquet(curatedDir)
-              .join(coll.select(col("sid").as("doc_id")).distinct(), "doc_id", "left_semi")
             val corpusDocs = storeDocs.select("doc_id", "text")
               .unionByName(batch.select("doc_id", "text"))
             val jh = Dedup.jaccardTextReleasable(cand, corpusDocs, "doc_id", "text", 3)
@@ -560,13 +560,13 @@ object StreamingJobs {
             releases += (() => coll.unpersist(false))
             // explicit schema again: with the bands store crashed
             // empty, the texts dir can be exists-but-empty too, and
-            // this read is ANALYZED even when coll is empty
+            // this read is ANALYZED even when coll is empty. The
+            // verifier's candidate semi-join restricts it to the
+            // candidate docs (see nearDupStream's read-back)
             val storeDocs = spark.read
               .schema(batch.schema.add("batch_id",
                 org.apache.spark.sql.types.LongType))
               .parquet(textDir)
-              .join(coll.select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-                .distinct(), Seq("doc_id"), "left_semi")
             val all = storeDocs.select("doc_id", "text")
               .unionByName(batch.select("doc_id", "text"))
             (intraCand.unionByName(coll).distinct(), all)

@@ -424,6 +424,13 @@ class PlanQualitySpec extends SparkSpec {
     }) && e.output.exists(_.name == "text") => e
   }
 
+  // parquet scans whose root directory is named `dirName`
+  private def fileScans(p: org.apache.spark.sql.execution.SparkPlan, dirName: String) =
+    nodes(p).collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+        if s.relation.location.rootPaths.exists(_.getName == dirName) => s
+    }
+
   // the final plans of the writes `body` runs into paths containing
   // `dir`, in order
   private def writePlans(dir: String)(body: => Unit): Seq[org.apache.spark.sql.execution.QueryExecution] = {
@@ -509,7 +516,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("near-dup stream: the micro-batch streams through a broadcast anti-join, never a doc_id exchange") {
-    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
@@ -547,9 +554,42 @@ class PlanQualitySpec extends SparkSpec {
       // its streamed side is the cached micro-batch
       anti.foreach(j => assert(docExchanges(j.left).isEmpty,
         s"the micro-batch crossed a doc_id exchange:\n${docExchanges(j.left).mkString("\n")}"))
+      // the curated read-back reaches the verifier through its
+      // candidate semi-join, never through a doc_id exchange
+      val readBack = docExchanges(p).filter(e => fileScans(e.child, "curated").nonEmpty)
+      assert(readBack.isEmpty, s"the curated corpus crossed a doc_id exchange:\n$p")
     }
+    // the second batch reads the curated corpus back through the
+    // broadcast candidate semi-join, pushed down onto the scan
+    val semi = nodes(plans(1)).collect {
+      case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
+    }
+    assert(semi.exists(j => fileScans(j.left, "curated").nonEmpty),
+      s"the candidate semi-join must sit on the curated scan:\n${plans(1)}")
     assert(spark.read.parquet(s"$dir/curated").select("doc_id").collect()
       .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 12L))
+  }
+
+  test("weekly report: the summary write rolls up the written week_sub, one modon_wk scan (the plan leg)") {
+    import graft.domain.Fixtures
+    import graft.pipeline.WeeklyReportJob
+    val facts = java.nio.file.Files.createTempDirectory("weekly_facts").toString
+    Seq("modon" -> Fixtures.modonDf(spark), "modon_wk" -> Fixtures.modonWkDf(spark),
+      "bunman" -> Fixtures.bunmanDf(spark), "eu" -> Fixtures.euDf(spark),
+      "trans" -> Fixtures.transDf(spark), "lpd" -> Fixtures.lpdDf(spark),
+      "farm_config" -> Fixtures.farmConfigDf(spark)).foreach { case (t, df) =>
+      df.write.mode("overwrite").parquet(s"$facts/$t.parquet")
+    }
+    val out = java.nio.file.Files.createTempDirectory("weekly_out").toString
+    val plans = writePlans(s"$out/week_summary") {
+      WeeklyReportJob.runReport(spark,
+        WeeklyReportJob.DomainSources.parquet(spark, facts), out)
+    }.map(_.executedPlan)
+    assert(plans.length == 1, s"one summary write, got ${plans.length}")
+    val p = plans.head
+    assert(fileScans(p, "week_sub").nonEmpty, s"the summary must read week_sub back:\n$p")
+    assert(fileScans(p, "modon_wk.parquet").length == 1,
+      s"only the plan leg may scan modon_wk:\n$p")
   }
 
   test("decontamination probes a broadcast benchmark index (corpus never shuffles n-grams)") {
