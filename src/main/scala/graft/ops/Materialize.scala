@@ -25,6 +25,23 @@ object Materialize {
   def leafCache(df: DataFrame): DataFrame =
     df.localCheckpoint(true)
 
+  /** A bound on `df`'s row count known at plan time, with no job: the
+    * optimized plan's static `maxRows` (a batch of driver-side rows, a
+    * LIMIT), otherwise the row count of a cached frame whose cache is
+    * filled, read from the cached relation's statistics. None when
+    * neither holds (an unfilled cache, a file scan): the caller counts.
+    * The frame is re-planned against the session's current cache, so
+    * a frame cached after its own plan was built reads as its cache. */
+  def rowBound(df: DataFrame): Option[Long] =
+    df.queryExecution.optimizedPlan.maxRows.orElse(
+      df.sparkSession.sessionState.executePlan(df.queryExecution.analyzed)
+        .optimizedPlan match {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation
+            if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+          r.stats.rowCount.map(_.toLong)
+        case _ => None
+      })
+
   /** Session conf key selecting [[localize]]'s cluster-scale path:
     * when set (non-empty), localize writes a staging parquet table
     * under this directory instead of collecting to the driver. */

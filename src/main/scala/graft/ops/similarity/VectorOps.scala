@@ -219,15 +219,33 @@ object VectorOps {
       element_at(col("lut"), lit(mi * ksub) + element_at(col("codes"), lit(mi + 1))))
       .reduce(_ + _)
 
-  /** The probe broadcast gate every serve path shares: may the probe
-    * batch be broadcast (at most `probeBroadcastMax` rows)? When the
-    * optimized probe plan already bounds its rows under the budget — a
-    * batch of driver-side rows, a LIMIT — that bound decides with no
-    * job; otherwise the frame is counted, one eager action. The
-    * verdict is the counted one either way (the bound caps the count). */
-  private def probeGate(probes: DataFrame, probeBroadcastMax: Long): Boolean =
-    probes.queryExecution.optimizedPlan.maxRows.exists(_ <= probeBroadcastMax) ||
-      probes.count() <= probeBroadcastMax
+  /** The probe batch every serve path plans from, with the broadcast
+    * verdict it shares: may the probe-derived sides be broadcast (at
+    * most `probeBroadcastMax` rows)?
+    *  - When [[graft.ops.Materialize.rowBound]] already bounds the
+    *    probes under the budget (a batch of driver-side rows, a LIMIT,
+    *    a filled cache: the serving shape), that bound decides with no
+    *    job, and the batch is served from ONE partition
+    *    (`coalesce(1)`). Every per-probe operator over it (the routing
+    *    top-k, the LUT aggregate, a join of the two on q_id) then finds
+    *    its q_id clustering satisfied and plans no exchange of its own.
+    *  - Otherwise the frame is counted, one eager action, and served
+    *    as it is: coalescing a counted frame (a filtered corpus scan)
+    *    would pull its whole upstream scan into one task.
+    * The verdict is the counted one either way (the bound caps the
+    * count). */
+  private def probeBatch(probes: DataFrame, probeBroadcastMax: Long): (DataFrame, Boolean) =
+    if (graft.ops.Materialize.rowBound(probes).exists(_ <= probeBroadcastMax))
+      (probes.coalesce(1), true)
+    else (probes, probes.count() <= probeBroadcastMax)
+
+  /** Join two probe-derived frames on q_id. Under the probe gate the
+    * join is hinted shuffle-hash: its sides are already clustered on
+    * q_id (one partition, or the heaps' and aggregate's own q_id
+    * exchanges), so it plans no exchange and no broadcast of its own;
+    * over the budget the planner picks the join. */
+  private def onProbe(a: DataFrame, b: DataFrame, smallProbes: Boolean): DataFrame =
+    a.join(if (smallProbes) b.hint("shuffle_hash") else b, "q_id")
 
   /** The IVF index's centroid table — the BUILD half ivfAnn used to
     * re-derive inline on every call: per-cell integer-quantized
@@ -261,7 +279,7 @@ object VectorOps {
     * — per-call compute that is corpus-LINEAR and therefore wrong at
     * serving scale; every repeated-batch deployment stores the index.
     *
-    * SERVING SHAPE: when the probe set is bounded ([[probeGate]]
+    * SERVING SHAPE: when the probe set is bounded ([[probeBatch]]
     * proves it is under `probeBroadcastMax`), the probe×cell frame
     * carries an explicit broadcast hint so the corpus-sized candidate
     * relation is restricted MAP-SIDE — the corpus never crosses the
@@ -271,6 +289,13 @@ object VectorOps {
     * the sf1→sf10 decade flipped the cell join to sort-merge and
     * shuffled the whole embedding table for 20 probes). Over the
     * budget the hint is dropped and the planner picks the join.
+    * When the probe plan's own row bound decides the gate (a batch of
+    * driver-side rows), the routing runs inside the batch's one
+    * partition: the nprobe heaps and the join back to the probe
+    * vectors plan no exchange, and the broadcast of the probe×cell
+    * frame is the probe side's only exchange. A counted probe frame
+    * keeps its partitioning, and the routing exchanges its heaps on
+    * q_id.
     *
     * `nprobe = Auto` derives the routing knob from the index via
     * [[servingKnobs]] (nprobe ≈ 10% of nlist — the measured scale
@@ -283,9 +308,10 @@ object VectorOps {
              centroids: Option[DataFrame] = None): DataFrame = {
     val cents = centroids.getOrElse(ivfCentroids(candidates, cellCol))
     val np = if (nprobe == Auto) servingKnobs(cents.count(), k)._1 else nprobe
+    val (batch, smallProbes) = probeBatch(probes, probeBroadcastMax)
     // fresh probe projection per consumer: probeCells shares lineage
     // with its own copy, avoiding the ambiguous-self-join trap
-    def p = probes.select(col("vec_id").as("q_id"), col("embedding").as("qv"),
+    def p = batch.select(col("vec_id").as("q_id"), col("embedding").as("qv"),
       norm(col("embedding")).as("qn"))
     // nprobe nearest cells per probe by centroid cosine — through the
     // bounded-heap TopKPerKey, not a window: the scored probe×cell
@@ -303,10 +329,8 @@ object VectorOps {
       col("embedding").as("cv2"), norm(col("embedding")).as("cn"))
     // probe side = probes x nprobe rows; broadcast under the probe
     // gate so the corpus side streams map-side (see scaladoc)
-    val probeSide0 = p.join(probeCells, "q_id")
-    val probeSide =
-      if (probeGate(probes, probeBroadcastMax)) broadcast(probeSide0)
-      else probeSide0
+    val probeSide0 = onProbe(probeCells, p, smallProbes)
+    val probeSide = if (smallProbes) broadcast(probeSide0) else probeSide0
     val pairs = probeSide.join(c, "cell")
       .filter(col("q_id") =!= col("c_id"))
       .withColumn("cos", cosine(col("qv"), col("cv2"), col("qn"), col("cn")))
@@ -893,10 +917,12 @@ object VectorOps {
   def pqRefinedTopK(probes: DataFrame, candidates: DataFrame, codes: DataFrame,
                     codebooks: DataFrame, idCol: String, m: Int, k: Int,
                     shortlist: Int = 50,
-                    probeBroadcastMax: Long = 10000L): DataFrame =
-    refineShortlist(probes,
-      pqAdcTopK(probes, codes, codebooks, idCol, m, shortlist).select("q_id", "c_id"),
-      candidates, idCol, k, probeGate(probes, probeBroadcastMax))
+                    probeBroadcastMax: Long = 10000L): DataFrame = {
+    val (batch, smallProbes) = probeBatch(probes, probeBroadcastMax)
+    refineShortlist(batch,
+      pqAdcTopK(batch, codes, codebooks, idCol, m, shortlist).select("q_id", "c_id"),
+      candidates, idCol, k, smallProbes)
+  }
 
   /** The exact-cosine REFINE stage shared by [[pqRefinedTopK]],
     * [[pqServeTopK]] and [[ivfPqTopK]]: re-rank the (q_id, c_id)
@@ -971,7 +997,9 @@ object VectorOps {
     * query). Same results as [[pqRefinedTopK]] over the unpacked
     * codes; the difference is the wire: this shape's bytes stay flat
     * as the corpus grows (the ScaleDecade q128_pq_serve row measures
-    * it), which is the serving posture for a standing corpus.
+    * it), which is the serving posture for a standing corpus. A batch
+    * whose row bound decides the probe gate ([[probeBatch]]) is served
+    * from one partition, so its LUT aggregate plans no exchange.
     *
     * `shortlist = Auto` applies the [[servingKnobs]] law literally:
     * flat PQ scores EVERY code, so the 20%-of-scored-set rule makes
@@ -987,10 +1015,11 @@ object VectorOps {
       if (shortlist == Auto)
         math.max(k.toLong, math.ceil(0.2 * packedCodes.count()).toLong).toInt
       else shortlist
-    refineShortlist(probes,
-      pqAdcTopKPacked(probes, packedCodes, codebooks, idCol, m, ksub, sl)
+    val (batch, smallProbes) = probeBatch(probes, probeBroadcastMax)
+    refineShortlist(batch,
+      pqAdcTopKPacked(batch, packedCodes, codebooks, idCol, m, ksub, sl)
         .select("q_id", "c_id"),
-      candidates, idCol, k, probeGate(probes, probeBroadcastMax))
+      candidates, idCol, k, smallProbes)
   }
 
   /** The FULL IVF-PQ serving stack (Jégou et al. 2011 — the index
@@ -1008,15 +1037,23 @@ object VectorOps {
     * — the cell column rides WITH the codes precisely so serving
     * never joins codes back to the corpus on the id; `centroids` is
     * the stored [[ivfCentroids]] table. All exchanges are bounded:
-    * probe routing and all three top-k's run through TopKPerKey heaps,
-    * the probe cells, LUTs, shortlist and probe vectors broadcast
-    * under the probe gate.
+    * probe routing, shortlist and refine run through TopKPerKey heaps.
+    * The probe routing and the per-probe ADC lookup tables are joined
+    * on q_id into ONE (q_id, cell, lut) frame; under the probe gate
+    * that frame, the shortlist and the probe vectors are broadcast.
     *
-    * ONE LAZY QUERY: with explicit knobs nothing runs at construction
-    * when the probe plan's row bound decides the gate (a batch of
-    * driver-side rows — the serving shape); otherwise the gate counts
-    * the probes once. The batch's single action then runs routing,
-    * ADC, shortlist and refine in one SQL execution.
+    * ONE LAZY QUERY, ONE PROBE STAGE: with explicit knobs nothing runs
+    * at construction when the probe plan's row bound decides the gate
+    * (a batch of driver-side rows — the serving shape; [[probeBatch]]).
+    * The batch is then planned in one partition, so the routing heaps,
+    * the LUT aggregate and their join need no exchange, and the
+    * (q_id, cell, lut) frame's broadcast onto the packed-code scan is
+    * the probe side's only exchange: the final plan keeps two q_id
+    * hash exchanges, the shortlist's and the refine's. A counted probe
+    * frame (no static bound) is counted once and keeps its own
+    * partitioning; its routing and LUTs then exchange on q_id and join
+    * co-partitioned. The batch's single action runs routing, ADC,
+    * shortlist and refine in one SQL execution.
     *
     * `nprobe = Auto` / `shortlist = Auto` derive the serve knobs from
     * the STORED index via [[servingKnobs]] — nprobe ≈ 10% of nlist,
@@ -1031,8 +1068,7 @@ object VectorOps {
                 codebooks: DataFrame, idCol: String, m: Int, ksub: Int,
                 k: Int, nprobe: Int = 2, shortlist: Int = 50,
                 probeBroadcastMax: Long = 10000L): DataFrame = {
-    val smallProbes = probeGate(probes, probeBroadcastMax)
-    def hint(df: DataFrame) = if (smallProbes) broadcast(df) else df
+    val (batch, smallProbes) = probeBatch(probes, probeBroadcastMax)
     val (np, sl) =
       if (nprobe == Auto || shortlist == Auto) {
         val nlist = math.max(1L, centroids.count())
@@ -1041,7 +1077,7 @@ object VectorOps {
         (if (nprobe == Auto) autoNp else nprobe,
           if (shortlist == Auto) autoSl else shortlist)
       } else (nprobe, shortlist)
-    val p = probes.select(col(idCol).as("q_id"), col("embedding").as("qv"),
+    val p = batch.select(col(idCol).as("q_id"), col("embedding").as("qv"),
       norm(col("embedding")).as("qn"))
     // probe -> nprobe cells over the STORED centroid index (the
     // ivfAnn routing: bounded heaps, never a corpus-scan derivation)
@@ -1051,18 +1087,20 @@ object VectorOps {
     val probeCells = graft.plans.TopKPerKey.topK(pc,
         Seq(col("q_id")), Seq(col("__ccos").desc, col("cell")), np)
       .select(col("q_id"), col("cell"))
-    // ADC over ONLY the probed cells' codes — both restrictions are
-    // map-side joins against broadcast probe-derived frames
+    // routing and LUTs as ONE (q_id, cell, lut) frame, joined where
+    // the probes sit; ADC then scores ONLY the probed cells' codes,
+    // restricted map-side against that one broadcast frame
+    val routed = onProbe(probeCells, probeLuts(batch, codebooks, idCol, m, ksub),
+      smallProbes)
     val scored = packedIndex
       .select(col(idCol).as("c_id"), col("cell"), col("codes"))
-      .join(hint(probeCells), "cell")
-      .join(hint(probeLuts(probes, codebooks, idCol, m, ksub)), "q_id")
+      .join(if (smallProbes) broadcast(routed) else routed, "cell")
       .filter(col("q_id") =!= col("c_id"))
       .withColumn("adci", adcSum(m, ksub))
     val short = graft.plans.TopKPerKey.topK(scored,
         Seq(col("q_id")), Seq(col("adci").desc, col("c_id")), sl)
       .select("q_id", "c_id")
-    refineShortlist(probes, short, candidates, idCol, k, smallProbes)
+    refineShortlist(batch, short, candidates, idCol, k, smallProbes)
   }
 
   /** Symmetric int8 quantization of an embedding column: per-vector
@@ -1108,11 +1146,12 @@ object VectorOps {
         norm(col("embedding")).as(nAs),
         graft.functions.LshBucketExpr.bucket(col("embedding"), signs).as("bucket"))
     }
-    val p0 = bucketed(probes, "q_id", "qv", "qn")
+    val (batch, smallProbes) = probeBatch(probes, probeBroadcastMax)
+    val p0 = bucketed(batch, "q_id", "qv", "qn")
     // probe broadcast gate (the ivfAnn serving-shape note): a
     // bounded probe side restricts the corpus MAP-SIDE; the corpus
     // never crosses the wire for a small query batch
-    val p = if (probeGate(probes, probeBroadcastMax)) broadcast(p0) else p0
+    val p = if (smallProbes) broadcast(p0) else p0
     val c = bucketed(candidates, "c_id", "cv", "cn")
     val pairs = p.join(c, Seq("bucket")).filter(col("q_id") =!= col("c_id"))
       .withColumn("cos", cosine(col("qv"), col("cv"), col("qn"), col("cn")))
@@ -1140,8 +1179,8 @@ object VectorOps {
     * the single-table bucket-size story.
     *
     * SERVING SHAPE (the ivfAnn note): with a bounded probe set
-    * ([[probeGate]] under `probeBroadcastMax`) every probe-derived side carries
-    * an explicit broadcast hint, and the candidate-id set — counted
+    * ([[probeBatch]] under `probeBroadcastMax`) every probe-derived side
+    * carries an explicit broadcast hint, and the candidate-id set — counted
     * like [[graft.ops.dedup.Dedup.jaccardReleasable]]'s, under
     * `candBroadcastMax` — restricts the corpus embedding relation
     * map-side, so the CORPUS NEVER CROSSES THE WIRE: its scan feeds
@@ -1156,14 +1195,14 @@ object VectorOps {
                   nPlanes: Int = 8, nTables: Int = 4,
                   probeBroadcastMax: Long = 10000L,
                   candBroadcastMax: Long = 4000000L): DataFrame = {
+    val (batch, smallProbes) = probeBatch(probes, probeBroadcastMax)
     // the dims probe is a driver-blocking job over each frame — run it
     // ONCE per frame here, not 2*nTables times inside lshBucket
     // (the round-6 advice: a 4-table index fired 8 redundant jobs)
-    val pDims = embeddingDims(probes)
+    val pDims = embeddingDims(batch)
     val cDims = embeddingDims(candidates)
-    val smallProbes = probeGate(probes, probeBroadcastMax)
     val candPairs0 = (0 until nTables).map { t =>
-      val pb0 = lshBucket(probes, "vec_id", nPlanes, t, pDims)
+      val pb0 = lshBucket(batch, "vec_id", nPlanes, t, pDims)
         .withColumnRenamed("vec_id", "q_id")
       val pb = if (smallProbes) broadcast(pb0) else pb0
       val cb = lshBucket(candidates, "vec_id", nPlanes, t, cDims)
@@ -1182,7 +1221,7 @@ object VectorOps {
     // cluster scale.
     val candPairs =
       if (smallProbes) graft.ops.Materialize.localize(candPairs0) else candPairs0
-    val p0 = probes.select(col("vec_id").as("q_id"), col("embedding").as("qv"),
+    val p0 = batch.select(col("vec_id").as("q_id"), col("embedding").as("qv"),
       norm(col("embedding")).as("qn"))
     val p = if (smallProbes) broadcast(p0) else p0
     val c0 = candidates.select(col("vec_id").as("c_id"), col("embedding").as("cv"),

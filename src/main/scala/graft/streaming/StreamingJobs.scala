@@ -405,11 +405,14 @@ object StreamingJobs {
         // 4. novel docs -> curated corpus; their bands -> store.
         // batch_id-partitioned dynamic overwrite = replay idempotence
         // (see the scaladoc retry note). Every dropped id is a batch
-        // doc_id, so the batch's row count bounds the drop set; within
-        // the verifiers' candidate budget it is broadcast and the batch
-        // streams through the anti-join without an exchange
+        // doc_id, so the batch's row count bounds the drop set (read
+        // with no job from the batch's cache, which the verifiers'
+        // eager candidate counts have filled); within the verifiers'
+        // candidate budget it is broadcast and the batch streams
+        // through the anti-join without an exchange
         val drop = dupIds.unionByName(intra).distinct()
-        val small = cachedRows(batch).exists(_ <= Dedup.BroadcastCandMax)
+        val small =
+          graft.ops.Materialize.rowBound(batch).exists(_ <= Dedup.BroadcastCandMax)
         val novel = batch
           .join(if (small) broadcast(drop) else drop, Seq("doc_id"), "left_anti")
           .cache()
@@ -432,19 +435,6 @@ object StreamingJobs {
         ()
       }
       .start()
-
-  /** Row count of a cached frame whose cache is filled, read from the
-    * cached relation's statistics (no job); None while the cache is
-    * unfilled or the frame is not cached. nearDupStream's batch is
-    * filled by the verifiers' eager candidate counts (their pipelines
-    * scan it) before its anti-join is planned. */
-  private def cachedRows(df: DataFrame): Option[Long] =
-    df.select(df.columns.map(col): _*).queryExecution.optimizedPlan match {
-      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation
-          if r.cacheBuilder.isCachedColumnBuffersLoaded =>
-        r.stats.rowCount.map(_.toLong)
-      case _ => None
-    }
 
   /** Streaming duplicate-CLUSTER maintenance — the label-table face
     * of [[nearDupStream]]: every doc is admitted and a standing

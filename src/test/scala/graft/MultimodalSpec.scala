@@ -49,17 +49,6 @@ class MultimodalSpec extends SparkSpec {
     df.collect().toSeq.map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
 
-  // the same-id = same-doc guard of the text verifier, on for `body`
-  private def withContractGuard[A](body: => A): A = {
-    val key = "graft.dedup.assertContract"
-    val prev = sys.props.get(key)
-    sys.props(key) = "1"
-    try body finally prev match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props -= key
-    }
-  }
-
   test("CorpusCurationJob.run writes curated corpus consistent with its funnel") {
     import graft.pipeline.CorpusCurationJob
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")

@@ -404,16 +404,6 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
-  // every node of a final plan, through AQE stages and cached plans
-  private def nodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = p +: ((p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => Seq(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-    case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-      Seq(m.relation.cachedPlan)
-    case _ => Nil
-  }) ++ p.children).flatMap(nodes)
-
   // exchanges keyed on doc_id alone that carry the text: document rows
   // crossing the wire (a dup-id set carries doc_id only)
   private def docExchanges(p: org.apache.spark.sql.execution.SparkPlan) = nodes(p).collect {
@@ -451,123 +441,127 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("curation run: survivors never cross a doc_id exchange, the funnel has no range exchange, the gate verdict rides the handle") {
-    import graft.ops.dedup.Dedup
-    import graft.pipeline.CorpusCurationJob
-    import org.apache.spark.sql.catalyst.plans.LeftOuter
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, ResolvedHint}
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+    withContractGuard {
+      import graft.ops.dedup.Dedup
+      import graft.pipeline.CorpusCurationJob
+      import org.apache.spark.sql.catalyst.plans.LeftOuter
+      import org.apache.spark.sql.catalyst.plans.logical.{Join, ResolvedHint}
+      import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+      import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+      import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+      import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+      val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
 
-    // 1. CorpusCurationJob.run: the two writes' final plans
-    val out = java.nio.file.Files.createTempDirectory("graft_curation_plan").toString
-    spark.catalog.clearCache()
-    val byDir = writePlans(out)(CorpusCurationJob.run(spark, docs, out)).map(qe =>
-      (if (qe.analyzed.toString.contains(s"$out/curated")) "curated" else "funnel") ->
-        qe.executedPlan).toMap
-    assert(byDir.keySet == Set("curated", "funnel"), s"captured writes: ${byDir.keySet}")
-    val curatedPlan = byDir("curated")
-    // not vacuous: the walk reaches the documents scan inside the
-    // cached frame and survivors
-    assert(nodes(curatedPlan).exists(_.isInstanceOf[FileSourceScanExec]),
-      s"the walk must reach the documents scan:\n$curatedPlan")
-    assert(nodes(curatedPlan).exists {
-      case j: BroadcastHashJoinExec => j.joinType == LeftOuter
-      case _ => false
-    }, s"the flag join must be a broadcast hash join:\n$curatedPlan")
-    assert(docExchanges(curatedPlan).isEmpty,
-      s"survivors crossed a doc_id exchange:\n${docExchanges(curatedPlan).mkString("\n")}")
-    val funnelNodes = nodes(byDir("funnel"))
-    assert(funnelNodes.exists(_.isInstanceOf[ShuffleExchangeLike]))
-    assert(!funnelNodes.exists {
-      case e: ShuffleExchangeLike => e.outputPartitioning.isInstanceOf[RangePartitioning]
-      case _ => false
-    }, s"the funnel must not range-partition:\n${byDir("funnel")}")
+      // 1. CorpusCurationJob.run: the two writes' final plans
+      val out = java.nio.file.Files.createTempDirectory("graft_curation_plan").toString
+      spark.catalog.clearCache()
+      val byDir = writePlans(out)(CorpusCurationJob.run(spark, docs, out)).map(qe =>
+        (if (qe.analyzed.toString.contains(s"$out/curated")) "curated" else "funnel") ->
+          qe.executedPlan).toMap
+      assert(byDir.keySet == Set("curated", "funnel"), s"captured writes: ${byDir.keySet}")
+      val curatedPlan = byDir("curated")
+      // not vacuous: the walk reaches the documents scan inside the
+      // cached frame and survivors
+      assert(nodes(curatedPlan).exists(_.isInstanceOf[FileSourceScanExec]),
+        s"the walk must reach the documents scan:\n$curatedPlan")
+      assert(nodes(curatedPlan).exists {
+        case j: BroadcastHashJoinExec => j.joinType == LeftOuter
+        case _ => false
+      }, s"the flag join must be a broadcast hash join:\n$curatedPlan")
+      assert(docExchanges(curatedPlan).isEmpty,
+        s"survivors crossed a doc_id exchange:\n${docExchanges(curatedPlan).mkString("\n")}")
+      val funnelNodes = nodes(byDir("funnel"))
+      assert(funnelNodes.exists(_.isInstanceOf[ShuffleExchangeLike]))
+      assert(!funnelNodes.exists {
+        case e: ShuffleExchangeLike => e.outputPartitioning.isInstanceOf[RangePartitioning]
+        case _ => false
+      }, s"the funnel must not range-partition:\n${byDir("funnel")}")
 
-    // 2. the handle's verdict decides the flag join's hint
-    val uniq = Dedup.exactKeep(docs, "doc_id", "text")
-    val cand = Dedup.candidatePairs(Dedup.lshBands(
-      Dedup.minHashText(uniq, "doc_id", "text", 3, 16), "doc_id", 16, 4), "doc_id")
-    def flag(broadcastCandMax: Long): (Boolean, Boolean, Boolean,
-                                      Set[org.apache.spark.sql.Row], SparkPlan) = {
-      val h = Dedup.jaccardTextReleasable(cand, uniq, "doc_id", "text", 3, broadcastCandMax)
-      try {
-        val f = CorpusCurationJob.flagged(uniq, h, 0.7)
-        val anyHint = f.queryExecution.analyzed.collect { case r: ResolvedHint => r }.nonEmpty
-        val joinHinted = f.queryExecution.optimizedPlan.collect {
-          case j: Join if j.joinType == LeftOuter => j.hint.rightHint.isDefined
-        } == Seq(true)
-        val rows = f.collect().toSet
-        (h.candBroadcast, anyHint, joinHinted, rows, f.queryExecution.executedPlan)
-      } finally h.release()
+      // 2. the handle's verdict decides the flag join's hint
+      val uniq = Dedup.exactKeep(docs, "doc_id", "text")
+      val cand = Dedup.candidatePairs(Dedup.lshBands(
+        Dedup.minHashText(uniq, "doc_id", "text", 3, 16), "doc_id", 16, 4), "doc_id")
+      def flag(broadcastCandMax: Long): (Boolean, Boolean, Boolean,
+                                        Set[org.apache.spark.sql.Row], SparkPlan) = {
+        val h = Dedup.jaccardTextReleasable(cand, uniq, "doc_id", "text", 3, broadcastCandMax)
+        try {
+          val f = CorpusCurationJob.flagged(uniq, h, 0.7)
+          val anyHint = f.queryExecution.analyzed.collect { case r: ResolvedHint => r }.nonEmpty
+          val joinHinted = f.queryExecution.optimizedPlan.collect {
+            case j: Join if j.joinType == LeftOuter => j.hint.rightHint.isDefined
+          } == Seq(true)
+          val rows = f.collect().toSet
+          (h.candBroadcast, anyHint, joinHinted, rows, f.queryExecution.executedPlan)
+        } finally h.release()
+      }
+      val (hinted, _, joinHinted, rowsHinted, pHinted) = flag(4000000L)
+      assert(hinted && joinHinted, "within the budget the dup ids must be hinted")
+      assert(rowsHinted.exists(!_.getAs[Boolean]("__keep")), "the fixture has near-dups")
+      assert(docExchanges(pHinted).isEmpty,
+        s"hinted flag join exchanged the survivors:\n$pHinted")
+      val (over, overAnyHint, overJoinHinted, rowsOver, _) = flag(0L)
+      assert(!over, "broadcastCandMax = 0 must report an unhinted candidate side")
+      assert(!overAnyHint && !overJoinHinted,
+        "over the budget the flag join must plan without a broadcast hint")
+      assert(rowsOver == rowsHinted, "both regimes must flag the same rows")
     }
-    val (hinted, _, joinHinted, rowsHinted, pHinted) = flag(4000000L)
-    assert(hinted && joinHinted, "within the budget the dup ids must be hinted")
-    assert(rowsHinted.exists(!_.getAs[Boolean]("__keep")), "the fixture has near-dups")
-    assert(docExchanges(pHinted).isEmpty,
-      s"hinted flag join exchanged the survivors:\n$pHinted")
-    val (over, overAnyHint, overJoinHinted, rowsOver, _) = flag(0L)
-    assert(!over, "broadcastCandMax = 0 must report an unhinted candidate side")
-    assert(!overAnyHint && !overJoinHinted,
-      "over the budget the flag join must plan without a broadcast hint")
-    assert(rowsOver == rowsHinted, "both regimes must flag the same rows")
   }
 
   test("near-dup stream: the micro-batch streams through a broadcast anti-join, never a doc_id exchange") {
-    import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_plan").toString
-    val mem = MemoryStream[(Long, String)]
-    val df = mem.toDF().toDF("doc_id", "text")
-    def drain(): Unit = graft.streaming.StreamingJobs.nearDupStream(
-      df, s"$dir/store", s"$dir/curated", s"$dir/chk").awaitTermination()
-    val base = "the quick brown fox jumps over the lazy dog near the river bank today"
-    val other = "completely different words about spark query engines and shuffles"
-    // batch 0 (no store yet) drops an intra-batch near-dup; batch 1
-    // probes the store and drops a cross-batch near-dup. Auto-broadcast
-    // off (planner and AQE): a fixture micro-batch is under the size
-    // threshold, a production one is not, so only the stream's own
-    // gate may broadcast here
-    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val prev = keys.map(k => k -> spark.conf.getOption(k).filter(_ != null))
-    keys.foreach(spark.conf.set(_, "-1"))
-    val plans = try writePlans(s"$dir/curated") {
-      mem.addData((1L, base), (2L, other), (3L, base.replace("today", "tonight")))
-      drain()
-      mem.addData((0L, base.replace("today", "this morning")), (12L, "novel words entirely"))
-      drain()
-    }.map(_.executedPlan) finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-    assert(plans.length == 2, s"one curated write per micro-batch, got ${plans.length}")
-    plans.foreach { p =>
-      val anti = nodes(p).collect {
-        case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+    withContractGuard {
+      import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+      import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      implicit val sqlCtx = spark.sqlContext
+      val dir = java.nio.file.Files.createTempDirectory("graft_stream_plan").toString
+      val mem = MemoryStream[(Long, String)]
+      val df = mem.toDF().toDF("doc_id", "text")
+      def drain(): Unit = graft.streaming.StreamingJobs.nearDupStream(
+        df, s"$dir/store", s"$dir/curated", s"$dir/chk").awaitTermination()
+      val base = "the quick brown fox jumps over the lazy dog near the river bank today"
+      val other = "completely different words about spark query engines and shuffles"
+      // batch 0 (no store yet) drops an intra-batch near-dup; batch 1
+      // probes the store and drops a cross-batch near-dup. Auto-broadcast
+      // off (planner and AQE): a fixture micro-batch is under the size
+      // threshold, a production one is not, so only the stream's own
+      // gate may broadcast here
+      val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold")
+      val prev = keys.map(k => k -> spark.conf.getOption(k).filter(_ != null))
+      keys.foreach(spark.conf.set(_, "-1"))
+      val plans = try writePlans(s"$dir/curated") {
+        mem.addData((1L, base), (2L, other), (3L, base.replace("today", "tonight")))
+        drain()
+        mem.addData((0L, base.replace("today", "this morning")), (12L, "novel words entirely"))
+        drain()
+      }.map(_.executedPlan) finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
-      assert(anti.nonEmpty, s"the novel-doc anti-join must broadcast the dropped ids:\n$p")
-      // its streamed side is the cached micro-batch
-      anti.foreach(j => assert(docExchanges(j.left).isEmpty,
-        s"the micro-batch crossed a doc_id exchange:\n${docExchanges(j.left).mkString("\n")}"))
-      // the curated read-back reaches the verifier through its
-      // candidate semi-join, never through a doc_id exchange
-      val readBack = docExchanges(p).filter(e => fileScans(e.child, "curated").nonEmpty)
-      assert(readBack.isEmpty, s"the curated corpus crossed a doc_id exchange:\n$p")
+      assert(plans.length == 2, s"one curated write per micro-batch, got ${plans.length}")
+      plans.foreach { p =>
+        val anti = nodes(p).collect {
+          case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+        }
+        assert(anti.nonEmpty, s"the novel-doc anti-join must broadcast the dropped ids:\n$p")
+        // its streamed side is the cached micro-batch
+        anti.foreach(j => assert(docExchanges(j.left).isEmpty,
+          s"the micro-batch crossed a doc_id exchange:\n${docExchanges(j.left).mkString("\n")}"))
+        // the curated read-back reaches the verifier through its
+        // candidate semi-join, never through a doc_id exchange
+        val readBack = docExchanges(p).filter(e => fileScans(e.child, "curated").nonEmpty)
+        assert(readBack.isEmpty, s"the curated corpus crossed a doc_id exchange:\n$p")
+      }
+      // the second batch reads the curated corpus back through the
+      // broadcast candidate semi-join, pushed down onto the scan
+      val semi = nodes(plans(1)).collect {
+        case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
+      }
+      assert(semi.exists(j => fileScans(j.left, "curated").nonEmpty),
+        s"the candidate semi-join must sit on the curated scan:\n${plans(1)}")
+      assert(spark.read.parquet(s"$dir/curated").select("doc_id").collect()
+        .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 12L))
     }
-    // the second batch reads the curated corpus back through the
-    // broadcast candidate semi-join, pushed down onto the scan
-    val semi = nodes(plans(1)).collect {
-      case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
-    }
-    assert(semi.exists(j => fileScans(j.left, "curated").nonEmpty),
-      s"the candidate semi-join must sit on the curated scan:\n${plans(1)}")
-    assert(spark.read.parquet(s"$dir/curated").select("doc_id").collect()
-      .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 12L))
   }
 
   test("weekly report: the summary write rolls up the written week_sub, one modon_wk scan (the plan leg)") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.GraftSession
 
@@ -18,4 +19,26 @@ trait SparkSpec extends AnyFunSuite {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Run `body` with the text verifier's same-id = same-doc contract
+    * guard on (`graft.dedup.assertContract=1`), restoring the previous
+    * setting after. */
+  protected def withContractGuard[A](body: => A): A = {
+    val key = "graft.dedup.assertContract"
+    val prev = sys.props.get(key)
+    sys.props(key) = "1"
+    try body finally prev match {
+      case Some(v) => sys.props(key) = v
+      case None => sys.props -= key
+    }
+  }
+
+  /** Every node of a final plan, through AQE stages and cached plans. */
+  protected def nodes(p: SparkPlan): Seq[SparkPlan] = p +: ((p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
+    case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+      Seq(m.relation.cachedPlan)
+    case _ => Nil
+  }) ++ p.children).flatMap(nodes)
 }
