@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.core.Tables
 import graft.ops.multimodal.MultimodalOps
 import graft.ops.similarity.VectorOps
@@ -37,12 +38,22 @@ object QueryCatalogSim {
     * a combined process that benches before verifying would leave
     * the hash gate covering the cached read path only. A failed
     * build installs no mapping and deletes its temp dir (no leak,
-    * clean retry). */
-  private val idxCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def cachedIndexDir(key: String)(build: String => Unit): String =
+    * clean retry).
+    *
+    * `build` returns the index tables as (name, frame); each is
+    * written to `<dir>/<name>` and its schema recorded, so a serve
+    * reads every table with the schema it was written with
+    * ([[StoredIndex.read]]). A schema-less `read.parquet` would run a
+    * schema-inference Spark job per table on every serve call. */
+  private val idxCache = new java.util.concurrent.ConcurrentHashMap[String, StoredIndex]()
+  private[graft] def cachedIndex(key: String)(
+      build: => Seq[(String, DataFrame)]): StoredIndex =
     idxCache.computeIfAbsent(key, _ => {
       val dir = java.nio.file.Files.createTempDirectory("graft_idx")
-      try build(dir.toString)
+      try StoredIndex(dir.toString, build.map { case (name, df) =>
+        df.write.mode("overwrite").parquet(s"$dir/$name")
+        name -> df.schema
+      }.toMap)
       catch { case e: Throwable =>
         try {
           import scala.jdk.CollectionConverters._
@@ -52,8 +63,13 @@ object QueryCatalogSim {
         } catch { case _: Throwable => () }
         throw e
       }
-      dir.toString
     })
+
+  /** A stored index: its directory and each table's written schema. */
+  private[graft] final case class StoredIndex(dir: String, schemas: Map[String, StructType]) {
+    def read(s: SparkSession, table: String): DataFrame =
+      s.read.schema(schemas(table)).parquet(s"$dir/$table")
+  }
 
   // ---------------------------------------------------------------- knn brute force
   /** Brute-force cosine top-5 (the correctness baseline for ANN). */
@@ -163,11 +179,9 @@ object QueryCatalogSim {
     * hash-gates is the stored-index code path itself. */
   val q207IvfServe: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
-    val idxDir = cachedIndexDir(s"q207|$d") { dir =>
-      VectorOps.ivfCentroids(emb, "label").write.mode("overwrite").parquet(dir)
-    }
+    val idx = cachedIndex(s"q207|$d")(Seq("cents" -> VectorOps.ivfCentroids(emb, "label")))
     VectorOps.ivfAnn(emb.filter(col("vec_id") < 20), emb, "label", k = 3,
-        nprobe = 2, centroids = Some(s.read.parquet(idxDir)))
+        nprobe = 2, centroids = Some(idx.read(s, "cents")))
       .withColumn("rank", col("rank").cast("int"))
       .orderBy("q_id", "rank")
   }
@@ -184,14 +198,12 @@ object QueryCatalogSim {
     * nq × N grouped rows). Bit-identical to q128, same oracle. */
   val q208PqServePacked: Q = (s, d) => {
     val e = Tables.embeddings(s, d)
-    val idxDir = cachedIndexDir(s"q208|$d") { dir =>
+    val idx = cachedIndex(s"q208|$d") {
       val (codes, books) = VectorOps.pqCodes(e, "vec_id", m = 4, ksub = 4, iters = 1)
-      VectorOps.pqCodesPacked(codes, "vec_id")
-        .write.mode("overwrite").parquet(s"$dir/packed")
-      books.write.mode("overwrite").parquet(s"$dir/books")
+      Seq("packed" -> VectorOps.pqCodesPacked(codes, "vec_id"), "books" -> books)
     }
     VectorOps.pqAdcTopKPacked(e.filter(col("vec_id") % 97 === 0),
-        s.read.parquet(s"$idxDir/packed"), s.read.parquet(s"$idxDir/books"),
+        idx.read(s, "packed"), idx.read(s, "books"),
         "vec_id", m = 4, ksub = 4, k = 5)
       .withColumn("rank", col("rank").cast("int"))
       .orderBy("q_id", "rank")
@@ -211,18 +223,16 @@ object QueryCatalogSim {
     * refine — the complete billion-vector serving layout, bit-gated. */
   val q210IvfPqServe: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
-    val idxDir = cachedIndexDir(s"q210|$d") { dir =>
+    val idx = cachedIndex(s"q210|$d") {
       val (codes, books) = VectorOps.pqCodes(emb, "vec_id", m = 4, ksub = 4)
-      VectorOps.ivfCentroids(emb, "label")
-        .write.mode("overwrite").parquet(s"$dir/cents")
-      VectorOps.pqCodesPacked(codes, "vec_id")
-        .join(emb.select(col("vec_id"), col("label").as("cell")), "vec_id")
-        .write.mode("overwrite").parquet(s"$dir/packed")
-      books.write.mode("overwrite").parquet(s"$dir/books")
+      Seq("cents" -> VectorOps.ivfCentroids(emb, "label"),
+        "packed" -> VectorOps.pqCodesPacked(codes, "vec_id")
+          .join(emb.select(col("vec_id"), col("label").as("cell")), "vec_id"),
+        "books" -> books)
     }
     VectorOps.ivfPqTopK(emb.filter(col("vec_id") < 20), emb,
-        s.read.parquet(s"$idxDir/cents"), s.read.parquet(s"$idxDir/packed"),
-        s.read.parquet(s"$idxDir/books"), "vec_id", m = 4, ksub = 4,
+        idx.read(s, "cents"), idx.read(s, "packed"),
+        idx.read(s, "books"), "vec_id", m = 4, ksub = 4,
         k = 3, nprobe = 2, shortlist = 10)
       .withColumn("rank", col("rank").cast("int"))
       .orderBy("q_id", "rank")

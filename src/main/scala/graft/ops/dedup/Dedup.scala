@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   * (60 bits, always non-negative).
   *
   * Scale notes: every step is groupBy/join on hashed keys — shuffles
-  * are on (doc, seed) or (band, key) with partial aggregation; no
-  * driver-side state, no quadratic all-pairs stage (LSH restricts
-  * Jaccard verification to bucket-colliding candidates only).
+  * are on (doc, seed) or the (band, key) bucket id with partial
+  * aggregation; no driver-side state, no quadratic all-pairs stage
+  * (LSH restricts Jaccard verification to bucket-colliding
+  * candidates only).
   */
 object Dedup {
 
@@ -40,10 +41,22 @@ object Dedup {
     * min_by(struct(all columns), id). The agg-then-join-back form
     * (`exact` + join on keep_id) pays a second corpus-wide shuffle
     * for the join; at 100 TB the keep-set is corpus-sized, so that
-    * join can never broadcast. Identical result, half the exchanges. */
+    * join can never broadcast. Identical result, half the exchanges.
+    *
+    * The group key is `unhex(md5(text))`: the same 128-bit digest as
+    * `exact`'s hex `content_hash`, carried as 16 bytes instead of 32
+    * hex characters. unhex is one-to-one on md5's fixed-width hex, so
+    * the groups are exactly the hex-keyed ones; null text hashes to a
+    * null key and stays one group.
+    *
+    * The aggregate stays `min_by` over the whole row: it plans as a
+    * sort-based aggregate, which spills. A `row_number() = 1` window
+    * would be rewritten to [[graft.plans.TopKPerKey]], which keeps one
+    * unspilled heap per distinct key per partition — for a content
+    * hash, nearly one per row. */
   def exactKeep(df: DataFrame, idCol: String, contentCol: String): DataFrame = {
     val cols = df.columns.toSeq
-    df.groupBy(md5(col(contentCol)).as("content_hash"))
+    df.groupBy(unhex(md5(col(contentCol))).as("content_hash"))
       .agg(min_by(struct(cols.map(col): _*), col(idCol)).as("r"))
       .select(cols.map(c => col(s"r.`$c`").as(c)): _*)
   }
@@ -136,7 +149,7 @@ object Dedup {
     * This is the formulation the LSH chain should start from at
     * 100 TB: the signature branch becomes map-only and the first
     * exchange of the whole dedup pipeline is the band-bucket
-    * shuffle (n/r rows of 16-byte keys per doc). Shingles then
+    * shuffle (n/r rows of one 8-byte bucket id per doc). Shingles then
     * exist only inside the verifier, as one in-row set per candidate
     * doc AFTER the restriction ([[jaccardTextReleasable]]) — nothing
     * ever explodes the corpus's n-grams. */
@@ -173,6 +186,17 @@ object Dedup {
     * NOT a self-join — a self-join would evaluate the whole upstream
     * signature pipeline twice (measured 2x wall time at sf0.1).
     *
+    * The bucket is keyed on ONE bigint, `xxhash64(band, band_key)`,
+    * and `band_key` is projected away before the window: the bucket
+    * exchange carries (id, bucket) rows of two longs instead of the
+    * 32-character md5 hex. The key's only use is equality. Two
+    * distinct (band, band_key) buckets merge only on a 64-bit
+    * collision — about b^2/2^65 for b buckets; none occurs over the
+    * 19,108 buckets of sf0.1 (`DedupSpec`'s collision audit) or the
+    * 186,402 of sf1 (SCALE.md). A merge would add candidates (each
+    * still verified), or push a bucket over the cap. `lshBands` and the band store keep
+    * the `band_key` strings, which the oracle replays.
+    *
     * Bucket sizes are small by construction ONLY while bands are
     * selective; a degenerate bucket (empty-text docs, a boilerplate
     * template shared by millions of pages) makes the m^2 expansion a
@@ -184,7 +208,7 @@ object Dedup {
     * bucket is thus bounded by maxBucket^2/2 regardless of skew.
     *
     * The cap is applied BEFORE any id list exists: a window count
-    * over (band, band_key) — same hash distribution as the final
+    * over the bucket — same hash distribution as the final
     * aggregation, so Catalyst plans ONE exchange — filters oversized
     * buckets while the rows stream through the (disk-spillable)
     * window sorter. The earlier collect_list-then-filter form built
@@ -193,11 +217,12 @@ object Dedup {
     * bucket at corpus scale is an executor OOM, not a filter. */
   def candidatePairs(bands: DataFrame, idCol: String,
                      maxBucket: Int = 64): DataFrame = {
-    val bucket = Window.partitionBy(col("band"), col("band_key"))
+    val bucket = Window.partitionBy(col("__bucket"))
     bands
+      .select(col(idCol), xxhash64(col("band"), col("band_key")).as("__bucket"))
       .withColumn("__bn", count(lit(1)).over(bucket))
       .filter(col("__bn").between(2, maxBucket))
-      .groupBy(col("band"), col("band_key"))
+      .groupBy(col("__bucket"))
       .agg(collect_list(col(idCol)).as("ids"))
       .select(explode(col("ids")).as("id_a"), col("ids"))
       .select(col("id_a"), explode(col("ids")).as("id_b"))

@@ -31,6 +31,12 @@ import org.apache.spark.sql.types.IntegerType
   * planning. Ties behave like row_number: arbitrary within equal
   * keys — give a total order for determinism, exactly as with the
   * window form.
+  *
+  * The rule has no cost model: it fires on EVERY `row_number()`
+  * filter that passes the guards, whatever the key's cardinality.
+  * The operator it plans keeps one unspilled heap of copied rows per
+  * distinct key per partition (TopKPerKey's memory bound), so a
+  * near-unique key turns a spillable sort into every row on the heap.
   */
 object RewriteWindowTopK extends Rule[LogicalPlan] {
 

@@ -28,6 +28,16 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * The reference's per-section "top N rows per farm" listings
   * (e.g. culling lists, shipment scatter caps) are this operator;
   * rank-window SQL is how its Oracle queries spell it.
+  *
+  * MEMORY BOUND: both execs hold, per partition, one JVM heap for
+  * every distinct key they see, with up to k COPIED rows in each —
+  * O(distinct keys x k) rows on the heap at once, and nothing spills.
+  * That is cheap while keys are few per partition (probes, farms,
+  * languages). Keyed on a near-unique value (a content hash, a doc
+  * id) it holds about every row of the partition, where the sort
+  * the window form pays would spill. [[RewriteWindowTopK]] fires on
+  * every eligible `row_number()` filter, so such a key must not be
+  * spelled as a rank window (exact dedup stays on `min_by`).
   */
 object TopKPerKey {
 

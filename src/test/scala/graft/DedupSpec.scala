@@ -13,6 +13,9 @@ class DedupSpec extends SparkSpec {
     (4L, "completely different words about spark query engines and shuffles here"),
   ).toDF("doc_id", "text")
 
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
   test("exact dedup keeps min id per content hash") {
     val g = Dedup.exact(docs, "doc_id", "text")
     assert(g.count() == 3)
@@ -129,13 +132,81 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val sh = Dedup.shingleSet(many, "doc_id", "text", 3)
     val bands = Dedup.lshBands(Dedup.minHash(sh, "doc_id", 16), "doc_id", 16, 4)
-    val uncapped = Dedup.candidatePairs(bands, "doc_id", maxBucket = 64)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val uncapped = pairSet(Dedup.candidatePairs(bands, "doc_id", maxBucket = 64))
     assert(uncapped.size == 10 + 1, s"5C2 + 1 pairs expected, got $uncapped")
-    val capped = Dedup.candidatePairs(bands, "doc_id", maxBucket = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val capped = pairSet(Dedup.candidatePairs(bands, "doc_id", maxBucket = 4))
     assert(capped == Set((6L, 7L)),
       s"cap must drop the degenerate 5-doc bucket's m^2 pairs, got $capped")
+    // the (band, band_key)-keyed reference agrees at both caps
+    assert(uncapped == pairSet(DedupReference.candidatePairsByKey(bands, "doc_id", 64)))
+    assert(capped == pairSet(DedupReference.candidatePairsByKey(bands, "doc_id", 4)))
+  }
+
+  test("candidatePairs on the 64-bit bucket id == the (band, band_key)-keyed reference") {
+    // the bigint key changes the exchange, never the pairs (the cap
+    // fixture is compared in the degenerate-bucket test)
+    val corpus = graft.core.Tables.documents(spark, "/root/testdata/sf0.1")
+      .select("doc_id", "text")
+    val bands = Dedup.lshBands(Dedup.minHashText(corpus, "doc_id", "text", 3, 16),
+      "doc_id", 16, 4).cache()
+    try {
+      val got = pairSet(Dedup.candidatePairs(bands, "doc_id"))
+      assert(got.nonEmpty)
+      assert(got == pairSet(DedupReference.candidatePairsByKey(bands, "doc_id")))
+    } finally bands.unpersist(true)
+  }
+
+  test("exactKeep on the binary md5 == the hex-keyed reference (nulls, replays, all-duplicate)") {
+    def same(df: org.apache.spark.sql.DataFrame): Unit = {
+      def rows(x: org.apache.spark.sql.DataFrame) = x.collect().map(_.toSeq).toSeq
+        .sortBy(_.mkString("|"))
+      val got = Dedup.exactKeep(df, "doc_id", "text")
+      assert(got.columns.toSeq == df.columns.toSeq)
+      assert(rows(got) == rows(DedupReference.exactKeepByHex(df, "doc_id", "text")))
+    }
+    val edge = Seq(
+      (1L, null.asInstanceOf[String], "en"), (2L, null.asInstanceOf[String], "de"),
+      (3L, "aa bb cc", "en"), (3L, "aa bb cc", "en"), // a replayed row
+      (4L, "aa bb cc", "fr"), (5L, "", "en"), (6L, "", null.asInstanceOf[String]),
+      (7L, "dd ee", "en")).toDF("doc_id", "text", "lang")
+    same(edge)
+    // null text is ONE group, kept at its min id
+    val kept = Dedup.exactKeep(edge, "doc_id", "text").collect()
+      .map(r => r.getLong(0)).sorted.toSeq
+    assert(kept == Seq(1L, 3L, 5L, 7L), s"kept ids: $kept")
+    // an all-duplicate corpus collapses to its min id
+    val dup = (1L to 50L).map(i => (51L - i, "one text for every row", "en"))
+      .toDF("doc_id", "text", "lang")
+    same(dup)
+    assert(Dedup.exactKeep(dup, "doc_id", "text").collect().map(_.getLong(0)).toSeq == Seq(1L))
+    same(graft.core.Tables.documents(spark, "/root/testdata/sf0.1"))
+  }
+
+  test("collision audit: the bucket id and the shingle identity are one-to-one over sf0.1") {
+    // every 64-bit id that stands in for a string must map back to one
+    // preimage: xxhash64(band, band_key) over the corpus's LSH buckets,
+    // and the verifier's xxhash64 of each 3-token tuple over its
+    // distinct tuples. (values, distinct hashes) must be equal
+    val corpus = graft.core.Tables.documents(spark, "/root/testdata/sf0.1")
+      .select("doc_id", "text")
+    def injective(keys: org.apache.spark.sql.DataFrame, h: org.apache.spark.sql.Column) = {
+      val r = keys.distinct().agg(count(lit(1)), countDistinct(h)).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val (nBuckets, nBucketIds) = injective(
+      Dedup.lshBands(Dedup.minHashText(corpus, "doc_id", "text", 3, 16), "doc_id", 16, 4)
+        .select("band", "band_key"),
+      xxhash64(col("band"), col("band_key")))
+    assert(nBuckets > 10000 && nBucketIds == nBuckets,
+      s"$nBuckets (band, band_key) buckets, $nBucketIds bucket ids")
+    val tuples = corpus.select(split(col("text"), "\\s+").as("toks"))
+      .filter(size(col("toks")) >= 3)
+      .select(explode(expr("transform(sequence(0, size(toks) - 3), i -> slice(toks, i + 1, 3))"))
+        .as("t"))
+    val (nTuples, nTupleIds) = injective(tuples,
+      xxhash64(element_at(col("t"), 1), element_at(col("t"), 2), element_at(col("t"), 3)))
+    assert(nTuples > 10000 && nTupleIds == nTuples,
+      s"$nTuples distinct 3-token tuples, $nTupleIds shingle ids")
   }
 
   test("invertedJaccard: df cap drops hot shingles before pair expansion") {

@@ -507,6 +507,48 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
+  test("curation run: the exact-dedup and LSH bucket exchanges key on fixed-width values") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.MinBy
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.types.{BinaryType, LongType}
+    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+    val out = java.nio.file.Files.createTempDirectory("graft_curation_keys").toString
+    spark.catalog.clearCache()
+    val curated = writePlans(s"$out/curated")(
+      graft.pipeline.CorpusCurationJob.run(spark, docs, out)).map(_.executedPlan)
+    assert(curated.size == 1, s"captured ${curated.size} curated writes")
+    // the nearest exchanges below a node, through AQE stages and caches
+    def below(p: SparkPlan): Seq[ShuffleExchangeLike] = p match {
+      case e: ShuffleExchangeLike => Seq(e)
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => below(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => below(q.plan)
+      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        below(m.relation.cachedPlan)
+      case _ => p.children.flatMap(below)
+    }
+    def keyTypes(e: ShuffleExchangeLike) = e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.map(_.dataType)
+      case other => fail(s"not a hash exchange: $other")
+    }
+    val all = nodes(curated.head)
+    // exactKeep: the exchange under the final min_by aggregate
+    val exact = all.collect {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(_.aggregateFunction
+        .isInstanceOf[MinBy]) && a.requiredChildDistributionExpressions.isDefined => below(a.child)
+    }.flatten
+    // candidatePairs: the exchange under the bucket-size window
+    val bucket = all.collect {
+      case w: WindowExec if w.windowExpression.exists(_.name == "__bn") => below(w.child)
+    }.flatten
+    assert(exact.nonEmpty && bucket.nonEmpty, s"exact: $exact, bucket: $bucket")
+    exact.foreach(e => assert(keyTypes(e) == Seq(BinaryType), s"exact-dedup exchange: $e"))
+    bucket.foreach(e => assert(keyTypes(e) == Seq(LongType), s"bucket exchange: $e"))
+  }
+
   test("near-dup stream: the micro-batch streams through a broadcast anti-join, never a doc_id exchange") {
     withContractGuard {
       import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}

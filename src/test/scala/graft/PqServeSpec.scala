@@ -298,19 +298,50 @@ class PqServeSpec extends SparkSpec {
     val batch = probes16(s)._1
     def serve(): Unit = ivfPq(s, batch, 10000L).collect()
     serve()
+    (0 until 3).foreach { _ =>
+      val n = jobsOf(serve())._2
+      assert(n <= 8, s"$n jobs for one 16-probe batch")
+    }
+  }
+
+  // `body`'s result and the number of Spark jobs it started
+  private def jobsOf[A](body: => A): (A, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
+    org.apache.spark.GraftMetricsBridge.waitUntilListenerBusEmpty(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
-    try (0 until 3).foreach { _ =>
+    try {
+      val a = body
       org.apache.spark.GraftMetricsBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-      jobs.set(0)
-      serve()
-      org.apache.spark.GraftMetricsBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-      assert(jobs.get() <= 8, s"${jobs.get()} jobs for one 16-probe batch")
+      (a, jobs.get())
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("q210 reads its stored index with the written schemas: 3 fewer jobs than inferring them") {
+    // a schema-less read.parquet runs one schema-inference job per
+    // index table on every serve call; q210 reads its three tables
+    // with the schemas recorded when the index was written
+    val d = "/root/testdata/sf0.001"
+    val tables = Seq("cents", "packed", "books")
+    val cached = QueryCatalogSim.q210IvfPqServe(spark, d).collect().toSeq // builds the index
+    val idx = QueryCatalogSim.cachedIndex(s"q210|$d")(fail("the q210 index must be cached"))
+    def inferred(t: String) = spark.read.parquet(s"${idx.dir}/$t")
+    tables.foreach(t => assert(idx.read(spark, t).schema == inferred(t).schema, t))
+    val (rows, nStored) = jobsOf(QueryCatalogSim.q210IvfPqServe(spark, d).collect().toSeq)
+    // q210's serve, spelled with schema-inferring reads
+    val (rowsInferred, nInferred) = jobsOf {
+      val emb = Tables.embeddings(spark, d)
+      val Seq(cents, packed, books) = tables.map(inferred)
+      VectorOps.ivfPqTopK(emb.filter(col("vec_id") < 20), emb, cents, packed, books,
+          "vec_id", m = 4, ksub = 4, k = 3, nprobe = 2, shortlist = 10)
+        .withColumn("rank", col("rank").cast("int"))
+        .orderBy("q_id", "rank").collect().toSeq
+    }
+    assert(rows.nonEmpty && rows == cached && rowsInferred == rows)
+    assert(nStored + 3 == nInferred, s"stored-schema serve: $nStored jobs, inferred: $nInferred")
   }
 
   // 16 of the stored corpus's vectors as a batch of driver-side rows
