@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.GraftSession
+import graft.pipeline.MetricsLog
 
 /** Benchmark main: one JSON line with per-query and total seconds.
   *
@@ -20,28 +21,21 @@ object Bench {
       SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
 
-    // Between-measurement hygiene, deliberately OUTSIDE the timed
-    // window (it costs ~0.5s/query on a 16g heap):
-    // - clearCache: queries that cache multi-consumer frames
-    //   (q42/q44/q91) release them with the query's lifetime, not the
-    //   session's — accumulated stale blocks were evicting/GC-
-    //   thrashing later queries (q57_rollup: 10.0s polluted vs 1.3s
-    //   isolated — the round-2 "unexplained 5x").
-    // - System.gc: ContextCleaner only releases dead shuffle/broadcast
-    //   registrations after a driver GC, and the default periodicGC
-    //   interval (30 min) never fires inside a bench run — ~2500
-    //   accumulated registrations inflated the LAST queries 4-12x
-    //   (q93: 12.0s in-suite vs 0.97s isolated).
-    def cleanup(): Unit = { spark.catalog.clearCache(); System.gc() }
+    // Shuffle-write accounting per query through MetricsLog's
+    // counters. Shuffle bytes are the quantitative face of the
+    // SCALE.md exchange audit — "one pre-reduced shuffle" is a claim,
+    // shuffle_mb is the measurement.
+    // SPARK_GRAFT_NO_SHUFFLE_METRICS=1: pure-timing mode with NO
+    // listener registered and NO bus drains — the A/B control for
+    // adjudicating whether the metrics machinery itself perturbs
+    // timings (the round-9 q99 watch item)
+    val metricsOn = !sys.env.get("SPARK_GRAFT_NO_SHUFFLE_METRICS").contains("1")
+    val log = if (metricsOn) MetricsLog.install(spark) else MetricsLog.clockOnly(spark)
 
     // optional args: restrict to the named queries (dev iteration)
     val names0 = SparkEntry.queries.keys.toSeq.sorted
     val names = if (args.nonEmpty) names0.filter(args.contains) else names0
-    names.foreach { n =>
-      try run(warmDir, n)
-      catch { case _: Throwable => () }
-      cleanup()
-    }
+    names.foreach(n => log.measure(1)(run(warmDir, n)))
     // min-of-N timed runs per query (default 3, SPARK_GRAFT_BENCH_REPS
     // to override). The r5-vs-r4 comparison proved the need: identical
     // binaries swung +-40% per query under VM load, so any per-query
@@ -56,39 +50,14 @@ object Bench {
       .map(math.max(1, _)).getOrElse(3)
     def f2(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    // Shuffle-write accounting per query: a SparkListener sums task
-    // shuffle bytes written; the bus is drained before each read
-    // (events are async). Shuffle bytes are the quantitative face of
-    // the SCALE.md exchange audit — "one pre-reduced shuffle" is a
-    // claim, shuffle_mb is the measurement.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    // SPARK_GRAFT_NO_SHUFFLE_METRICS=1: pure-timing mode with NO
-    // listener registered and NO bus drains — the A/B control for
-    // adjudicating whether the metrics machinery itself perturbs
-    // timings (the round-9 q99 watch item)
-    val metricsOn = !sys.env.get("SPARK_GRAFT_NO_SHUFFLE_METRICS").contains("1")
-    // removed in the finally below: a second runBench in the same
-    // session must not double-count via two live listeners
-    val shuffleListener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    if (metricsOn) spark.sparkContext.addSparkListener(shuffleListener)
-    def drainedShuffle(): Long = {
-      if (!metricsOn) return 0L
-      // waitUntilEmpty() has a hard 10 s timeout and THROWS on a
-      // loaded box — a metrics read must never kill a multi-minute
-      // bench run, so degrade to the possibly-slightly-stale counter
-      try org.apache.spark.GraftMetricsBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      catch { case _: java.util.concurrent.TimeoutException =>
-        System.err.println("[bench] listener bus drain timed out; " +
-          "shuffle_mb may lag for this boundary")
-      }
-      shuffleBytes.get()
+    // per-query accepted values from a dev/*baseline*.json file
+    // (empty when the file is absent)
+    def baseline(path: String): Map[String, Double] = {
+      val p = java.nio.file.Paths.get(path)
+      if (!java.nio.file.Files.exists(p)) Map.empty
+      else """"([^"]+)"\s*:\s*([0-9.]+)""".r
+        .findAllMatchIn(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
     }
     val shuffleMb = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     // queries whose timed reps THREW: their clock is time-to-crash,
@@ -97,19 +66,14 @@ object Bench {
     // accepted baseline), listed in the JSON, and excluded from
     // clock adjudication (a crash is a verify-gate problem, not drift)
     val failedQueries = scala.collection.mutable.LinkedHashSet.empty[String]
-    val repTimes = try names.map { name =>
-      val sh0 = drainedShuffle()
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try run(sfDir, name) catch { case _: Throwable => failedQueries += name }
-        val dt = (System.nanoTime() - t0) / 1e9
-        cleanup()
-        dt
-      }
+    val repTimes = names.map { name =>
+      val runs = log.measure(reps)(run(sfDir, name))
+      val times = runs.map(_.sec)
+      if (runs.exists(_.failed)) failedQueries += name
       // per-RUN shuffle write (identical across reps modulo AQE): the
-      // counter delta over all reps divided by reps
+      // mean over reps
       if (metricsOn)
-        shuffleMb(name) = (drainedShuffle() - sh0).toDouble / reps / 1048576.0
+        shuffleMb(name) = runs.map(_.delta.shuffleMb).sum / reps
       // Per-rep spread to STDERR (stderr keeps the FULL spread for
       // every query; the stdout JSON carries it only for the slowest —
       // see below): a loaded box shows up as max >> min, making an
@@ -122,7 +86,7 @@ object Bench {
           (if (metricsOn) s" shuffle_mb=${f2(shuffleMb(name))}" else "") +
           (if (failedQueries.contains(name)) " FAILED-REPS" else ""))
       name -> times
-    } finally if (metricsOn) spark.sparkContext.removeSparkListener(shuffleListener)
+    }
     // Shuffle-byte regression GATE: per-query shuffle write is plan-
     // determined (stable across reps and rounds modulo AQE), so
     // exchange bloat — an optimization rewrite quietly adding a
@@ -134,22 +98,15 @@ object Bench {
     // kilobyte-scale queries don't flap) is flagged on stderr and in
     // the JSON line. NEW queries (no baseline entry) are skipped —
     // regenerate the baseline with dev/update_shuffle_baseline.py.
-    val baselinePath = java.nio.file.Paths.get("dev/shuffle_baseline.json")
+    val shuffleBase = baseline("dev/shuffle_baseline.json")
     val shuffleRegressions: Seq[String] =
-      if (!java.nio.file.Files.exists(baselinePath)) Nil
-      else {
-        val txt = new String(java.nio.file.Files.readAllBytes(baselinePath), "UTF-8")
-        val entry = """"([^"]+)"\s*:\s*([0-9.]+)""".r
-        val baseline = entry.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        shuffleMb.toSeq.flatMap { case (q, mb) =>
-          baseline.get(q).collect {
-            case b if mb > b * 1.25 + 1.0 =>
-              System.err.println(
-                s"[bench] SHUFFLE REGRESSION $q: ${f2(mb)} MB vs baseline ${f2(b)} MB " +
-                  s"(ceiling ${f2(b * 1.25 + 1.0)})")
-              q
-          }
+      shuffleMb.toSeq.flatMap { case (q, mb) =>
+        shuffleBase.get(q).collect {
+          case b if mb > b * 1.25 + 1.0 =>
+            System.err.println(
+              s"[bench] SHUFFLE REGRESSION $q: ${f2(mb)} MB vs baseline ${f2(b)} MB " +
+                s"(ceiling ${f2(b * 1.25 + 1.0)})")
+            q
         }
       }
     val repsByName = repTimes.toMap
@@ -170,16 +127,10 @@ object Bench {
     // offenders by regression ratio. The shuffle-byte gate above stays the
     // load-INDEPENDENT check; this is the load-DEPENDENT counterpart.
     // SPARK_GRAFT_BENCH_NO_ADJUDICATE=1 turns it off (A/B control).
-    val timeBaselinePath = java.nio.file.Paths.get("dev/time_baseline.json")
     val adjudicated: Seq[(String, Double)] =
-      if (sys.env.get("SPARK_GRAFT_BENCH_NO_ADJUDICATE").contains("1") ||
-          !java.nio.file.Files.exists(timeBaselinePath)) Nil
+      if (sys.env.get("SPARK_GRAFT_BENCH_NO_ADJUDICATE").contains("1")) Nil
       else {
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(timeBaselinePath), "UTF-8")
-        val entry = """"([^"]+)"\s*:\s*([0-9.]+)""".r
-        val base = entry.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+        val base = baseline("dev/time_baseline.json")
         val suspects = results.flatMap { case (q, sec) =>
           base.get(q).collect {
             case b if sec > b * 1.35 + 0.3 && !failedQueries.contains(q) =>
@@ -193,14 +144,9 @@ object Bench {
           // clean minimum (a regression that is really an OOM/failure
           // would read as "fast again = box drift"): failed
           // adjudications publish -1, the investigate-me sentinel
-          var failed = false
-          val ts = (1 to 5).map { _ =>
-            val t0 = System.nanoTime()
-            try run(sfDir, q) catch { case _: Throwable => failed = true }
-            val dt = (System.nanoTime() - t0) / 1e9
-            cleanup()
-            dt
-          }
+          val runs = log.measure(5)(run(sfDir, q))
+          val ts = runs.map(_.sec)
+          val failed = runs.exists(_.failed)
           System.err.println(s"[bench] adjudicated $q " +
             s"reps=${ts.map(f2).mkString(",")} min=${f2(ts.min)}" +
             (if (failed) " FAILED-REPS" else ""))
@@ -257,13 +203,9 @@ object Bench {
     val sf1Results: Seq[(String, Double)] =
       if (!sf1On) Nil
       else sf1Names.map { n =>
-        val ts = (1 to sf1Reps).map { _ =>
-          val t0 = System.nanoTime()
-          try run(sf1Dir, n) catch { case _: Throwable => sf1Failed += n }
-          val dt = (System.nanoTime() - t0) / 1e9
-          cleanup()
-          dt
-        }
+        val runs = log.measure(sf1Reps)(run(sf1Dir, n))
+        val ts = runs.map(_.sec)
+        if (runs.exists(_.failed)) sf1Failed += n
         System.err.println(s"[bench] sf1 $n reps=${ts.map(f2).mkString(",")} " +
           s"min=${f2(ts.min)}" +
           (if (sf1Failed.contains(n)) " FAILED-REPS" else ""))
@@ -274,23 +216,15 @@ object Bench {
         // the regression gate already skip it)
         n -> (if (sf1Failed.contains(n)) -1.0 else ts.min)
       }
-    val sf1BaselinePath = java.nio.file.Paths.get("dev/time_baseline_sf1.json")
+    val sf1Base = baseline("dev/time_baseline_sf1.json")
     val sf1Regressions: Seq[String] =
-      if (sf1Results.isEmpty || !java.nio.file.Files.exists(sf1BaselinePath)) Nil
-      else {
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(sf1BaselinePath), "UTF-8")
-        val entry = """"([^"]+)"\s*:\s*([0-9.]+)""".r
-        val base = entry.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        sf1Results.flatMap { case (q, sec) =>
-          base.get(q).collect {
-            case b if sec > b * 1.35 + 0.3 && !sf1Failed.contains(q) =>
-              System.err.println(
-                s"[bench] SF1 SCALE REGRESSION $q: ${f2(sec)}s vs baseline " +
-                  s"${f2(b)}s (ceiling ${f2(b * 1.35 + 0.3)})")
-              q
-          }
+      sf1Results.flatMap { case (q, sec) =>
+        sf1Base.get(q).collect {
+          case b if sec > b * 1.35 + 0.3 && !sf1Failed.contains(q) =>
+            System.err.println(
+              s"[bench] SF1 SCALE REGRESSION $q: ${f2(sec)}s vs baseline " +
+                s"${f2(b)}s (ceiling ${f2(b * 1.35 + 0.3)})")
+            q
         }
       }
 

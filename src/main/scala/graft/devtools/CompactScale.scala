@@ -2,6 +2,7 @@ package graft.devtools
 
 import org.apache.spark.sql.functions._
 import graft.core.{GraftSession, Tables}
+import graft.pipeline.MetricsLog
 import graft.ops.dedup.{BandStore, Dedup}
 
 /** Dev harness: streaming-store compaction at DECADE-STORE scale —
@@ -66,26 +67,17 @@ object CompactScale {
     val probeBatch = spark.read.parquet(probePath)
     def probeBands = Dedup.lshBands(
       Dedup.minHashText(probeBatch, "doc_id", "text"), "doc_id")
-    def digest(): (String, Long) = {
-      val row = BandStore.probe(spark, table, probeBands, "doc_id")
-        .select(xxhash64(col("sid").cast("string"), col("bid").cast("string"))
-          .cast("decimal(38,0)").as("h"))
-        .agg(sum(col("h")), count(lit(1))).head()
-      (String.valueOf(row.get(0)), row.getLong(1))
-    }
-    def probeClock(): Double =
-      (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        val t = System.nanoTime()
-        BandStore.probe(spark, table, probeBands, "doc_id")
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t) / 1e9
-      }.min
+    def digest() = MetricsLog.digest(BandStore.probe(spark, table, probeBands, "doc_id"))
+    val log = MetricsLog.clockOnly(spark)
+    def probeClock(): Double = MetricsLog.best(log.measure(reps) {
+      BandStore.probe(spark, table, probeBands, "doc_id")
+        .write.format("noop").mode("overwrite").save()
+    }).orThrow.sec
 
     val filesPre = fileCount()
     val digPre = digest()
     val clockPre = probeClock()
-    println(f"[compact-scale] PRE : standing=$standing files=$filesPre probe_min=$clockPre%.2f s cands=${digPre._2} digest=${digPre._1}")
+    println(f"[compact-scale] PRE : standing=$standing files=$filesPre probe_min=$clockPre%.2f s cands=${digPre.rows} digest=${digPre.hashSum}")
 
     val tc = System.nanoTime()
     BandStore.compactStreamStore(spark, table, location, maxBatchId = nBatches - 1L)
@@ -94,7 +86,7 @@ object CompactScale {
     val filesPost = fileCount()
     val digPost = digest()
     val clockPost = probeClock()
-    println(f"[compact-scale] POST: files=$filesPost probe_min=$clockPost%.2f s cands=${digPost._2} digest=${digPost._1} (compaction $compactSec%.1f s)")
+    println(f"[compact-scale] POST: files=$filesPost probe_min=$clockPost%.2f s cands=${digPost.rows} digest=${digPost.hashSum} (compaction $compactSec%.1f s)")
     val ok = digPre == digPost
     println(s"[compact-scale] digest_${if (ok) "MATCH" else "MISMATCH"}; " +
       s"files ${filesPre} -> ${filesPost}, probe ${"%.2f".format(clockPre)} -> ${"%.2f".format(clockPost)} s")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkEntry
 import graft.core.{GraftSession, Tables}
+import graft.pipeline.MetricsLog
+import graft.pipeline.MetricsLog.Rep
 import graft.ops.dedup.{BandStore, Dedup}
 import graft.ops.similarity.{Bitext, VectorOps}
 
@@ -134,41 +136,15 @@ object ScaleDecade {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // Bench's listener + drain discipline: per-run shuffle write sums
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
-    def drained(): Long = {
-      try org.apache.spark.GraftMetricsBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      catch { case _: java.util.concurrent.TimeoutException =>
-        System.err.println("[decade] listener bus drain timed out") }
-      shuffleBytes.get()
-    }
+    val log = MetricsLog.install(spark)
     def cleanup(): Unit = { spark.catalog.clearCache(); System.gc() }
 
     // min clock + min per-run shuffle MB over `reps` runs of a thunk
-    def measure(thunk: () => Unit): (Double, Double, Boolean) = {
-      var failed = false
-      val runs = (1 to reps).map { _ =>
-        val sh0 = drained()
-        val t0 = System.nanoTime()
-        try thunk() catch { case e: Throwable =>
-          failed = true
-          System.err.println(s"[decade] FAILED: ${e.getClass.getName}: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val mb = (drained() - sh0) / 1048576.0
-        cleanup()
-        (dt, mb)
-      }
-      (runs.map(_._1).min, runs.map(_._2).min, failed)
+    def measure(thunk: () => Unit): Rep = {
+      val v = MetricsLog.best(log.measure(reps)(thunk()))
+      v.error.foreach(e =>
+        System.err.println(s"[decade] FAILED: ${e.getClass.getName}: ${e.getMessage}"))
+      v
     }
 
     def f2(v: Double): String =
@@ -176,10 +152,8 @@ object ScaleDecade {
 
     // JIT/codegen warm pass on the smallest SF (outside any timing)
     CatalogQueries.foreach { n =>
-      try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      cleanup()
+      log.measure(1)(SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
+        .write.format("noop").mode("overwrite").save())
     }
 
     // rung size = total text chars (the corpus-scale denominator; doc
@@ -193,17 +167,16 @@ object ScaleDecade {
     sized.foreach(r => println(
       s"[decade] rung ${r.label}: ${r.docs} docs, ${(r.chars / 1e6).round} M chars (${r.dir})"))
 
-    // results(query)(rungLabel) = (sec, mb, failed)
     val results = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.mutable.LinkedHashMap[String, (Double, Double, Boolean)]]
+      .empty[String, scala.collection.mutable.LinkedHashMap[String, Rep]]
     // (query, rungLabel) -> candidate-pair count (LSH rows only;
     // measured once per rung, outside timing)
     val candCounts = scala.collection.mutable.Map.empty[(String, String), Long]
-    def record(q: String, rung: String, v: (Double, Double, Boolean)): Unit = {
+    def record(q: String, rung: String, v: Rep): Unit = {
       results.getOrElseUpdate(q,
         scala.collection.mutable.LinkedHashMap.empty) += rung -> v
-      println(s"[decade] $rung $q min=${f2(v._1)}s shuffle=${f2(v._2)}MB" +
-        (if (v._3) " FAILED-REPS" else ""))
+      println(s"[decade] $rung $q min=${f2(v.sec)}s shuffle=${f2(v.delta.shuffleMb)}MB" +
+        (if (v.failed) " FAILED-REPS" else ""))
     }
 
     sized.foreach { r =>
@@ -419,8 +392,8 @@ object ScaleDecade {
     var breach = false
     results.foreach { case (q, byRung) =>
       val cells = sized.map { r =>
-        val (s, mb, failed) = byRung(r.label)
-        if (failed) "FAILED" else s"${f2(s)} / ${f2(mb)}"
+        val v = byRung(r.label)
+        if (v.failed) "FAILED" else s"${f2(v.sec)} / ${f2(v.delta.shuffleMb)}"
       }
       val pairs = sized.sliding(2).toSeq ++
         (if (sized.length > 2) Seq(Seq(sized.head, sized.last)) else Nil)
@@ -429,17 +402,16 @@ object ScaleDecade {
       // candidate count this degenerates to chars (raw == work).
       def workOf(r: Rung): Double =
         r.chars + candCounts.getOrElse((q, r.label), 0L) * (r.chars / r.docs)
-      def exps(sel: ((Double, Double, Boolean)) => Double,
-               denom: Rung => Double): Seq[Double] =
+      def exps(sel: Rep => Double, denom: Rung => Double): Seq[Double] =
         pairs.flatMap { case Seq(lo, hi) =>
           val (a, b) = (byRung(lo.label), byRung(hi.label))
-          if (a._3 || b._3 || sel(a) <= 0 || sel(b) <= 0) None
+          if (a.failed || b.failed || sel(a) <= 0 || sel(b) <= 0) None
           else Some(math.log(sel(b) / sel(a)) / math.log(denom(hi) / denom(lo)))
         }
-      val beRaw = exps(_._2, _.chars)
-      val beWork = exps(_._2, workOf)
-      val ce = exps(_._1, _.chars)
-      val anyFailed = byRung.values.exists(_._3)
+      val beRaw = exps(_.delta.shuffleMb, _.chars)
+      val beWork = exps(_.delta.shuffleMb, workOf)
+      val ce = exps(_.sec, _.chars)
+      val anyFailed = byRung.values.exists(_.failed)
       // GATED on the FULL-SPAN exponents (last element: first -> last
       // rung), not the per-decade max: a df-cap family crosses its
       // saturation window in SOME decade (q44 measured 1.37 then
@@ -460,8 +432,9 @@ object ScaleDecade {
         val (a, b) = (byRung(lo.label), byRung(hi.label))
         val (ca, cb) = (candCounts.getOrElse((q, lo.label), 0L),
           candCounts.getOrElse((q, hi.label), 0L))
-        if (!a._3 && !b._3 && ca > 0 && cb > 0 && a._2 > 0 && b._2 > 0)
-          Some(math.log((b._2 / cb) / (a._2 / ca)) /
+        val (amb, bmb) = (a.delta.shuffleMb, b.delta.shuffleMb)
+        if (!a.failed && !b.failed && ca > 0 && cb > 0 && amb > 0 && bmb > 0)
+          Some(math.log((bmb / cb) / (amb / ca)) /
             math.log(hi.chars / lo.chars))
         else None
       }
@@ -481,7 +454,7 @@ object ScaleDecade {
       // flat 0.02 across the decade that matters). A fixed 20-probe
       // batch whose TOP-RUNG bytes stay under 1 MB IS the flat
       // property, whatever the slope of its noise.
-      val topRungMb = byRung(sized.last.label)._2
+      val topRungMb = byRung(sized.last.label).delta.shuffleMb
       val flag =
         if (FixedInputRows(q))
           anyFailed || !(perCandExp match {

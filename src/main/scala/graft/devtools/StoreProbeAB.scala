@@ -2,6 +2,7 @@ package graft.devtools
 
 import org.apache.spark.sql.functions._
 import graft.core.{GraftSession, Tables}
+import graft.pipeline.MetricsLog
 import graft.ops.dedup.{BandStore, Dedup}
 
 /** The bucketed-store A/B at sf1: with the STANDING corpus's band
@@ -87,37 +88,17 @@ object StoreProbeAB {
       s"(${spark.table("ab_bucketed").count()} band rows; amortizes over every future batch)")
     bands.write.format("parquet").saveAsTable("ab_plain")
 
-    // per-probe shuffle-byte accounting (the Bench listener pattern)
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
-    def drained(): Long = {
-      try org.apache.spark.GraftMetricsBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      catch { case _: java.util.concurrent.TimeoutException => () }
-      shuffleBytes.get()
-    }
-
+    // per-probe shuffle bytes next to the min clock
+    val log = MetricsLog.install(spark)
     def probe(table: String): (Double, Long, Double) = {
-      val runs = (1 to reps).map { _ =>
-        val sh0 = drained()
-        val s0 = System.nanoTime()
-        val n = BandStore.dedupAgainstStoreScoped(
+      var n = 0L
+      val v = MetricsLog.best(log.measure(reps) {
+        n = BandStore.dedupAgainstStoreScoped(
           spark, table, standing, batch, "doc_id", "text") { j =>
           j.filter(col("jaccard") >= 0.5).count()
         }
-        val dt = (System.nanoTime() - s0) / 1e9
-        val mb = (drained() - sh0) / 1048576.0
-        spark.catalog.clearCache()
-        (dt, n, mb)
-      }
-      (runs.map(_._1).min, runs.head._2, runs.map(_._3).min)
+      }).orThrow
+      (v.sec, n, v.delta.shuffleMb)
     }
     val (tBucketed, nBucketed, mbBucketed) = probe("ab_bucketed")
     val (tPlain, nPlain, mbPlain) = probe("ab_plain")

@@ -3,6 +3,7 @@ package graft.devtools
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import graft.core.{GraftSession, Tables}
+import graft.pipeline.MetricsLog
 import graft.streaming.StreamingJobs
 
 /** Dev harness: the incremental-dedup STREAM end-to-end at the decade
@@ -55,23 +56,7 @@ object StreamDecade {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // per-batch shuffle bytes via the ScaleDecade listener + drain
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
-    def drained(): Long = {
-      try org.apache.spark.GraftMetricsBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      catch { case _: java.util.concurrent.TimeoutException =>
-        System.err.println("[stream-decade] listener bus drain timed out") }
-      shuffleBytes.get()
-    }
+    val log = MetricsLog.install(spark)
 
     val work = "/tmp/graft_stream_decade"
     val table = "stream_decade_store"
@@ -150,23 +135,21 @@ object StreamDecade {
       feed(b)
       val isCompact = compactEvery > 0 && b > 0 && b % compactEvery == 0
       val cand = candCount(b)
-      val sh0 = drained()
-      val t0 = System.nanoTime()
-      val stream =
-        if (clusterMode)
-          StreamingJobs.clusterMaintStream(
-            spark.readStream.schema(docSchema).parquet(watch),
-            store, s"$work/texts", s"$work/labels", chk, tau = 0.7,
-            storeTable = Some(table), storeCompactEvery = compactEvery)
-        else
-          StreamingJobs.nearDupStream(
-            spark.readStream.schema(docSchema).parquet(watch),
-            store, curated, chk, tau = 0.7,
-            storeTable = Some(table), storeCompactEvery = compactEvery)
-      stream.awaitTermination()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val mb = (drained() - sh0) / 1048576.0
-      spark.catalog.clearCache()
+      val run = log.measure(1) {
+        val stream =
+          if (clusterMode)
+            StreamingJobs.clusterMaintStream(
+              spark.readStream.schema(docSchema).parquet(watch),
+              store, s"$work/texts", s"$work/labels", chk, tau = 0.7,
+              storeTable = Some(table), storeCompactEvery = compactEvery)
+          else
+            StreamingJobs.nearDupStream(
+              spark.readStream.schema(docSchema).parquet(watch),
+              store, curated, chk, tau = 0.7,
+              storeTable = Some(table), storeCompactEvery = compactEvery)
+        stream.awaitTermination()
+      }.head.orThrow
+      val (sec, mb) = (run.sec, run.delta.shuffleMb)
       refreshed()
       val standing = spark.table(table).count()
       rows += BatchRow(b, sec, mb, cand, standing, isCompact)

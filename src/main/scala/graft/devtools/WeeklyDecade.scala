@@ -1,8 +1,8 @@
 package graft.devtools
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.pipeline.WeeklyReportJob
+import graft.pipeline.{MetricsLog, WeeklyReportJob}
+import graft.pipeline.MetricsLog.Rep
 import graft.pipeline.WeeklyReportJob.DomainSources
 import graft.core.GraftSession
 
@@ -39,10 +39,6 @@ import graft.core.GraftSession
   * Results go into SCALE.md; NOT part of the library.
   */
 object WeeklyDecade {
-  /** min-of-reps clock (s), shuffle write MB, input MB and jobs. */
-  private final case class Cost(sec: Double, shuffleMb: Double, inputMb: Double,
-                                jobs: Long, failed: Boolean)
-
   def main(args: Array[String]): Unit = {
     val reps = args.headOption.flatMap(s => scala.util.Try(s.toInt).toOption)
       .map(math.max(1, _)).getOrElse(1)
@@ -72,60 +68,17 @@ object WeeklyDecade {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    val inputBytes = new java.util.concurrent.atomic.AtomicLong
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          jobs.incrementAndGet()
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            inputBytes.addAndGet(m.inputMetrics.bytesRead)
-          }
-        }
-      })
-    def drained(): (Long, Long, Long) = {
-      try org.apache.spark.GraftMetricsBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      catch { case _: java.util.concurrent.TimeoutException =>
-        System.err.println("[weekly-decade] listener bus drain timed out") }
-      (shuffleBytes.get(), inputBytes.get(), jobs.get())
-    }
-    def cleanup(): Unit = { spark.catalog.clearCache(); System.gc() }
-
-    def measure(thunk: () => Unit): Cost = {
-      var failed = false
-      val runs = (1 to reps).map { _ =>
-        val (sh0, in0, j0) = drained()
-        val t0 = System.nanoTime()
-        try thunk() catch { case e: Throwable =>
-          failed = true
-          System.err.println(s"[weekly-decade] FAILED: ${e.getClass.getName}: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val (sh1, in1, j1) = drained()
-        cleanup()
-        Cost(dt, (sh1 - sh0) / 1048576.0, (in1 - in0) / 1048576.0, j1 - j0, failed)
-      }
-      Cost(runs.map(_.sec).min, runs.map(_.shuffleMb).min, runs.map(_.inputMb).min,
-        runs.map(_.jobs).min, failed)
+    val log = MetricsLog.install(spark)
+    // min-of-reps clock and counters (shuffle write, input, jobs)
+    def measure(run: () => Unit): Rep = {
+      val v = MetricsLog.best(log.measure(reps)(run()))
+      v.error.foreach(e =>
+        System.err.println(s"[weekly-decade] FAILED: ${e.getClass.getName}: ${e.getMessage}"))
+      v
     }
 
     def f2(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-
-    // order-independent content digest: decimal sum of per-row
-    // xxhash64 (a long sum overflows under ANSI) and the row count
-    def digest(df: DataFrame): String = {
-      val cols = df.columns.sorted.map(c => col(c).cast("string"))
-      val row = df.select(xxhash64(cols: _*).cast("decimal(38,0)").as("h"))
-        .agg(sum(col("h")), count(lit(1))).head()
-      s"${row.get(0)}/${row.getLong(1)}"
-    }
 
     case class Rung(label: String, dir: String, farms: Long)
     val sized = rungs.map { case (l, d) =>
@@ -147,13 +100,10 @@ object WeeklyDecade {
 
     val scratch = java.nio.file.Files.createTempDirectory("weekly_decade").toString
     // JIT/codegen warm pass on the smallest rung (outside timing)
-    work(sized.head.dir, s"$scratch/warm").foreach { case (_, run) =>
-      try run() catch { case _: Throwable => () }
-    }
-    cleanup()
+    work(sized.head.dir, s"$scratch/warm").foreach { case (_, run) => log.measure(1)(run()) }
 
     val results = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.mutable.LinkedHashMap[String, Cost]]
+      .empty[String, scala.collection.mutable.LinkedHashMap[String, Rep]]
     sized.foreach { r =>
       val out = s"$scratch/${r.label}"
       work(r.dir, out).foreach { case (name, run) =>
@@ -161,12 +111,12 @@ object WeeklyDecade {
         results.getOrElseUpdate(name,
           scala.collection.mutable.LinkedHashMap.empty) += r.label -> v
         println(s"[weekly-decade] ${r.label} $name min=${f2(v.sec)}s " +
-          s"shuffle=${f2(v.shuffleMb)}MB input=${f2(v.inputMb)}MB jobs=${v.jobs}" +
+          s"shuffle=${f2(v.delta.shuffleMb)}MB input=${f2(v.delta.inputMb)}MB jobs=${v.delta.jobs}" +
           (if (v.failed) " FAILED-REPS" else ""))
         if (name == "report" && !v.failed)
           println(s"[weekly-decade] ${r.label} report digest " +
-            s"week_sub=${digest(spark.read.parquet(s"$out/week_sub"))} " +
-            s"week_summary=${digest(spark.read.parquet(s"$out/week_summary"))}")
+            s"week_sub=${MetricsLog.digest(spark.read.parquet(s"$out/week_sub"))} " +
+            s"week_summary=${MetricsLog.digest(spark.read.parquet(s"$out/week_summary"))}")
       }
     }
 
@@ -176,19 +126,19 @@ object WeeklyDecade {
     results.foreach { case (q, byRung) =>
       val cells = sized.map { r =>
         val c = byRung(r.label)
-        if (c.failed) "FAILED" else s"${f2(c.sec)} / ${f2(c.shuffleMb)}"
+        if (c.failed) "FAILED" else s"${f2(c.sec)} / ${f2(c.delta.shuffleMb)}"
       }
       val pairs = (sized.sliding(2).toSeq ++
         (if (sized.length > 2) Seq(Seq(sized.head, sized.last)) else Nil))
         .filter(_.length == 2)
-      def exps(sel: Cost => Double): Seq[Double] =
+      def exps(sel: Rep => Double): Seq[Double] =
         pairs.flatMap { case Seq(lo, hi) =>
           val (a, b) = (byRung(lo.label), byRung(hi.label))
           if (a.failed || b.failed || sel(a) <= 0 || sel(b) <= 0) None
           else Some(math.log(sel(b) / sel(a)) /
             math.log(hi.farms.toDouble / lo.farms))
         }
-      val be = exps(_.shuffleMb)
+      val be = exps(_.delta.shuffleMb)
       val ce = exps(_.sec)
       val anyFailed = byRung.values.exists(_.failed)
       // gate the FULL-SPAN byte exponent (the ScaleDecade rationale:
@@ -197,7 +147,7 @@ object WeeklyDecade {
       // has no meaningful log-slope (zero-byte rungs drop out of
       // `be`) — zero shuffle is the best possible outcome, never a
       // breach (the ScaleDecade fixed-probe-row rationale).
-      val topBytes = byRung(sized.last.label).shuffleMb
+      val topBytes = byRung(sized.last.label).delta.shuffleMb
       val byteOk = be.lastOption.exists(_ <= 1.15) || topBytes <= 1.0
       val flag = anyFailed || (pairs.nonEmpty && !byteOk)
       if (flag) breach = true

@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import graft.pipeline.MetricsLog
 import graft.sinks.Sinks
@@ -9,20 +11,83 @@ class MetricsCompactSpec extends SparkSpec {
   import spark.implicits._
 
   test("MetricsLog captures stage and job metrics for a real query") {
-    val log = new MetricsLog().install(spark)
+    val log = MetricsLog.install(spark)
     try {
       (1 to 10000).toDF("x").groupBy(col("x") % 7).count().collect()
       // listener events are posted asynchronously; poll briefly
       val deadline = System.currentTimeMillis() + 10000
-      while (log.stageSnapshot(spark).isEmpty && System.currentTimeMillis() < deadline)
+      while (log.stageSnapshot().isEmpty && System.currentTimeMillis() < deadline)
         Thread.sleep(100)
-      val stages = log.stageSnapshot(spark)
+      val stages = log.stageSnapshot()
       assert(stages.count() >= 2, "groupBy needs at least map+reduce stages")
       assert(stages.filter(col("shuffleWriteBytes") > 0).count() >= 1,
         "the map stage must record shuffle write")
-      val jobs = log.jobSnapshot(spark).collect()
+      val jobs = log.jobSnapshot().collect()
       assert(jobs.nonEmpty && jobs.forall(_.getLong(3) >= 0))
-    } finally spark.sparkContext.removeSparkListener(log)
+    } finally log.close()
+  }
+
+  test("MetricsLog counters equal an independent listener's job, task and shuffle-write totals") {
+    val jobs, tasks, shuffle = new AtomicLong
+    val probe = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        if (e.taskMetrics != null)
+          shuffle.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      }
+    }
+    val log = MetricsLog.install(spark)
+    spark.sparkContext.addSparkListener(probe)
+    try {
+      // both start from the same drained point
+      val c0 = log.counters()
+      Seq(jobs, tasks, shuffle).foreach(_.set(0))
+      (1 to 10000).toDF("x").groupBy(col("x") % 7).count().collect()
+      val d = log.counters() - c0
+      assert(d.jobs > 0 && d.shuffleWriteBytes > 0)
+      assert((d.jobs, d.tasks, d.shuffleWriteBytes) == ((jobs.get, tasks.get, shuffle.get)))
+      assert(d.sqlExecutions == 1, "one collect is one root SQL execution")
+    } finally {
+      spark.sparkContext.removeSparkListener(probe)
+      log.close()
+    }
+  }
+
+  test("measure's per-rep deltas sum to the counters' change over the whole call") {
+    val log = MetricsLog.install(spark)
+    try {
+      val c0 = log.counters()
+      val reps = log.measure(3)((1 to 5000).toDF("x").groupBy(col("x") % 5).count().collect())
+      val whole = log.counters() - c0
+      assert(reps.length == 3 && reps.forall(r => !r.failed && r.delta.jobs > 0))
+      assert(reps.map(_.delta).reduce(_ + _) == whole)
+    } finally log.close()
+  }
+
+  test("measure: a rep that throws is marked failed and the later reps still run") {
+    val log = MetricsLog.install(spark)
+    try {
+      var calls = 0
+      val reps = log.measure(3) {
+        calls += 1
+        if (calls == 2) throw new IllegalStateException("rep 2 fails")
+        spark.range(100).count()
+      }
+      assert(calls == 3)
+      assert(reps.map(_.failed) == Seq(false, true, false))
+      assert(reps(1).error.exists(_.getMessage == "rep 2 fails"))
+      assert(MetricsLog.best(reps).failed)
+    } finally log.close()
+  }
+
+  test("digest ignores row order and partitioning and moves with any one value") {
+    val df = (1 to 1000).map(i => (i, s"v$i", i * 0.5)).toDF("a", "b", "c")
+    val d = MetricsLog.digest(df)
+    assert(d.rows == 1000)
+    assert(MetricsLog.digest(df.repartition(7)) == d)
+    val changed = df.withColumn("b", when(col("a") === 500, lit("w500")).otherwise(col("b")))
+    assert(MetricsLog.digest(changed) != d)
   }
 
   test("writeSorted produces range-disjoint files that prune selective scans") {

@@ -60,24 +60,9 @@ class MultimodalSpec extends SparkSpec {
         s"cached partitions outlive $after")
     // SQL executions (roots only) per run: the verifier's candidate
     // count plus the two writes
-    val executions = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(
-          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-          if s.rootExecutionId.forall(_ == s.executionId) =>
-          executions.incrementAndGet()
-        case _ => ()
-      }
-    }
-    org.apache.spark.GraftMetricsBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      CorpusCurationJob.run(spark, docs, out)
-      org.apache.spark.GraftMetricsBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(executions.get() <= 3,
-      s"CorpusCurationJob.run took ${executions.get()} SQL executions (at most 3)")
+    val executions = sparkWork(CorpusCurationJob.run(spark, docs, out))._3
+    assert(executions <= 3,
+      s"CorpusCurationJob.run took $executions SQL executions (at most 3)")
     assertNoCache("run")
     // the same pipeline again with the verifier's same-id contract
     // guard on (one more eager aggregation per verify call, so it stays

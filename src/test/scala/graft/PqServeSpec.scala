@@ -299,25 +299,9 @@ class PqServeSpec extends SparkSpec {
     def serve(): Unit = ivfPq(s, batch, 10000L).collect()
     serve()
     (0 until 3).foreach { _ =>
-      val n = jobsOf(serve())._2
+      val n = sparkWork(serve())._2
       assert(n <= 8, s"$n jobs for one 16-probe batch")
     }
-  }
-
-  // `body`'s result and the number of Spark jobs it started
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftMetricsBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val a = body
-      org.apache.spark.GraftMetricsBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-      (a, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("q210 reads its stored index with the written schemas: 3 fewer jobs than inferring them") {
@@ -330,9 +314,9 @@ class PqServeSpec extends SparkSpec {
     val idx = QueryCatalogSim.cachedIndex(s"q210|$d")(fail("the q210 index must be cached"))
     def inferred(t: String) = spark.read.parquet(s"${idx.dir}/$t")
     tables.foreach(t => assert(idx.read(spark, t).schema == inferred(t).schema, t))
-    val (rows, nStored) = jobsOf(QueryCatalogSim.q210IvfPqServe(spark, d).collect().toSeq)
+    val (rows, nStored, _) = sparkWork(QueryCatalogSim.q210IvfPqServe(spark, d).collect().toSeq)
     // q210's serve, spelled with schema-inferring reads
-    val (rowsInferred, nInferred) = jobsOf {
+    val (rowsInferred, nInferred, _) = sparkWork {
       val emb = Tables.embeddings(spark, d)
       val Seq(cents, packed, books) = tables.map(inferred)
       VectorOps.ivfPqTopK(emb.filter(col("vec_id") < 20), emb, cents, packed, books,

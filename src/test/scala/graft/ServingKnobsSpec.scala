@@ -103,48 +103,30 @@ class ServingKnobsSpec extends SparkSpec {
     // count eager ACTIONS (SQL execution roots), not raw jobs — AQE
     // runs one action's stages as several jobs, which is not what the
     // one-eager-count-per-entry-point property is about
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(
-          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-          if s.rootExecutionId.forall(_ == s.executionId) =>
-          jobs.incrementAndGet()
-        case _ => ()
-      }
-    }
     def constructionJobs(what: String, expected: Int)(mk: => Unit): Unit = {
-      org.apache.spark.GraftMetricsBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      jobs.set(0)
-      mk
-      org.apache.spark.GraftMetricsBridge
-        .waitUntilListenerBusEmpty(spark.sparkContext)
-      assert(jobs.get() == expected,
-        s"$what fired ${jobs.get()} eager actions at construction (expected $expected)")
+      val actions = sparkWork(mk)._3
+      assert(actions == expected,
+        s"$what fired $actions eager actions at construction (expected $expected)")
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Seq(("", probes, 1), (" (driver-side batch)", batch, 0)).foreach {
-        case (how, p, expected) =>
-          constructionJobs("ivfAnn" + how, expected) {
-            VectorOps.ivfAnn(p, e, "label", k = 3, nprobe = 2,
-              centroids = Some(cents))
-          }
-          constructionJobs("pqRefinedTopK" + how, expected) {
-            VectorOps.pqRefinedTopK(p, e, codesLeaf, books, "vec_id",
-              m = 4, k = 3, shortlist = 10)
-          }
-          constructionJobs("pqServeTopK" + how, expected) {
-            VectorOps.pqServeTopK(p, e, packedFlat, books, "vec_id",
-              m = 4, ksub = 4, k = 3, shortlist = 10)
-          }
-          constructionJobs("ivfPqTopK" + how, expected) {
-            VectorOps.ivfPqTopK(p, e, cents, packedIvf, books, "vec_id",
-              m = 4, ksub = 4, k = 3, nprobe = 2, shortlist = 10)
-          }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    Seq(("", probes, 1), (" (driver-side batch)", batch, 0)).foreach {
+      case (how, p, expected) =>
+        constructionJobs("ivfAnn" + how, expected) {
+          VectorOps.ivfAnn(p, e, "label", k = 3, nprobe = 2,
+            centroids = Some(cents))
+        }
+        constructionJobs("pqRefinedTopK" + how, expected) {
+          VectorOps.pqRefinedTopK(p, e, codesLeaf, books, "vec_id",
+            m = 4, k = 3, shortlist = 10)
+        }
+        constructionJobs("pqServeTopK" + how, expected) {
+          VectorOps.pqServeTopK(p, e, packedFlat, books, "vec_id",
+            m = 4, ksub = 4, k = 3, shortlist = 10)
+        }
+        constructionJobs("ivfPqTopK" + how, expected) {
+          VectorOps.ivfPqTopK(p, e, cents, packedIvf, books, "vec_id",
+            m = 4, ksub = 4, k = 3, nprobe = 2, shortlist = 10)
+        }
+    }
   }
 
   test("pqServeTopK: Auto shortlist applies the law's flat-PQ form (20% of ALL codes)") {

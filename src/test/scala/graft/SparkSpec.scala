@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.GraftSession
+import graft.pipeline.MetricsLog
 
 /** Shared local session for specs (one per suite, guide-recommended). */
 trait SparkSpec extends AnyFunSuite {
@@ -31,6 +32,19 @@ trait SparkSpec extends AnyFunSuite {
       case Some(v) => sys.props(key) = v
       case None => sys.props -= key
     }
+  }
+
+  /** `body`'s result, with the Spark jobs and the root SQL executions
+    * (one per action, however many jobs it runs) it started, counted
+    * by a `MetricsLog` installed for the call. */
+  protected def sparkWork[A](body: => A): (A, Long, Long) = {
+    val log = MetricsLog.install(spark)
+    try {
+      val c0 = log.counters()
+      val a = body
+      val d = log.counters() - c0
+      (a, d.jobs, d.sqlExecutions)
+    } finally log.close()
   }
 
   /** Every node of a final plan, through AQE stages and cached plans. */
