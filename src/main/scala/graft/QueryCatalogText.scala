@@ -16,7 +16,7 @@ object QueryCatalogText {
   private def h60Sql(seedExpr: String, xExpr: String): String =
     s"('0x' || substr(md5($seedExpr || '|' || $xExpr), 1, 15))::BIGINT"
 
-  /** DuckDB replay of Dedup.minHash's Carter-Wegman family: one md5,
+  /** DuckDB replay of MinHashSig's Carter-Wegman family: one md5,
     * h1 = hex[1..15], h2 = hex[17..31], h_i = (h1 + i*h2) mod 2^60
     * with the same 2^30 product split (every intermediate < 2^61, so
     * BIGINT-exact — DuckDB errors on int64 overflow otherwise). */
@@ -61,8 +61,9 @@ object QueryCatalogText {
     * word set), pivoted wide. */
   val q41MinHashSig: Q = (s, d) => {
     // map-only form: k=1 shingles ARE the tokens, and min-aggregation
-    // is duplicate-blind, so this equals minHash(wordSet(...)) without
-    // wordSet's corpus-wide distinct or the signature aggregation
+    // is duplicate-blind, so this equals the aggregate minhash over the
+    // distinct word set without its corpus-wide distinct or the
+    // signature aggregation
     // (MinHashSigSpec proves the equality)
     Dedup.minHashText(Tables.documents(s, d).filter(col("doc_id") < 50),
       "doc_id", "text", k = 1, n = 16).orderBy("doc_id")
@@ -332,8 +333,9 @@ object QueryCatalogText {
   /** 64-bit SimHash per doc (as two 32-bit halves), md5 bit votes
     * over the word set. */
   val q43SimHash: Q = (s, d) => {
-    // map-only form (SimHashSig expression): no wordSet distinct, no
-    // vote aggregation — bit-identical to simHash(wordSet(...))
+    // map-only form (SimHashSig expression): no word-set distinct, no
+    // vote aggregation — bit-identical to the aggregate simhash over
+    // the distinct word set (SimHashSigSpec)
     Dedup.simHashText(Tables.documents(s, d).filter(col("doc_id") < 100),
       "doc_id", "text").orderBy("doc_id")
   }
@@ -397,8 +399,8 @@ object QueryCatalogText {
     * kept them distinct. documents.lang/source are non-null by the
     * corpus schema (the oracle gate would fail loudly otherwise);
     * a nullable-group caller must coalesce to a sentinel first. */
-  // private[graft]: devtools.PipelinePlans dumps this pipeline's plan
-  // as the round's before/after exchange evidence
+  // private[graft]: PlanQualitySpec pins the posting build's exchange
+  // over this frame
   private[graft] def docBigrams(docs: org.apache.spark.sql.DataFrame) =
     docs
       .select(col("doc_id"), col("lang"), col("source"),

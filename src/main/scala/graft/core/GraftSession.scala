@@ -3,7 +3,7 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** The only session builder in the library: Bench, Verify, Explain,
-  * Profile, the devtools and every spec build their session here, so
+  * the devtools and every spec build their session here, so
   * the settings every graft deployment needs cannot drift apart.
   * Callers chain `.config(...)` only for a setting that really differs
   * (a warehouse dir, a pinned broadcast threshold, AQE off).

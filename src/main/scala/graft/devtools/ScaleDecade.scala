@@ -32,9 +32,9 @@ import graft.ops.similarity.{Bitext, VectorOps}
   * constant — copies of a low-entropy (repetitive) source draw their
   * k-grams from a small space, so same-source copies LSH-band-collide
   * and the CANDIDATE-PAIR count grows faster than the corpus (it is a
-  * corpus property; DecadeDiag prints the composition). Real corpora
-  * do the same thing through boilerplate families. The engine's
-  * verifier is pair-linear by construction, so the honest certificate
+  * corpus property; the harness prints each rung's candidate count).
+  * Real corpora do the same thing through boilerplate families. The
+  * engine's verifier is pair-linear by construction, so the honest certificate
   * is bytes vs SEMANTIC WORK, not bytes vs chars:
   *   work = chars + cands * (chars/doc)   (each candidate pair makes
   * the verifier move about one document's shingles). The harness
@@ -58,9 +58,9 @@ import graft.ops.similarity.{Bitext, VectorOps}
   *    INCREMENT.
   *  - q206_probe_fixed: a FIXED 2.5k-doc batch probes the growing
   *    store — certifies the standing corpus contributes ~ZERO bytes
-  *    per probe regardless of its size (the StoreProbeAB flat curve,
-  *    re-measured on real corpus growth instead of the synthetic
-  *    amplifier). Expected exponent ~0; gated at e < 0.3.
+  *    per probe regardless of its size (PersistentStoresSpec pins the
+  *    zero-exchange store plan; this row measures it on real corpus
+  *    growth). Expected exponent ~0; gated at e < 0.3.
   * Store builds happen once per rung OUTSIDE the probe timing (the
   * steady state of an incremental pipeline amortizes the build over
   * every future batch; q206_store_dedup still measures build+probe).
@@ -331,17 +331,16 @@ object ScaleDecade {
 
       // ---- store-probe rows: build the rung's standing store ONCE
       if (runProbes) {
-      // deterministic fixed batch (the StoreProbeAB pick): 2k odd docs
-      // + 500 re-crawls, SAME absolute ids on every rung (GenScale
-      // copies shift by 1e9, so low ids are the shared sf0.1 originals).
+      // deterministic fixed batch: 2k odd docs + 500 re-crawls, SAME
+      // absolute ids on every rung (GenScale copies shift by 1e9, so
+      // low ids are the shared sf0.1 originals).
       // The flat gate is only meaningful on rungs that SATURATE these
       // limits (sf0.1+, where the odd half >= 2000): on a smaller rung
       // the "fixed" batch still grows with the corpus and the exponent
       // reads as real growth (observed 0.60 on a sf0.01->sf0.1 smoke)
-      // materialized OUTSIDE the probe timing (the StoreProbeAB
-      // discipline, hardened): the orderBy+limit pick itself shuffles
-      // its per-partition top-k, which grows with the RUNG (more
-      // input partitions), and a lazy batch re-runs that pick inside
+      // materialized OUTSIDE the probe timing: the orderBy+limit pick
+      // itself shuffles its per-partition top-k, which grows with the
+      // RUNG (more input partitions), and a lazy batch re-runs that pick inside
       // every probe — the first measured curve read 2.78 -> 15.86 MB
       // of pure harness shuffle on a genuinely flat probe. A parquet
       // round-trip (not .cache()) survives the between-reps
@@ -388,7 +387,7 @@ object ScaleDecade {
     // ---- exponents per adjacent decade; gate bytes, report clock
     println("\n| query | " + sized.map(r =>
       s"${r.label} s / MB").mkString(" | ") +
-      " | byte exp (chars) | byte exp (work) | clock exp |")
+      " | byte exp (chars) | byte exp (work) | per-cand exp | clock exp |")
     var breach = false
     results.foreach { case (q, byRung) =>
       val cells = sized.map { r =>
@@ -466,9 +465,9 @@ object ScaleDecade {
       println(s"| $q | " + cells.mkString(" | ") + " | " +
         beRaw.map(f2).mkString(", ") + " | " +
         beWork.map(f2).mkString(", ") +
-        perCandExp.map(e => s" | per-cand ${f2(e)}").getOrElse("") +
-        (if (flag) " **SUPERLINEAR/FAILED**" else "") +
-        " | " + ce.map(f2).mkString(", ") + " |")
+        (if (flag) " **SUPERLINEAR/FAILED**" else "") + " | " +
+        perCandExp.map(f2).getOrElse("") + " | " +
+        ce.map(f2).mkString(", ") + " |")
     }
     spark.stop()
     if (breach) { System.err.println("[decade] GATE BREACH"); sys.exit(1) }

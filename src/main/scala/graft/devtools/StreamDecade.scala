@@ -6,11 +6,10 @@ import graft.core.{GraftSession, Tables}
 import graft.pipeline.MetricsLog
 import graft.streaming.StreamingJobs
 
-/** Dev harness: the incremental-dedup STREAM end-to-end at the decade
-  * magnitude CompactScale proved for the store layout alone — the
-  * round-14 verdict task 5. CompactScale measured probe cost against
-  * a standing store built by direct writeBatch calls; this drives the
-  * REAL streaming product ([[StreamingJobs.nearDupStream]]: exact
+/** Dev harness: the incremental-dedup STREAM end-to-end at decade
+  * magnitude. PersistentStoresSpec pins compaction's contract (one
+  * file per bucket, probe results and plan property unchanged) on a
+  * small store; this drives the REAL streaming product ([[StreamingJobs.nearDupStream]]: exact
   * in-batch dedup → bucketed band-store probe → Jaccard verification
   * → curated/store writes, bucketed table mode, compaction every
   * `compactEvery` batches INSIDE the stream) over the sf10 corpus'

@@ -13,7 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The whole MinHash signature of a document in ONE map-side pass:
   * `minhash_sig(text, k, n)[i]` = min over the document's word
   * k-gram shingles of hash function i from the same Carter-Wegman
-  * family [[graft.ops.dedup.Dedup.minHash]] aggregates — bit-identical
+  * family the aggregate reference form (test-scope
+  * `DedupReference.minHash`) aggregates — bit-identical
   * output, ZERO shuffle.
   *
   * This is the 100 TB-shaped front end of the LSH dedup pipeline

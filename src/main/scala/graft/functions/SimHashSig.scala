@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** The 64-bit SimHash of a document in ONE map-side pass:
   * `simhash_sig(text)` = [hi, lo], bit-identical to
-  * [[graft.ops.dedup.Dedup.simHash]] over
-  * [[graft.ops.dedup.Dedup.wordSet]] (reference near-dup flow:
+  * the aggregate reference form (test-scope `DedupReference.simHash`
+  * over `DedupReference.wordSet`) (reference near-dup flow:
   * tools/dedup/simhash analogue).
   *
   * The aggregate formulation pays TWO corpus-wide exchanges before a

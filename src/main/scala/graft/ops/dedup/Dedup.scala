@@ -61,14 +61,11 @@ object Dedup {
       .select(cols.map(c => col(s"r.`$c`").as(c)): _*)
   }
 
-  /** Distinct (id, word) pairs from whitespace-tokenized text. */
-  def wordSet(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol), explode(split(col(textCol), "\\s+")).as("w")).distinct()
-
   /** (id, w) pairs where w is a word k-gram shingle — the
     * order-sensitive unit for near-dup detection (word sets are too
     * coarse on small vocabularies: reordered text still matches).
-    * Same output shape as wordSet so minHash/jaccard compose.
+    * Output (id, w), the relation the inverted-index family
+    * ([[postingLists]]) groups.
     *
     * Shingles are assembled per-row from the token ARRAY (slice +
     * concat_ws over a generated index sequence) — pure map-side
@@ -80,11 +77,8 @@ object Dedup {
     * The output is a MULTISET: a shingle repeated inside one document
     * appears once per occurrence. Deliberate — the one consumer that
     * needs set semantics gets them where they're cheap:
-    *   - minHash: min-aggregation is duplicate-blind, identical
-    *     signatures either way;
-    *   - jaccard / invertedJaccard: dedup inside their posting-list
-    *     aggregation (collect_set), AFTER LSH has restricted the
-    *     working set to candidate docs.
+    * invertedJaccard dedups inside its posting-list aggregation
+    * (collect_set).
     * A corpus-wide `.distinct()` here would shuffle every (doc,
     * shingle) occurrence — the single largest exchange of the whole
     * dedup pipeline at 100 TB — to protect aggregations that never
@@ -112,39 +106,14 @@ object Dedup {
           s"transform(sequence(0, size(toks) - $k), i -> concat_ws(' ', slice(toks, i + 1, $k)))")))
           .as("w"))
 
-  /** MinHash signatures, wide form: ALL `n` hash functions as n
-    * min-aggregate columns over the shingle rows — no n-times row
-    * explosion, one partial-agg (map-side combined) shuffle. Output
-    * (id, mh00..mh<n-1>). This is the 100 TB-shaped formulation: the
-    * shuffle carries one pre-reduced row per doc, not n.
-    *
-    * The n functions are a Carter-Wegman family over ONE md5 per
-    * shingle: h1 = hex[1..15], h2 = hex[17..31] (60 bits each),
-    * h_i = (h1 + i*h2) mod 2^60. One digest instead of n; the i*h2
-    * product is split at 2^30 so every intermediate stays < 2^61 —
-    * exact in int64 for BOTH engines (DuckDB BIGINT errors on
-    * overflow; Spark would silently wrap — the split sidesteps both). */
-  def minHash(words: DataFrame, idCol: String, n: Int = 16): DataFrame = {
-    val dig = md5(col("w"))
-    val h1 = conv(substring(dig, 1, 15), 16, 10).cast("long")
-    val h2 = conv(substring(dig, 17, 15), 16, 10).cast("long")
-    // integral split (Column./ would go through double and lose bits)
-    val h2hi = shiftright(h2, 30)
-    val h2lo = h2.bitwiseAND(lit(1073741823L)) // 2^30 - 1
-    def hi(i: Int): Column =
-      (h1 + (lit(i.toLong) * h2hi % lit(1073741824L)) * lit(1073741824L)
-        + lit(i.toLong) * h2lo) % lit(1152921504606846976L) // 2^60
-    val aggs = (0 until n).map(i => min(hi(i).cast("long")).as(f"mh$i%02d"))
-    words.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-  }
-
   /** MinHash signatures straight from the document frame, ZERO
     * shuffle: [[graft.functions.MinHashSig]] computes the n minima
-    * in one codegen'd pass over each row's text — the explode +
-    * hash-aggregate of `minHash(shingleSet(df))` never happens.
-    * Bit-identical output and dropped-row set (documents with < k
-    * tokens vanish in both forms), proven by `MinHashSigSpec`
-    * against the aggregate form on the real corpus.
+    * in one codegen'd pass over each row's text — no shingle explode
+    * and no hash-aggregate. Bit-identical output and dropped-row set
+    * (documents with < k tokens vanish in both forms) to the aggregate
+    * reference form over `shingleSet` (test-scope
+    * `DedupReference.minHash`), proven by `MinHashSigSpec` on the real
+    * corpus.
     *
     * This is the formulation the LSH chain should start from at
     * 100 TB: the signature branch becomes map-only and the first
@@ -238,9 +207,9 @@ object Dedup {
     * banding/bucketing run ONCE over the union and same-corpus pairs
     * are dropped by a parity filter BEFORE verification — reference×
     * reference pairs (the quadratic bulk of a standing corpus) never
-    * reach jaccard. Returns jaccard()'s columns over uids; callers
-    * recover (new_id, ref_id) as uid >> 1 by parity. Same eager-count
-    * caveat as [[jaccard]]. */
+    * reach the verifier. Returns [[jaccardTextReleasable]]'s columns
+    * over uids; callers recover (new_id, ref_id) as uid >> 1 by
+    * parity. Same eager candidate count as [[jaccardTextReleasable]]. */
   def dedupAgainst(reference: DataFrame, batch: DataFrame, idCol: String,
                    textCol: String, k: Int = 3, n: Int = 16,
                    rowsPerBand: Int = 4, maxBucket: Int = 64): DataFrame = {
@@ -249,7 +218,7 @@ object Dedup {
     jaccardTextReleasable(cand, u, "uid", "__t", k).df
   }
 
-  /** [[dedupAgainst]] with the [[jaccardScoped]] discipline: `use`
+  /** [[dedupAgainst]] with the [[jaccardTextScoped]] discipline: `use`
     * runs its actions over the verified frame, then the internal
     * caches are released in a finally — no cached partitions outlive
     * the call. */
@@ -281,58 +250,6 @@ object Dedup {
     (cand, u)
   }
 
-  /** Exact shingle-set Jaccard for given candidate pairs, with NO
-    * corpus-wide join anywhere:
-    *
-    *   1. The distinct candidate ids reduce the corpus-sized shingle
-    *      relation to candidate docs only. The join broadcasts when a
-    *      count proves the id set is under `broadcastCandMax` (one
-    *      map-side semi-join, zero corpus shuffle); beyond that —
-    *      heavily duplicated corpora make candidates corpus-order —
-    *      the hint is dropped and the planner shuffles, which is the
-    *      only safe regime there.
-    *   2. Intersections are PAIR-ANCHORED: each candidate pair fans
-    *      out by doc a's shingles, then one equi-join probes doc b's
-    *      (id, w) membership — cost O(|pairs| x shingles-per-doc),
-    *      LINEAR in the candidate-pair count by construction. The
-    *      earlier posting-list form (collect_set per shingle +
-    *      in-row m^2 pair expansion) was quadratic in the shingle's
-    *      df among candidate docs: fine for big-vocabulary corpora
-    *      where candidate-restricted df stays small, but a
-    *      small-vocabulary corpus at 10x data made ONE hot shingle's
-    *      df explode the expansion (q129: 4 s -> 65 s at sf1, the
-    *      round-9 scaling-curve catch) — and a boilerplate shingle
-    *      at 100 TB is exactly that hot key. No stage here is
-    *      super-linear in anything.
-    *   3. Per-doc set sizes come from the same candidate-restricted
-    *      distinct (id, w) relation, which is cached and feeds both
-    *      the sizes and the two membership probes.
-    *
-    * The first form of this verifier double-broadcast the
-    * pairs×shingles intermediate (driver ceiling at corpus scale);
-    * the posting-list rewrite fixed that but kept the df^2 term.
-    * This shape is safe AND bounded: the exchanges are the candidate
-    * shingle distinct, the two membership joins, and the final
-    * pair-keyed aggregation — all hash-partitioned, all linear.
-    *
-    * EAGER by construction: unless `candCount` is supplied, this
-    * method runs a Spark job AT CALL TIME (a count over the cached
-    * pair frame — which materializes the whole upstream LSH pipeline)
-    * to decide the broadcast-vs-shuffle regime; it is not a pure
-    * plan-builder. Callers that already know the candidate
-    * cardinality (e.g. from a prior stage's metrics) pass it via
-    * `candCount` to defer all execution to the first action. The two
-    * internal caches (pairs, posting lists) are bounded by the LSH
-    * bucket caps but live until the session clears its cache — a
-    * long-lived session should use [[jaccardScoped]] (try/finally
-    * release, the CorpusCurationJob.funnel pattern as a combinator)
-    * or [[jaccardReleasable]] (a caller-release handle mirroring
-    * ConnectedComponents.release) instead of this plan-only form. */
-  def jaccard(pairs: DataFrame, words: DataFrame, idCol: String,
-              broadcastCandMax: Long = BroadcastCandMax,
-              candCount: Option[Long] = None): DataFrame =
-    jaccardReleasable(pairs, words, idCol, broadcastCandMax, candCount).df
-
   /** Default broadcast budget of the verifiers' candidate-id gate
     * ([[candidateSide]]): the most distinct ids hinted as a broadcast. */
   val BroadcastCandMax: Long = 4000000L
@@ -354,40 +271,14 @@ object Dedup {
   final case class Releasable(df: DataFrame, release: () => Unit,
                               candBroadcast: Boolean = false)
 
-  /** [[jaccard]] with deterministic cache release: the returned
-    * handle's release() unpersists the pair and posting-list caches
-    * NOW instead of at session end — the scoped-release discipline
-    * long-lived sessions need between corpus passes. */
-  def jaccardReleasable(pairs: DataFrame, words: DataFrame, idCol: String,
-                        broadcastCandMax: Long = BroadcastCandMax,
-                        candCount: Option[Long] = None): Releasable = {
-    // the pair list feeds THREE consumers (candidate ids, the n_inter
-    // restriction, the final anchor) and is itself the output of the
-    // whole signature pipeline — cache it (bounded small by the LSH
-    // bucket caps; measured 2x wall time without at sf0.1, the
-    // pipeline re-evaluated per consumer). At cluster scale this is a
-    // checkpoint between the candidate and verification stages.
-    val p = pairs.cache()
-    val (candSide, hinted) = candidateSide(p, idCol, broadcastCandMax, candCount)
-    // candidate-restricted DISTINCT (id, w): the set semantics
-    // Jaccard needs (the corpus-wide relation may arrive as a
-    // multiset — shingleSet is map-only, no corpus-wide distinct
-    // shuffle anywhere); dedup happens on the candidate-cut relation
-    // only. Cached: it feeds the per-doc sizes and BOTH membership
-    // probes of the intersection join (released via the handle).
-    val cw = words.join(candSide, idCol).distinct().cache()
-    Releasable(jaccardCore(p, cw, idCol),
-      () => { p.unpersist(false); cw.unpersist(false) }, hinted)
-  }
-
-  /** [[jaccardReleasable]] fed DOCUMENTS instead of a pre-exploded
-    * shingle relation, with the set algebra done IN-ROW. The candidate
+  /** Exact shingle-set Jaccard for given candidate pairs, fed
+    * DOCUMENTS, with the set algebra done IN-ROW. The candidate
     * semi-join restricts the DOC frame first; each surviving doc then
     * becomes ONE row carrying its distinct shingle identities as an
     * array (`array_distinct` of the `xxhash64` of each k-token tuple),
     * joined onto the pairs by id_a and by id_b. n_inter is
     * `size(array_intersect(a, b))`, n_a / n_b the array sizes, and
-    * jaccard follows as in [[jaccard]].
+    * jaccard = n_inter / (n_a + n_b - n_inter).
     *
     * Since the signature branch went map-only ([[minHashText]]), this
     * is the ONLY consumer of shingles in the LSH chain, and nothing
@@ -407,13 +298,20 @@ object Dedup {
     * s^2/2^64 per doc or pair. The DuckDB oracle replays string
     * equality, so a collision at a gated SF fails the hash gate.
     *
-    * Same rows as `jaccardReleasable(pairs, shingleSet(docs, ...),
-    * ...)` up to those collisions; docs with fewer than k tokens drop
-    * their pairs (inner joins), as there. Output columns: id_b, id_a,
-    * <any other pair columns>, n_inter, n_a, n_b, jaccard. Same eager
-    * candidate count as [[jaccard]]; release() frees the pair and
-    * set caches, and the handle's `candBroadcast` carries the count
-    * gate's verdict ([[Releasable]]). */
+    * Same rows as the exploded words-fed verifier over
+    * `shingleSet(docs, ...)` (test-scope `DedupReference.jaccard`, the
+    * `DedupSpec` reference) up to those collisions; docs with fewer
+    * than k tokens drop their pairs (inner joins), as there. Output
+    * columns: id_b, id_a, <any other pair columns>, n_inter, n_a, n_b,
+    * jaccard.
+    *
+    * EAGER by construction: unless `candCount` is supplied, this runs
+    * a Spark job AT CALL TIME (a count over the cached pair frame,
+    * which materializes the whole upstream LSH pipeline) to decide the
+    * broadcast-vs-shuffle regime ([[candidateSide]]). Callers that know
+    * the candidate cardinality pass it via `candCount`. release() frees
+    * the pair and set caches, and the handle's `candBroadcast` carries
+    * the count gate's verdict ([[Releasable]]). */
   def jaccardTextReleasable(pairs: DataFrame, docs: DataFrame, idCol: String,
                             textCol: String, k: Int = 3,
                             broadcastCandMax: Long = BroadcastCandMax,
@@ -492,47 +390,13 @@ object Dedup {
     * [[Releasable]]`.candBroadcast`, so a consumer of any subset of
     * these ids (CorpusCurationJob's flag join) plans its own
     * broadcast from it without another count. */
-  private def candidateSide(p: DataFrame, idCol: String,
+  private[graft] def candidateSide(p: DataFrame, idCol: String,
                             broadcastCandMax: Long,
                             candCount: Option[Long]): (DataFrame, Boolean) = {
     val candIds = p
       .select(explode(array(col("id_a"), col("id_b"))).as(idCol)).distinct()
     val small = candCount.getOrElse(candIds.count()) <= broadcastCandMax
     (if (small) broadcast(candIds) else candIds, small)
-  }
-
-  /** The pair-anchored verifier over a cached candidate-restricted
-    * DISTINCT (id, w) relation — the words-fed entry points. */
-  private def jaccardCore(p: DataFrame, cw: DataFrame,
-                          idCol: String): DataFrame = {
-    val counts = cw.groupBy(idCol).agg(count(lit(1)).as("n"))
-    // pair-anchored intersection: fan each pair by doc a's shingles,
-    // probe doc b's membership — |pairs| x shingles-per-doc rows,
-    // never df^2 (see scaladoc point 2)
-    val inter = p.select("id_a", "id_b")
-      .join(cw.select(col(idCol).as("id_a"), col("w")), "id_a")
-      .join(cw.select(col(idCol).as("id_b"), col("w")), Seq("id_b", "w"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
-    p
-      .join(inter, Seq("id_a", "id_b"), "left")
-      .withColumn("n_inter", coalesce(col("n_inter"), lit(0L)))
-      .join(counts.withColumnRenamed("n", "n_a")
-        .withColumnRenamed(idCol, "id_a"), "id_a")
-      .join(counts.withColumnRenamed("n", "n_b")
-        .withColumnRenamed(idCol, "id_b"), "id_b")
-      .withColumn("jaccard",
-        col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
-  }
-
-  /** Scoped [[jaccard]]: hand the verified frame to `use` (which must
-    * run its actions), then release the internal caches in a finally —
-    * no cached partitions outlive the call, matching the
-    * CorpusCurationJob.funnel discipline. */
-  def jaccardScoped[A](pairs: DataFrame, words: DataFrame, idCol: String,
-                       broadcastCandMax: Long = BroadcastCandMax,
-                       candCount: Option[Long] = None)(use: DataFrame => A): A = {
-    val h = jaccardReleasable(pairs, words, idCol, broadcastCandMax, candCount)
-    try use(h.df) finally h.release()
   }
 
   /** Pairwise shingle Jaccard via an inverted index (posting lists)
@@ -614,8 +478,8 @@ object Dedup {
   }
 
   /** Asymmetric set-CONTAINMENT scores over an [[invertedJaccard]] /
-    * [[jaccard]] output frame: c_ab = |A∩B| / |A| (how much of doc a
-    * sits inside doc b) and c_ba = |A∩B| / |B|. Containment is the
+    * [[jaccardTextReleasable]] output frame: c_ab = |A∩B| / |A| (how
+    * much of doc a sits inside doc b) and c_ba = |A∩B| / |B|. Containment is the
     * quote/excerpt/subset-duplication signal Jaccard structurally
     * misses — a 100-word excerpt inside a 10k-word page has Jaccard
     * ~0.01 but containment ~1.0 — and a training corpus wants those
@@ -626,40 +490,14 @@ object Dedup {
     .withColumn("c_ab", col("n_inter").cast("double") / col("n_a"))
     .withColumn("c_ba", col("n_inter").cast("double") / col("n_b"))
 
-  /** SimHash (64-bit, as two int32-range longs hi/lo): per distinct
-    * word take md5 bits, sum ±1 votes per bit position over the doc,
-    * bit = (vote sum > 0). Output (id, simhash_hi, simhash_lo).
-    *
-    * Wide form: the word's first/second 8 hex chars are parsed once,
-    * then the 64 per-bit vote sums are 64 aggregate columns with
-    * literal shifts — no 64x row explosion, one partial-agg shuffle.
-    * Bit j (0-based, j<32 in the first half) is bit (31 - j) of the
-    * parsed 32-bit half — identical to the per-hex-digit definition
-    * the oracle replays: digit j/4, in-digit bit (3 - j%4). */
-  def simHash(words: DataFrame, idCol: String): DataFrame = {
-    val withHalves = words
-      .withColumn("wh", md5(col("w")))
-      .withColumn("h1", conv(substring(col("wh"), 1, 8), 16, 10).cast("long"))
-      .withColumn("h2", conv(substring(col("wh"), 9, 8), 16, 10).cast("long"))
-    def vote(half: Column, j: Int): Column =
-      sum(shiftright(half, 31 - j).bitwiseAND(1) * 2 - 1)
-    val aggs = (0 until 32).map(j => vote(col("h1"), j).as(f"v$j%02d")) ++
-      (0 until 32).map(j => vote(col("h2"), j).as(f"v${j + 32}%02d"))
-    val voted = withHalves.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-    def packed(lo: Int): Column = (0 until 32).map { j =>
-      when(col(f"v${lo + j}%02d") > 0, shiftleft(lit(1L), j)).otherwise(0L)
-    }.reduce(_ + _)
-    // old layout: lo packs bits j=0..31 as b<<j, hi packs j=32..63 as b<<(j-32)
-    voted.select(col(idCol), packed(32).as("simhash_hi"), packed(0).as("simhash_lo"))
-  }
-
   /** SimHash straight from the document frame, ZERO shuffle:
     * [[graft.functions.SimHashSig]] folds the distinct-word ±1 votes
-    * in one codegen'd pass over each row's text — neither `wordSet`'s
-    * corpus-wide distinct nor the 64-column vote aggregation ever
-    * happens. Bit-identical output and dropped-row set (null-text
-    * docs vanish in both forms), proven by `SimHashSigSpec` against
-    * the aggregate form on the real corpus. The map-only front end
+    * in one codegen'd pass over each row's text — neither a
+    * corpus-wide (doc, word) distinct nor a 64-column vote aggregation
+    * ever happens. Bit-identical output and dropped-row set (null-text
+    * docs vanish in both forms) to the aggregate reference form
+    * (test-scope `DedupReference.simHash`), proven by `SimHashSigSpec`
+    * on the real corpus. The map-only front end
     * the simhash dedup chain should start from at 100 TB. */
   def simHashText(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val sig = graft.functions.SimHashSig.signature(col(textCol))

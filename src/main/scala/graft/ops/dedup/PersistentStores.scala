@@ -438,7 +438,7 @@ object BandStore {
     * Ids must identify docs across store ∪ batch (same-id = same
     * doc: such collisions verify at jaccard 1 through the text path
     * when the text is identical, exactly like any exact re-crawl).
-    * Output: the [[Dedup.jaccard]] columns over (id_a, id_b) =
+    * Output: the [[Dedup.jaccardTextReleasable]] columns over (id_a, id_b) =
     * (min, max) of each (store, batch) pair, plus `sid`/`bid`.
     * Cap-semantics note vs [[Dedup.dedupAgainst]]: the hot-bucket cap
     * counts STORE rows per bucket here (the store is the unbounded

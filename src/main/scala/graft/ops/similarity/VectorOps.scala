@@ -1181,11 +1181,11 @@ object VectorOps {
     * SERVING SHAPE (the ivfAnn note): with a bounded probe set
     * ([[probeBatch]] under `probeBroadcastMax`) every probe-derived side
     * carries an explicit broadcast hint, and the candidate-id set — counted
-    * like [[graft.ops.dedup.Dedup.jaccardReleasable]]'s, under
+    * like [[graft.ops.dedup.Dedup.jaccardTextReleasable]]'s, under
     * `candBroadcastMax` — restricts the corpus embedding relation
     * map-side, so the CORPUS NEVER CROSSES THE WIRE: its scan feeds
     * only map-side band lookups and the broadcast semi-restriction.
-    * The candidate count is an eager driver job (the jaccardReleasable
+    * The candidate count is an eager driver job (the jaccardTextReleasable
     * precedent), and so is the probe gate unless the probe plan's row
     * bound decides it; over budget the hints drop and the planner decides.
     * Relying on auto-broadcast instead inverts at scale: the decade

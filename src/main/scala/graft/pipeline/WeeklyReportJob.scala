@@ -359,10 +359,9 @@ object WeeklyReportJob {
       outDir, wn, lo, hi, prevPath)
   }
 
-  /** [[runWeekStep]] parameterized over the event/farm frames — the
-    * scale harness (devtools.CrossCheckWeekly drives the same chain
-    * over an sf1-derived 6M-event corpus) and any caller whose farm
-    * events do not come from the domain fixtures. `b` rows carry
+  /** [[runWeekStep]] parameterized over the event/farm frames, for
+    * [[runChainedWeeks]] and any caller whose farm events do not come
+    * from the domain fixtures. `b` rows carry
     * (farm_no, wk_dt, silsan); `farms` is the reporting spine (farms
     * with no events that week report zeros). */
   def runWeekStepFrom(spark: SparkSession, b: DataFrame, farms: DataFrame,
@@ -406,17 +405,8 @@ object WeeklyReportJob {
   def runChainedWeeks(spark: SparkSession, outDir: String,
                       weeks: Seq[(String, String, String)]): DataFrame = {
     import graft.domain.Fixtures
-    runChainedWeeksFrom(spark,
-      Fixtures.bunmanDf(spark).filter(col("use_yn") === "Y"),
-      Fixtures.modonDf(spark).select("farm_no").distinct(),
-      outDir, weeks)
-  }
-
-  /** [[runChainedWeeks]] over caller-supplied event/farm frames (see
-    * [[runWeekStepFrom]]). */
-  def runChainedWeeksFrom(spark: SparkSession, b: DataFrame, farms: DataFrame,
-                          outDir: String,
-                          weeks: Seq[(String, String, String)]): DataFrame = {
+    val b = Fixtures.bunmanDf(spark).filter(col("use_yn") === "Y")
+    val farms = Fixtures.modonDf(spark).select("farm_no").distinct()
     var prev: Option[String] = None
     val paths = weeks.map { case (wn, lo, hi) =>
       val p = runWeekStepFrom(spark, b, farms, outDir, wn, lo, hi, prev)

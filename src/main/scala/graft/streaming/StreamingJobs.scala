@@ -364,7 +364,7 @@ object StreamingJobs {
             releases += (() => coll.unpersist(false))
             val sameId = coll.filter(col("sid") === col("bid"))
               .select(col("bid").as("doc_id"))
-            // Dedup.jaccard anchors on pairs ordered id_a < id_b —
+            // Dedup.jaccardTextReleasable anchors on pairs ordered id_a < id_b —
             // the candidate frame must use the same canonical order
             // or store ids >= batch ids never match; carry the batch
             // id alongside for the verdict

@@ -213,4 +213,79 @@ class CurationSpec extends SparkSpec {
     assert(before(4) != after(4) && before(5) != after(5),
       s"xor AND modsum must flip: $before vs $after")
   }
+
+  test("q177/q178 at sf0.01: the selection cut and the representatives agree with independent algorithms") {
+    import graft.ops.{DistributedRank, Materialize}
+    import graft.ops.dedup.{ConnectedComponents, Dedup}
+    import graft.ops.text.{Dsir, TextOps}
+    import graft.pipeline.CorpusCurationJob
+    val sf = "/root/testdata/sf0.01"
+    val docs = graft.core.Tables.documents(spark, sf)
+    val recrawl = docs.unionByName(
+      docs.filter(col("doc_id") < 50).withColumn("doc_id", col("doc_id") + 1000000))
+
+    // q177: the catalog keeps rk <= ceil(n/5) under (score desc, doc_id
+    // asc); the ORDER-REVERSED rank (score asc, doc_id desc) with the
+    // complement cut rk2 > n - ceil(n/5) must keep the same docs
+    val cur = CorpusCurationJob.curateReleasable(recrawl)
+    val curLeaf = Materialize.leafCache(cur.df.select(col("doc_id"), col("lang"),
+      col("source"), col("text"), TextOps.nWsTokens(col("text")).cast("long").as("__ntok")))
+    cur.release()
+    val scored = Materialize.leafCache(Dsir.scoreMicros(curLeaf, "doc_id", "text",
+      col("source").isin("src0", "src1"), carry = Seq("lang", "__ntok")))
+    Materialize.release(curLeaf)
+    try {
+      val cut = expr("(n_total + 4) div 5")
+      val fwd = DistributedRank.rank(scored, Seq.empty,
+        Seq(col("score_micros").desc, col("doc_id")), "rk", totalCol = "n_total")
+      val keptFwd = fwd.filter(col("rk") <= cut)
+      val keptRev = DistributedRank.rank(scored, Seq.empty,
+        Seq(col("score_micros").asc, col("doc_id").desc), "rk2", totalCol = "n_total")
+        .filter(col("rk2") > col("n_total") - cut)
+      val f = keptFwd.select("doc_id").as[Long].collect()
+      val r = keptRev.select("doc_id").as[Long].collect()
+      val n = scored.count()
+      assert(n > 0)
+      assert(f.length == (n + 4) / 5, s"kept ${f.length} of $n, want ceil(n/5)")
+      assert(f.sorted.toSeq == r.sorted.toSeq, "forward and order-reversed cuts keep different docs")
+      // the catalog query's published stats are the kept set's recount
+      val recounted = fwd.groupBy("lang").agg(count(lit(1)).as("n_curated"))
+        .join(keptFwd.groupBy("lang").agg(count(lit(1)).as("n_selected"),
+          sum("__ntok").as("tok_selected")), Seq("lang"), "left")
+        .na.fill(0L, Seq("n_selected", "tok_selected"))
+      val catalog = QueryCatalogText.q177CurationSelect(spark, sf)
+      assert(catalog.exceptAll(recounted).isEmpty && recounted.exceptAll(catalog).isEmpty)
+    } finally Materialize.release(scored)
+
+    // q178: clusters re-labeled by alternating-star CC, representative
+    // = max quality, then min id, recomputed join-wise
+    val catalogReps = QueryCatalogCuration.q178RepresentativeDedup(spark, sf)
+    val cand = Dedup.candidatePairs(Dedup.lshBands(
+      Dedup.minHashText(recrawl, "doc_id", "text", 3, 16), "doc_id", 16, 4), "doc_id")
+    val edges = Dedup.jaccardTextScoped(cand, recrawl, "doc_id", "text", 3) { j =>
+      Materialize.localize(j.filter(col("jaccard") >= 0.7).select("id_a", "id_b"))
+    }
+    val star = ConnectedComponents.alternatingStar(edges)
+    val comp = Materialize.localize(star)
+    ConnectedComponents.release(star)
+    val qual = recrawl.select(col("doc_id"),
+      TextOps.qualityScore(col("text"), CorpusCurationJob.Stopwords).as("quality"))
+    val members = comp.join(qual, comp("id") === qual("doc_id"))
+      .select(col("component"), col("doc_id"), col("quality"))
+    val best = members.groupBy("component").agg(
+      count(lit(1)).as("cluster_size"), max("quality").as("rep_quality"))
+    val reps = members.join(best, Seq("component"))
+      .filter(col("quality") === col("rep_quality"))
+      .groupBy("component", "cluster_size", "rep_quality")
+      .agg(min("doc_id").as("rep_doc_id"))
+      .withColumn("n_dropped", col("cluster_size") - 1)
+      .select("component", "cluster_size", "rep_doc_id", "rep_quality", "n_dropped")
+    assert(catalogReps.count() > 0, "the planted re-crawls must form clusters")
+    assert(catalogReps.exceptAll(reps).isEmpty && reps.exceptAll(catalogReps).isEmpty,
+      "catalog representatives differ from star-CC + join-wise argmax")
+    val strays = catalogReps.join(members,
+      catalogReps("component") === members("component") &&
+        catalogReps("rep_doc_id") === members("doc_id"), "left_anti")
+    assert(strays.isEmpty, "a representative outside its cluster")
+  }
 }

@@ -25,7 +25,7 @@ class DedupSpec extends SparkSpec {
 
   test("minhash: identical docs identical signatures; near-dups mostly agree") {
     val sh = Dedup.shingleSet(docs, "doc_id", "text", 3)
-    val rows = Dedup.minHash(sh, "doc_id", 16).collect()
+    val rows = DedupReference.minHash(sh, "doc_id", 16).collect()
       .map(r => r.getLong(0) -> (1 to 16).map(r.getLong).toSeq).toMap
     assert(rows(1L) == rows(2L))
     val agree13 = rows(1L).zip(rows(3L)).count(p => p._1 == p._2)
@@ -37,12 +37,12 @@ class DedupSpec extends SparkSpec {
   test("LSH bucket-join surfaces the duplicate pair without N^2 work") {
     withContractGuard {
       val sh = Dedup.shingleSet(docs, "doc_id", "text", 3)
-      val bands = Dedup.lshBands(Dedup.minHash(sh, "doc_id", 16), "doc_id", 16, 4)
+      val bands = Dedup.lshBands(DedupReference.minHash(sh, "doc_id", 16), "doc_id", 16, 4)
       val pairs = Dedup.candidatePairs(bands, "doc_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(pairs.contains((1L, 2L)))
       assert(!pairs.exists(p => p._2 == 4L || p._1 == 4L))
-      val j = Dedup.jaccard(Dedup.candidatePairs(bands, "doc_id"), sh, "doc_id")
+      val j = DedupReference.jaccard(Dedup.candidatePairs(bands, "doc_id"), sh, "doc_id")
         .filter(col("id_a") === 1 && col("id_b") === 2).collect()(0)
       assert(j.getAs[Double]("jaccard") == 1.0)
     }
@@ -55,8 +55,8 @@ class DedupSpec extends SparkSpec {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       assert(spark.sparkContext.getPersistentRDDs.isEmpty)
       val sh = Dedup.shingleSet(docs, "doc_id", "text", 3)
-      val bands = Dedup.lshBands(Dedup.minHash(sh, "doc_id", 16), "doc_id", 16, 4)
-      val n = Dedup.jaccardScoped(Dedup.candidatePairs(bands, "doc_id"), sh, "doc_id") {
+      val bands = Dedup.lshBands(DedupReference.minHash(sh, "doc_id", 16), "doc_id", 16, 4)
+      val n = DedupReference.jaccardScoped(Dedup.candidatePairs(bands, "doc_id"), sh, "doc_id") {
         j => j.filter(col("jaccard") >= 0.7).count() // the consumer's action
       }
       assert(n >= 1)
@@ -81,12 +81,12 @@ class DedupSpec extends SparkSpec {
         Dedup.lshBands(Dedup.minHashText(corpus, "doc_id", "text", 3, 16),
           "doc_id", 16, 4), "doc_id")
         .withColumn("bid", col("id_b") * 10 + 1)
-      val want = Dedup.jaccardScoped(
+      val want = DedupReference.jaccardScoped(
         cand, Dedup.shingleSet(corpus, "doc_id", "text", 3), "doc_id") { j =>
         j.collect().toSet
       }
       // the same identities the text verifier hashes, exploded
-      val hashed = Dedup.jaccardScoped(cand,
+      val hashed = DedupReference.jaccardScoped(cand,
         DedupReference.shingleHashSetDistinct(corpus, "doc_id", "text", 3), "doc_id") { j =>
         j.collect().toSet
       }
@@ -131,7 +131,7 @@ class DedupSpec extends SparkSpec {
       Seq((6L, "xx yy zz ww vv uu tt ss"), (7L, "xx yy zz ww vv uu tt ss")))
       .toDF("doc_id", "text")
     val sh = Dedup.shingleSet(many, "doc_id", "text", 3)
-    val bands = Dedup.lshBands(Dedup.minHash(sh, "doc_id", 16), "doc_id", 16, 4)
+    val bands = Dedup.lshBands(DedupReference.minHash(sh, "doc_id", 16), "doc_id", 16, 4)
     val uncapped = pairSet(Dedup.candidatePairs(bands, "doc_id", maxBucket = 64))
     assert(uncapped.size == 10 + 1, s"5C2 + 1 pairs expected, got $uncapped")
     val capped = pairSet(Dedup.candidatePairs(bands, "doc_id", maxBucket = 4))
@@ -250,15 +250,15 @@ class DedupSpec extends SparkSpec {
       // only docs 4 and 5 shingle; the rest vanish silently (filtered)
       assert(sh.select("doc_id").distinct().collect().map(_.getLong(0)).toSet
         == Set(4L, 5L))
-      val bands = Dedup.lshBands(Dedup.minHash(sh, "doc_id", 16), "doc_id", 16, 4)
+      val bands = Dedup.lshBands(DedupReference.minHash(sh, "doc_id", 16), "doc_id", 16, 4)
       val pairs = Dedup.candidatePairs(bands, "doc_id")
-      val j = Dedup.jaccard(pairs, sh, "doc_id").collect()
+      val j = DedupReference.jaccard(pairs, sh, "doc_id").collect()
       assert(j.length == 1 && j(0).getAs[Double]("jaccard") == 1.0)
       // caller-supplied cardinality (the lazy path) must not change the
       // result — both broadcast-regime (big hint budget) and shuffle-
       // regime (0 forces the hint off) values
       for (cc <- Seq(1L, 5000000L)) {
-        val jc = Dedup.jaccard(pairs, sh, "doc_id", candCount = Some(cc)).collect()
+        val jc = DedupReference.jaccard(pairs, sh, "doc_id", candCount = Some(cc)).collect()
         assert(jc.length == 1 && jc(0).getAs[Double]("jaccard") == 1.0,
           s"candCount=$cc must be result-invariant")
       }
@@ -312,8 +312,8 @@ class DedupSpec extends SparkSpec {
   test("simhash: equal for identical docs, close for near-dups") {
     def hamming(a: (Long, Long), b: (Long, Long)): Int =
       java.lang.Long.bitCount(a._1 ^ b._1) + java.lang.Long.bitCount(a._2 ^ b._2)
-    val words = Dedup.wordSet(docs, "doc_id", "text")
-    val sh = Dedup.simHash(words, "doc_id")
+    val words = DedupReference.wordSet(docs, "doc_id", "text")
+    val sh = DedupReference.simHash(words, "doc_id")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(sh(1L) == sh(2L))
     assert(hamming(sh(1L), sh(3L)) < hamming(sh(1L), sh(4L)))

@@ -12,7 +12,7 @@ class MinHashSigSpec extends SparkSpec {
   import spark.implicits._
 
   private def aggForm(df: org.apache.spark.sql.DataFrame, k: Int, n: Int) =
-    Dedup.minHash(Dedup.shingleSet(df, "doc_id", "text", k), "doc_id", n)
+    DedupReference.minHash(Dedup.shingleSet(df, "doc_id", "text", k), "doc_id", n)
 
   test("bit-identical to the aggregate form on the sf0.001 corpus") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
@@ -49,7 +49,7 @@ class MinHashSigSpec extends SparkSpec {
   test("k=1 equals minHash over the distinct word set (min is duplicate-blind)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
-    val want = Dedup.minHash(Dedup.wordSet(docs, "doc_id", "text"), "doc_id", 16)
+    val want = DedupReference.minHash(DedupReference.wordSet(docs, "doc_id", "text"), "doc_id", 16)
     val got = Dedup.minHashText(docs, "doc_id", "text", k = 1, n = 16)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }

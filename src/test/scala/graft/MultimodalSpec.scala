@@ -15,7 +15,7 @@ class MultimodalSpec extends SparkSpec {
     val uniq = Dedup.exactKeep(docs, "doc_id", "text")
     val cand = Dedup.candidatePairs(Dedup.lshBands(
       Dedup.minHashText(uniq, "doc_id", "text", 3, 16), "doc_id", 16, 4), "doc_id")
-    val dupIds = Dedup.jaccardScoped(
+    val dupIds = DedupReference.jaccardScoped(
       cand, Dedup.shingleSet(uniq, "doc_id", "text", 3), "doc_id") { j =>
       j.filter(col("jaccard") >= 0.7).select("id_b").collect().map(_.getLong(0)).toSet
     }

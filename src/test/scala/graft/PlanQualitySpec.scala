@@ -302,10 +302,10 @@ class PlanQualitySpec extends SparkSpec {
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
     def build(broadcastCandMax: Long = 4000000L) = {
       val shingles = Dedup.shingleSet(docs, "doc_id", "text", k = 3)
-      val sig = Dedup.minHash(shingles, "doc_id", n = 16)
+      val sig = DedupReference.minHash(shingles, "doc_id", n = 16)
       val cand = Dedup.candidatePairs(
         Dedup.lshBands(sig, "doc_id", n = 16, rowsPerBand = 4), "doc_id")
-      Dedup.jaccard(cand, shingles, "doc_id", broadcastCandMax)
+      DedupReference.jaccard(cand, shingles, "doc_id", broadcastCandMax)
         .select("id_a", "id_b", "n_inter", "jaccard").orderBy("id_a", "id_b")
     }
     // regime 1 (default): the pairs side is hint-broadcast and AQE
@@ -547,6 +547,34 @@ class PlanQualitySpec extends SparkSpec {
     assert(exact.nonEmpty && bucket.nonEmpty, s"exact: $exact, bucket: $bucket")
     exact.foreach(e => assert(keyTypes(e) == Seq(BinaryType), s"exact-dedup exchange: $e"))
     bucket.foreach(e => assert(keyTypes(e) == Seq(LongType), s"bucket exchange: $e"))
+  }
+
+  test("q44/q163 posting build: one exchange, on the bigint bgh alone, with no aggregate below it") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.types.LongType
+    import graft.ops.dedup.Dedup
+    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.01")
+    val posting = Dedup.postingLists(QueryCatalogText.docBigrams(docs), "doc_id", "bgh", Nil)
+    try {
+      posting.count()
+      val exchanges = nodes(posting.queryExecution.executedPlan).collect {
+        case e: ShuffleExchangeLike => e
+      }.distinct
+      assert(exchanges.size == 1, s"expected one shuffle exchange, got:\n${exchanges.mkString("\n")}")
+      val ex = exchanges.head
+      ex.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.expressions.map(_.dataType) == Seq(LongType) &&
+            h.expressions.flatMap(_.references.map(_.name)) == Seq("bgh"), s"posting exchange: $ex")
+        case other => fail(s"not a hash exchange: $other")
+      }
+      // raw fixed-width rows cross the wire: no map-side partial
+      // collect_set buffers below the exchange
+      val aggsBelow = nodes(ex.child).collect { case a: BaseAggregateExec => a }
+      assert(aggsBelow.isEmpty, s"aggregate below the posting exchange:\n${aggsBelow.mkString("\n")}")
+    } finally posting.unpersist(false)
   }
 
   test("near-dup stream: the micro-batch streams through a broadcast anti-join, never a doc_id exchange") {
@@ -869,7 +897,7 @@ class PlanQualitySpec extends SparkSpec {
   test("minhash signature plan has no corpus-wide distinct below the aggregation") {
     import graft.ops.dedup.Dedup
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
-    val sig = Dedup.minHash(Dedup.shingleSet(docs, "doc_id", "text", 3), "doc_id", 16)
+    val sig = DedupReference.minHash(Dedup.shingleSet(docs, "doc_id", "text", 3), "doc_id", 16)
     // exactly ONE exchange: the signature aggregation itself (shingle
     // production is map-only since the multiset refactor)
     val nEx = "Exchange".r.findAllIn(finalPlan(sig)).length

@@ -39,18 +39,18 @@ class SigPropertySpec extends SparkSpec {
       .cache()
     try {
       for ((k, n) <- Seq((3, 16), (1, 16), (2, 4))) {
-        val want = Dedup.minHash(Dedup.shingleSet(docs, "doc_id", "text", k),
+        val want = DedupReference.minHash(Dedup.shingleSet(docs, "doc_id", "text", k),
           "doc_id", n)
         val got = Dedup.minHashText(docs, "doc_id", "text", k, n)
         assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
           s"minhash diverges at k=$k n=$n")
       }
       // k=1 vs the distinct word-set form (q41's contract)
-      val wantW = Dedup.minHash(Dedup.wordSet(docs, "doc_id", "text"), "doc_id", 8)
+      val wantW = DedupReference.minHash(DedupReference.wordSet(docs, "doc_id", "text"), "doc_id", 8)
       val gotW = Dedup.minHashText(docs, "doc_id", "text", 1, 8)
       assert(gotW.exceptAll(wantW).isEmpty && wantW.exceptAll(gotW).isEmpty)
 
-      val wantS = Dedup.simHash(Dedup.wordSet(docs, "doc_id", "text"), "doc_id")
+      val wantS = DedupReference.simHash(DedupReference.wordSet(docs, "doc_id", "text"), "doc_id")
       val gotS = Dedup.simHashText(docs, "doc_id", "text")
       assert(gotS.exceptAll(wantS).isEmpty && wantS.exceptAll(gotS).isEmpty,
         "simhash diverges")

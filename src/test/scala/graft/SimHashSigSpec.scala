@@ -12,7 +12,7 @@ class SimHashSigSpec extends SparkSpec {
   import spark.implicits._
 
   private def aggForm(df: org.apache.spark.sql.DataFrame) =
-    Dedup.simHash(Dedup.wordSet(df, "doc_id", "text"), "doc_id")
+    DedupReference.simHash(DedupReference.wordSet(df, "doc_id", "text"), "doc_id")
 
   test("bit-identical to the aggregate form on the sf0.001 corpus") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
